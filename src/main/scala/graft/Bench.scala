@@ -1,7 +1,11 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.json4s.{DefaultFormats, Formats, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** Benchmark main (driver contract): times every registered query at the
   * scale factor in SPARK_GRAFT_SF_DIR and prints ONE JSON line. A short
@@ -162,30 +166,19 @@ object Bench {
     def reset(): Unit = { peak.set(0); runMs.set(0); cpuNs.set(0); gcMs.set(0) }
   }
 
-  /** Prior-round committed mins, parsed from the full-ledger format this
-    * object itself writes (`"name":{"runs":[...],"min":N,...`). A missing
-    * or unparsable file just disables the retry heuristic. */
-  private def priorMins(path: String): Map[String, Double] =
+  /** Prior-round committed mins from the previous round's clean full
+    * ledger: `queries.<name>.min`, and the flat `shared_stages` build
+    * seconds (the rich per-stage detail lives under a separate key, so
+    * this map stays format-stable). A missing or unparsable file just
+    * disables the retry heuristics. */
+  private def priors(path: String): (Map[String, Double], Map[String, Double]) =
     try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-      val re = """"([A-Za-z0-9_]+)":\{"runs":\[[^\]]*\],"min":([0-9.eE+-]+)""".r
-      re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  /** Prior-round shared-stage build seconds, from the flat
-    * `"shared_stages":{name:sec,...}` map every full ledger carries (the
-    * rich per-stage detail lives under a separate key precisely so this
-    * parse stays format-stable). Missing file → no stage retries. */
-  private def priorStages(path: String): Map[String, Double] =
-    try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-      val obj = """"shared_stages"\s*:\s*\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      val kv = """"([A-Za-z0-9_]+)"\s*:\s*([0-9.eE+-]+)""".r
-      kv.findAllMatchIn(obj).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+      implicit val formats: Formats = DefaultFormats
+      val doc = JsonMethods.parse(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
+      val mins = (doc \ "queries").extractOpt[Map[String, JValue]].getOrElse(Map.empty)
+        .flatMap { case (name, q) => (q \ "min").extractOpt[Double].map(name -> _) }
+      (mins, (doc \ "shared_stages").extractOpt[Map[String, Double]].getOrElse(Map.empty))
+    } catch { case NonFatal(_) => (Map.empty, Map.empty) }
 
   /** Capture-time provenance: the commit the working tree was at and
     * whether it was dirty. Three rounds running, a sealed ladder and the
@@ -209,7 +202,7 @@ object Bench {
       }
       (run("git", "rev-parse", "HEAD"),
         run("git", "status", "--porcelain", "--", "src/main", "build.sbt").nonEmpty)
-    } catch { case scala.util.control.NonFatal(_) => ("unknown", true) }
+    } catch { case NonFatal(_) => ("unknown", true) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -230,37 +223,7 @@ object Bench {
     if (hostCpus < cpus.toInt)
       System.err.println(s"[bench] WARNING: host has $hostCpus cores < local[$cpus] " +
         "contract; timings will NOT be ledger-comparable")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // scan-split sizing (r17, guide §2.2/§6): Spark picks split size as
-      // min(maxPartitionBytes, max(openCostInBytes, bytes/defaultParallelism)),
-      // so the default 4 MB openCost floors a small-corpus-per-core scan at
-      // ~bytes/4MB tasks — at sf3 every documents/events scan ran its
-      // explode tower on 1-5 tasks of 32 (measured: text_fingerprint wall
-      // 3.35 → 0.85 s, text_bpe_pairs 3.61 → 1.13 s at sf3 with 128 KB).
-      // 128 KB is NOT a local[32] constant: the binding term self-adapts —
-      // whenever data/core exceeds 4 MB (any production corpus, and the
-      // driver's lower-core runs) the bytes/parallelism or 128 MB cap
-      // governs exactly as before; openCost only stops flooring the
-      // small-data regime where parallelism is otherwise wasted.
-      .config("spark.sql.files.openCostInBytes", (128L * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // cap app-status retention: a full bench executes ~500 queries plus
-      // ~40 streaming scenarios in ONE application, and the default
-      // retention (1000 executions / jobs / stages) keeps the status
-      // store + listener bus working through an ever-growing history —
-      // measured r12 as late-run inflation of the latency-sensitive
-      // streaming scenarios (family 24.6 s early-alphabet runs vs 58.8 s
-      // at the tail of a full run, task_cpu flat, gc 0 — pure wait time)
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10")
-      .getOrCreate()
+    val spark = GraftSession.local(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val memListener = new TaskMetricListener
     spark.sparkContext.addSparkListener(memListener)
@@ -270,9 +233,7 @@ object Bench {
     val benchT0 = System.nanoTime()
     def offset(): Double = (System.nanoTime() - benchT0) / 1e9
     val sentStart = sentinels(spark)
-    val prior = priorMins(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "bench_prior.json"))
-    val stagePrior = priorStages(
+    val (prior, stagePrior) = priors(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "bench_prior.json"))
     // memoized shared stages (shingle set, MinHash estimates, SimHash
     // sketch, ngram pairs, PPJoin pairs) are built and timed ONCE up front
@@ -319,7 +280,7 @@ object Bench {
           val sec =
             try { st.build().count(); Some((System.nanoTime() - t0) / 1e9) }
             catch {
-              case scala.util.control.NonFatal(e) =>
+              case NonFatal(e) =>
                 System.err.println(
                   s"[bench] shared stage ${st.name} failed: ${e.getMessage}")
                 None
@@ -382,7 +343,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
+          catch { case NonFatal(_) => false }
         val sec = (System.nanoTime() - t0) / 1e9
         // listener delivery is async; give stragglers a moment so the
         // per-run split stays attributable (same caveat as peak_mem)
@@ -479,7 +440,7 @@ object Bench {
          |"queries":$perQuery}""".stripMargin
     try java.nio.file.Files.write(java.nio.file.Paths.get(ledgerPath),
       ledger.getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(e) =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] ledger write failed: ${e.getMessage}") }
     println(s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$Rounds,"queries":$qs,"shared_stages":$sharedJson,"failed":$failedNames,"failed_secs":$failedSecs,"sf":"$sfDir"}""")
     // The full line above exceeds harnesses that keep only a short output

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-audit main: dumps `explain(formatted)` for the headline queries
@@ -15,9 +14,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage: `runMain graft.Plans [sfDir] [outFile]`
   * (defaults: /root/testdata/sf0.01, PLANS.md).
   *
-  * Complements [[Explain]] (which dumps EVERY registered query's plan to
-  * a scratch directory for ad-hoc diffing): this main is the small,
-  * annotated, committed subset — the audit artifact, not the firehose.
+  * The audit is this small, annotated, committed subset; per-query
+  * exchange and broadcast counts for every registered query come from
+  * the benchmark's traced run (`perfbench/`, `--trace 1`).
   */
 object Plans {
 
@@ -322,14 +321,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.local(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val sb = new StringBuilder

@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.sources.{CountSinkOps, GenSourceOps}
+import graft.streaming.StreamingOps
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Every operator from SURVEY.md §2 registers here as a named query; each
-  * SQL-expressible one also carries an equivalent DuckDB oracle in
-  * [[oracleSql]] (same column names, same total order — the driver
-  * hash-compares values after sorting columns by name).
+  * Every operator from SURVEY.md §2 registers here as one [[QuerySpec]];
+  * each SQL-expressible one also carries an equivalent DuckDB oracle (same
+  * column names, same total order — the DuckDB compare hash-checks values
+  * after sorting columns by name). [[queries]], [[oracleSql]] and [[twinOf]] are
+  * views of [[registry]].
   */
 object SparkEntry {
 
@@ -16,663 +19,508 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.aggPricingSummary(spark, "/root/testdata/sf0.001")
 
+  type Build = (SparkSession, String) => DataFrame
+
+  /** One registered query.
+    *  - `oracle`: DuckDB SQL over the same parquet tables, for every
+    *    SQL-expressible query; `None` for model-based and sketch queries,
+    *    which golden files or suite invariants pin instead.
+    *  - `twinOf`: for a bounded-state / sub-quadratic PRODUCTION variant,
+    *    the labeled exact baseline it shadows — sketch quantiles, distinct
+    *    counts and heavy hitters vs exact aggregates; Bloom pre-filters vs
+    *    the exact joins they short-circuit; ANN paths vs the O(n²)
+    *    brute-force cosine baselines; linear cluster labels vs the
+    *    output-quadratic pair enumeration. The baselines stay registered
+    *    (most are oracle-green exactness witnesses) but their cost is BY
+    *    DESIGN — value-buffering quantiles, all-pairs scans — so a reader
+    *    of the ledger should price each twin against its baseline row,
+    *    not in isolation. Emitted as `twin_of` on the twin's
+    *    per-query line in `bench_full.json` (see [[graft.Bench]]). */
+  final case class QuerySpec(name: String, build: Build, oracle: Option[String],
+      twinOf: Option[String]) {
+    def twin(base: String): QuerySpec = copy(twinOf = Some(base))
+  }
+
+  private def q(name: String, build: Build): QuerySpec = QuerySpec(name, build, None, None)
+  private def q(name: String, build: Build, oracle: String): QuerySpec =
+    QuerySpec(name, build, Some(oracle), None)
+
+  /** The registry as given, after checking that no name repeats: the
+    * derived maps would otherwise keep one entry per name silently. */
+  private[graft] def requireUniqueNames(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
+    val dups = specs.groupBy(_.name).collect { case (n, s) if s.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    specs
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Seq[QuerySpec] = requireUniqueNames(Seq(
     // §2.1-2.6 reference parity
-    "source_from_elements"     -> (ReferenceParity.sourceFromElements(_, _)),
-    "source_read_text"         -> (ReferenceParity.sourceReadText(_, _)),
-    "source_csv_roundtrip"     -> (ReferenceParity.sourceCsvRoundtrip(_, _)),
-    "source_jsonl_roundtrip"   -> (ReferenceParity.sourceJsonlRoundtrip(_, _)),
-    "sink_text_roundtrip"      -> (ReferenceParity.sinkTextRoundtrip(_, _)),
-    "sink_partitioned_parquet" -> (ReferenceParity.sinkPartitionedParquet(_, _)),
-    "map_uppercase"            -> (ReferenceParity.mapUppercase(_, _)),
-    "filter_adults"            -> (ReferenceParity.filterAdults(_, _)),
-    "filter_unstable"          -> (ReferenceParity.filterUnstable(_, _)),
-    "union_all"                -> (ReferenceParity.unionAll(_, _)),
-    "stateful_concat_final"    -> (ReferenceParity.statefulConcatFinal(_, _)),
-    "stateful_concat_prefixes" -> (ReferenceParity.statefulConcatPrefixes(_, _)),
-    "tumbling_window_max"      -> (ReferenceParity.tumblingWindowMax(_, _)),
+    q("source_from_elements", ReferenceParity.sourceFromElements,
+      ReferenceParity.sourceFromElementsSql),
+    q("source_read_text", ReferenceParity.sourceReadText, ReferenceParity.sourceReadTextSql),
+    q("source_csv_roundtrip", ReferenceParity.sourceCsvRoundtrip,
+      ReferenceParity.sourceCsvRoundtripSql),
+    q("source_jsonl_roundtrip", ReferenceParity.sourceJsonlRoundtrip,
+      ReferenceParity.sourceJsonlRoundtripSql),
+    q("sink_text_roundtrip", ReferenceParity.sinkTextRoundtrip,
+      ReferenceParity.sinkTextRoundtripSql),
+    q("sink_partitioned_parquet", ReferenceParity.sinkPartitionedParquet,
+      ReferenceParity.sinkPartitionedParquetSql),
+    q("map_uppercase", ReferenceParity.mapUppercase, ReferenceParity.mapUppercaseSql),
+    q("filter_adults", ReferenceParity.filterAdults, ReferenceParity.filterAdultsSql),
+    q("filter_unstable", ReferenceParity.filterUnstable, ReferenceParity.filterUnstableSql),
+    q("union_all", ReferenceParity.unionAll, ReferenceParity.unionAllSql),
+    q("stateful_concat_final", ReferenceParity.statefulConcatFinal,
+      ReferenceParity.statefulConcatFinalSql),
+    q("stateful_concat_prefixes", ReferenceParity.statefulConcatPrefixes,
+      ReferenceParity.statefulConcatPrefixesSql),
+    q("tumbling_window_max", ReferenceParity.tumblingWindowMax,
+      ReferenceParity.tumblingWindowMaxSql),
     // real Structured Streaming executions (MemoryStream-driven)
-    "streaming_window_max"     -> (graft.streaming.StreamingOps.streamingWindowMax(_, _)),
-    "streaming_concat_prefixes" -> (graft.streaming.StreamingOps.streamingConcatPrefixes(_, _)),
-    "streaming_downsample"     -> (graft.streaming.StreamingOps.streamingDownsample(_, _)),
-    "streaming_dedup"          -> (graft.streaming.StreamingOps.streamingDedup(_, _)),
+    q("streaming_window_max", StreamingOps.streamingWindowMax, StreamingOps.streamingWindowMaxSql),
+    q("streaming_concat_prefixes", StreamingOps.streamingConcatPrefixes,
+      StreamingOps.streamingConcatPrefixesSql),
+    q("streaming_downsample", StreamingOps.streamingDownsample,
+      StreamingOps.streamingDownsampleSql),
+    q("streaming_dedup", StreamingOps.streamingDedup, StreamingOps.streamingDedupSql),
     // continuous-ingest dedup vs a static hash registry (cross-batch state)
-    "streaming_incremental_dedup" -> (graft.streaming.StreamingOps.streamingIncrementalDedup(_, _)),
+    q("streaming_incremental_dedup", StreamingOps.streamingIncrementalDedup,
+      StreamingOps.streamingIncrementalDedupSql),
     // bounded-state streaming twin of events_rolling_anomaly
-    "streaming_rolling_anomaly" -> (graft.streaming.StreamingOps.streamingRollingAnomaly(_, _)),
-    "streaming_stream_join"    -> (graft.streaming.StreamingOps.streamingStreamJoin(_, _)),
-    "streaming_outer_join"     -> (graft.streaming.StreamingOps.streamingOuterJoin(_, _)),
-    "streaming_dedup_watermarked" -> (graft.streaming.StreamingOps.streamingDedupWatermarked(_, _)),
-    "streaming_static_join"    -> (graft.streaming.StreamingOps.streamingStaticJoin(_, _)),
-    "streaming_session_window" -> (graft.streaming.StreamingOps.streamingSessionWindow(_, _)),
-    "streaming_rocksdb_agg"    -> (graft.streaming.StreamingOps.streamingRocksdbAgg(_, _)),
+    q("streaming_rolling_anomaly", StreamingOps.streamingRollingAnomaly,
+      StreamingOps.streamingRollingAnomalySql),
+    q("streaming_stream_join", StreamingOps.streamingStreamJoin,
+      StreamingOps.streamingStreamJoinSql),
+    q("streaming_outer_join", StreamingOps.streamingOuterJoin, StreamingOps.streamingOuterJoinSql),
+    q("streaming_dedup_watermarked", StreamingOps.streamingDedupWatermarked,
+      StreamingOps.streamingDedupWatermarkedSql),
+    q("streaming_static_join", StreamingOps.streamingStaticJoin,
+      StreamingOps.streamingStaticJoinSql),
+    q("streaming_session_window", StreamingOps.streamingSessionWindow,
+      StreamingOps.streamingSessionWindowSql),
+    q("streaming_rocksdb_agg", StreamingOps.streamingRocksdbAgg,
+      StreamingOps.streamingRocksdbAggSql),
     // next-gen arbitrary state API (StatefulProcessor + typed ValueState)
-    "streaming_transform_with_state" -> (graft.streaming.StreamingOps.streamingTransformWithState(_, _)),
+    q("streaming_transform_with_state", StreamingOps.streamingTransformWithState,
+      StreamingOps.streamingTransformWithStateSql),
     // event-time timers on the same API (session close-out on watermark)
-    "streaming_tws_timers"     -> (graft.streaming.StreamingOps.streamingTwsTimers(_, _)),
+    q("streaming_tws_timers", StreamingOps.streamingTwsTimers, StreamingOps.streamingTwsTimersSql),
     // foreachBatch idempotent upsert sink + merge-on-read
-    "streaming_foreach_batch_upsert" -> (graft.streaming.StreamingOps.streamingForeachBatchUpsert(_, _)),
+    q("streaming_foreach_batch_upsert", StreamingOps.streamingForeachBatchUpsert,
+      StreamingOps.streamingForeachBatchUpsertSql),
     // micro-batch offsets through the custom DSv2 connector
-    "streaming_dsv2_source"    -> (graft.sources.GenSourceOps.streamingDsv2Source(_, _)),
+    q("streaming_dsv2_source", GenSourceOps.streamingDsv2Source,
+      GenSourceOps.streamingDsv2SourceSql),
     // append-mode event-time windows (bounded state, emit-on-close)
-    "streaming_append_windows" -> (graft.sources.GenSourceOps.streamingDsv2AppendWindows(_, _)),
-    "streaming_chained_windows" -> (graft.sources.GenSourceOps.streamingDsv2ChainedWindows(_, _)),
+    q("streaming_append_windows", GenSourceOps.streamingDsv2AppendWindows,
+      GenSourceOps.streamingDsv2AppendWindowsSql),
+    q("streaming_chained_windows", GenSourceOps.streamingDsv2ChainedWindows,
+      GenSourceOps.streamingDsv2ChainedWindowsSql),
     // §2.9 relational extensions
-    "agg_pricing_summary"      -> (Relational.aggPricingSummary(_, _)),
-    "sql_shipping_priority"    -> (Sql.sqlShippingPriority(_, _)),
-    "sql_customer_distribution" -> (Sql.sqlCustomerDistribution(_, _)),
-    "sql_min_cost_supplier"    -> (Sql.sqlMinCostSupplier(_, _)),
-    "sql_local_supplier_volume" -> (Sql.sqlLocalSupplierVolume(_, _)),
-    "sql_order_priority_exists" -> (Sql.sqlOrderPriorityExists(_, _)),
-    "sql_returned_item_revenue" -> (Sql.sqlReturnedItemRevenue(_, _)),
-    "sql_promo_revenue"        -> (Sql.sqlPromoRevenue(_, _)),
-    "sql_top_supplier"         -> (Sql.sqlTopSupplier(_, _)),
-    "sql_large_orders"         -> (Sql.sqlLargeOrders(_, _)),
-    "sql_forecast_revenue"     -> (Sql.sqlForecastRevenue(_, _)),
-    "sql_nation_trade_volume"  -> (Sql.sqlNationTradeVolume(_, _)),
-    "sql_shipmode_priority"    -> (Sql.sqlShipmodePriority(_, _)),
-    "sql_small_quantity_revenue" -> (Sql.sqlSmallQuantityRevenue(_, _)),
-    "sql_disjunctive_revenue"  -> (Sql.sqlDisjunctiveRevenue(_, _)),
-    "sql_waiting_suppliers"    -> (Sql.sqlWaitingSuppliers(_, _)),
-    "sql_dormant_accounts"     -> (Sql.sqlDormantAccounts(_, _)),
-    "sql_market_share"         -> (Sql.sqlMarketShare(_, _)),
-    "sql_product_profit"       -> (Sql.sqlProductProfit(_, _)),
-    "sql_important_stock"      -> (Sql.sqlImportantStock(_, _)),
-    "sql_supplier_count"       -> (Sql.sqlSupplierCount(_, _)),
-    "sql_excess_suppliers"     -> (Sql.sqlExcessSuppliers(_, _)),
-    "join_orders_customers"    -> (Relational.joinOrdersCustomers(_, _)),
-    "topn_revenue"             -> (Relational.topnRevenue(_, _)),
-    "window_rank_orders"       -> (Relational.windowRankOrders(_, _)),
-    "agg_percentiles"          -> (Relational.aggPercentiles(_, _)),
-    "agg_corr_quantity_price"  -> (Relational.aggCorrQuantityPrice(_, _)),
+    q("agg_pricing_summary", Relational.aggPricingSummary, Relational.aggPricingSummarySql),
+    q("sql_shipping_priority", Sql.sqlShippingPriority, Sql.shippingPrioritySql),
+    q("sql_customer_distribution", Sql.sqlCustomerDistribution, Sql.customerDistributionSql),
+    q("sql_min_cost_supplier", Sql.sqlMinCostSupplier, Sql.minCostSupplierSql),
+    q("sql_local_supplier_volume", Sql.sqlLocalSupplierVolume, Sql.localSupplierVolumeSql),
+    q("sql_order_priority_exists", Sql.sqlOrderPriorityExists, Sql.orderPriorityExistsSql),
+    q("sql_returned_item_revenue", Sql.sqlReturnedItemRevenue, Sql.returnedItemRevenueSql),
+    q("sql_promo_revenue", Sql.sqlPromoRevenue, Sql.promoRevenueSql),
+    q("sql_top_supplier", Sql.sqlTopSupplier, Sql.topSupplierSql),
+    q("sql_large_orders", Sql.sqlLargeOrders, Sql.largeOrdersSql),
+    q("sql_forecast_revenue", Sql.sqlForecastRevenue, Sql.forecastRevenueSql),
+    q("sql_nation_trade_volume", Sql.sqlNationTradeVolume, Sql.nationTradeVolumeSql),
+    q("sql_shipmode_priority", Sql.sqlShipmodePriority, Sql.shipmodePrioritySql),
+    q("sql_small_quantity_revenue", Sql.sqlSmallQuantityRevenue, Sql.smallQuantityRevenueSql),
+    q("sql_disjunctive_revenue", Sql.sqlDisjunctiveRevenue, Sql.disjunctiveRevenueSql),
+    q("sql_waiting_suppliers", Sql.sqlWaitingSuppliers, Sql.waitingSuppliersSql),
+    q("sql_dormant_accounts", Sql.sqlDormantAccounts, Sql.dormantAccountsSql),
+    q("sql_market_share", Sql.sqlMarketShare, Sql.marketShareSql),
+    q("sql_product_profit", Sql.sqlProductProfit, Sql.productProfitSql),
+    q("sql_important_stock", Sql.sqlImportantStock, Sql.importantStockSql),
+    q("sql_supplier_count", Sql.sqlSupplierCount, Sql.supplierCountSql),
+    q("sql_excess_suppliers", Sql.sqlExcessSuppliers, Sql.excessSuppliersSql),
+    q("join_orders_customers", Relational.joinOrdersCustomers, Relational.joinOrdersCustomersSql),
+    q("topn_revenue", Relational.topnRevenue, Relational.topnRevenueSql),
+    q("window_rank_orders", Relational.windowRankOrders, Relational.windowRankOrdersSql),
+    q("agg_percentiles", Relational.aggPercentiles, Relational.aggPercentilesSql),
+    q("agg_corr_quantity_price", Relational.aggCorrQuantityPrice,
+      Relational.aggCorrQuantityPriceSql),
     // robust stats: median/MAD/outlier fences (quality-gate alternative
     // to mean/stddev)
-    "agg_robust_stats"         -> (Relational.aggRobustStats(_, _)),
-    // no oracle: sketch medians are engine-specific — the suite pins
-    // shape parity + agreement with the exact variant (rank-error budget)
-    "agg_robust_stats_sketch"  -> (Relational.aggRobustStatsSketch(_, _)),
+    q("agg_robust_stats", Relational.aggRobustStats, Relational.aggRobustStatsSql),
+    // sketch-path medians on an integer-cent grid (the oracle restates the
+    // grid); the suite pins agreement with the exact variant
+    q("agg_robust_stats_sketch", Relational.aggRobustStatsSketch,
+      Relational.aggRobustStatsSketchSql).twin("agg_robust_stats"),
     // Welch t between cohorts from exact integer-cent moments
-    "agg_welch_ttest"          -> (Relational.aggWelchTtest(_, _)),
+    q("agg_welch_ttest", Relational.aggWelchTtest, Relational.aggWelchTtestSql),
     // public typed Aggregator tier (Encoder-serialized exact buffer)
-    "agg_typed_aggregator"     -> (Relational.aggTypedAggregator(_, _)),
+    q("agg_typed_aggregator", Relational.aggTypedAggregator, Relational.aggTypedAggregatorSql),
     // extended relational surface (reference §2.8 gaps, Spark-first)
-    "join_asof"                -> (Extended.joinAsof(_, _)),
+    q("join_asof", Extended.joinAsof, Extended.joinAsofSql),
     // as-of with a 30-day staleness tolerance (stale match = no match)
-    "join_asof_tolerance"      -> (Extended.joinAsofTolerance(_, _)),
+    q("join_asof_tolerance", Extended.joinAsofTolerance, Extended.joinAsofToleranceSql),
     // custom Catalyst whole-operator path (LogicalPlan+Strategy+SparkPlan)
-    "join_asof_native"         -> (Extended.joinAsofNative(_, _)),
+    q("join_asof_native", Extended.joinAsofNative, Extended.joinAsofNativeSql),
     // custom optimizer rule: provably-bounded (LIMIT k) side → broadcast
-    "join_limit_broadcast"     -> (Extended.joinLimitBroadcast(_, _)),
-    "join_semi_customers"      -> (Extended.joinSemiCustomers(_, _)),
-    "join_anti_customers"      -> (Extended.joinAntiCustomers(_, _)),
-    "join_range_shipping"      -> (Extended.joinRangeShipping(_, _)),
-    "join_full_outer"          -> (Extended.joinFullOuter(_, _)),
-    "join_bloom_pruned"        -> (Extended.joinBloomPruned(_, _)),
-    "join_salted_skew"         -> (Extended.joinSaltedSkew(_, _)),
+    q("join_limit_broadcast", Extended.joinLimitBroadcast, Extended.joinLimitBroadcastSql),
+    q("join_semi_customers", Extended.joinSemiCustomers, Extended.joinSemiCustomersSql),
+    q("join_anti_customers", Extended.joinAntiCustomers, Extended.joinAntiCustomersSql),
+    q("join_range_shipping", Extended.joinRangeShipping, Extended.joinRangeShippingSql),
+    q("join_full_outer", Extended.joinFullOuter, Extended.joinFullOuterSql),
+    q("join_bloom_pruned", Extended.joinBloomPruned, Extended.joinBloomPrunedSql),
+    q("join_salted_skew", Extended.joinSaltedSkew, Extended.joinSaltedSkewSql),
     // runtime partition pruning over a hive-partitioned fact layout
-    "join_dpp_pruned"          -> (Extended.joinDppPruned(_, _)),
+    q("join_dpp_pruned", Extended.joinDppPruned, Extended.joinDppPrunedSql),
     // AQE runtime skew-split (the adaptive half of join_salted_skew)
-    "join_aqe_skew"            -> (Extended.joinAqeSkew(_, _)),
+    q("join_aqe_skew", Extended.joinAqeSkew, Extended.joinAqeSkewSql),
     // no oracle: sketch-based (like agg_approx_distinct) — error bound
     // vs the in-row exact columns is asserted in OperatorSpec
-    "agg_approx_percentile"    -> (Relational.aggApproxPercentile(_, _)),
-    "cross_join_regions"       -> (Extended.crossJoinRegions(_, _)),
-    "window_ntile_quartiles"   -> (Extended.windowNtileQuartiles(_, _)),
-    "group_concat_names"       -> (Extended.groupConcatNames(_, _)),
-    "agg_rollup_revenue"       -> (Extended.aggRollupRevenue(_, _)),
-    "agg_cube_orders"          -> (Extended.aggCubeOrders(_, _)),
-    "agg_grouping_sets"        -> (Extended.aggGroupingSets(_, _)),
-    "agg_count_distinct"       -> (Extended.aggCountDistinct(_, _)),
-    "set_intersect"            -> (Extended.setIntersect(_, _)),
-    "set_except"               -> (Extended.setExcept(_, _)),
-    "scalar_functions"         -> (Extended.scalarFunctions(_, _)),
-    "window_running_sum"       -> (Extended.windowRunningSum(_, _)),
-    "window_range_frame"       -> (Extended.windowRangeFrame(_, _)),
+    q("agg_approx_percentile", Relational.aggApproxPercentile).twin("agg_percentiles"),
+    q("cross_join_regions", Extended.crossJoinRegions, Extended.crossJoinRegionsSql),
+    q("window_ntile_quartiles", Extended.windowNtileQuartiles, Extended.windowNtileQuartilesSql),
+    q("group_concat_names", Extended.groupConcatNames, Extended.groupConcatNamesSql),
+    q("agg_rollup_revenue", Extended.aggRollupRevenue, Extended.aggRollupRevenueSql),
+    q("agg_cube_orders", Extended.aggCubeOrders, Extended.aggCubeOrdersSql),
+    q("agg_grouping_sets", Extended.aggGroupingSets, Extended.aggGroupingSetsSql),
+    q("agg_count_distinct", Extended.aggCountDistinct, Extended.aggCountDistinctSql),
+    q("set_intersect", Extended.setIntersect, Extended.setIntersectSql),
+    q("set_except", Extended.setExcept, Extended.setExceptSql),
+    q("scalar_functions", Extended.scalarFunctions, Extended.scalarFunctionsSql),
+    q("window_running_sum", Extended.windowRunningSum, Extended.windowRunningSumSql),
+    q("window_range_frame", Extended.windowRangeFrame, Extended.windowRangeFrameSql),
     // custom bounded-state TypedImperativeAggregate (graft_topk)
-    "agg_topk_custom"          -> (Extended.aggTopkCustom(_, _)),
-    "join_interval_binned"     -> (Extended.joinIntervalBinned(_, _)),
-    "sink_bucketed_join"       -> (Extended.sinkBucketedJoin(_, _)),
-    "sink_compacted_parquet"   -> (Extended.sinkCompactedParquet(_, _)),
-    "pivot_orders_status"      -> (Extended.pivotOrdersStatus(_, _)),
-    "unpivot_lineitem_measures" -> (Extended.unpivotLineitemMeasures(_, _)),
-    "window_percent_rank"      -> (Extended.windowPercentRank(_, _)),
-    "window_cume_dist"         -> (Extended.windowCumeDist(_, _)),
+    q("agg_topk_custom", Extended.aggTopkCustom, Extended.aggTopkCustomSql),
+    q("join_interval_binned", Extended.joinIntervalBinned, Extended.joinIntervalBinnedSql),
+    q("sink_bucketed_join", Extended.sinkBucketedJoin, Extended.sinkBucketedJoinSql),
+    q("sink_compacted_parquet", Extended.sinkCompactedParquet, Extended.sinkCompactedParquetSql),
+    q("pivot_orders_status", Extended.pivotOrdersStatus, Extended.pivotOrdersStatusSql),
+    q("unpivot_lineitem_measures", Extended.unpivotLineitemMeasures,
+      Extended.unpivotLineitemMeasuresSql),
+    q("window_percent_rank", Extended.windowPercentRank, Extended.windowPercentRankSql),
+    q("window_cume_dist", Extended.windowCumeDist, Extended.windowCumeDistSql),
     // deterministic-tie-break per-group mode (count + min_by)
-    "agg_mode_priority"        -> (Extended.aggModePriority(_, _)),
+    q("agg_mode_priority", Extended.aggModePriority, Extended.aggModePrioritySql),
     // SCD2 validity intervals via lag/lead (no self-join)
-    "window_scd2_orders"       -> (Extended.windowScd2Orders(_, _)),
-    "array_stats_embeddings"   -> (Extended.arrayStatsEmbeddings(_, _)),
-    "nested_order_lines"       -> (Extended.nestedOrderLines(_, _)),
-    "quality_referential_check" -> (PipelineOps.qualityReferentialCheck(_, _)),
+    q("window_scd2_orders", Extended.windowScd2Orders, Extended.windowScd2OrdersSql),
+    q("array_stats_embeddings", Extended.arrayStatsEmbeddings, Extended.arrayStatsEmbeddingsSql),
+    q("nested_order_lines", Extended.nestedOrderLines, Extended.nestedOrderLinesSql),
+    q("quality_referential_check", PipelineOps.qualityReferentialCheck,
+      PipelineOps.qualityReferentialCheckSql),
     // join-key skew triage: max/avg + top-10 share per candidate key
-    "quality_skew_report"      -> (PipelineOps.qualitySkewReport(_, _)),
-    "agg_histogram_price"      -> (PipelineOps.aggHistogramPrice(_, _)),
+    q("quality_skew_report", PipelineOps.qualitySkewReport, PipelineOps.qualitySkewReportSql),
+    q("agg_histogram_price", PipelineOps.aggHistogramPrice, PipelineOps.aggHistogramPriceSql),
     // §2.9 event analytics
-    "events_active_users"      -> (EventOps.eventsActiveUsers(_, _)),
+    q("events_active_users", EventOps.eventsActiveUsers, EventOps.eventsActiveUsersSql),
     // D0..D7 cohort retention matrix off one distinct user-day frame
-    "events_retention_cohorts" -> (EventOps.eventsRetentionCohorts(_, _)),
-    "events_cusum_changepoint" -> (EventOps.eventsCusumChangepoint(_, _)),
-    "events_top_paths"         -> (EventOps.eventsTopPaths(_, _)),
-    "events_velocity_features" -> (EventOps.eventsVelocityFeatures(_, _)),
-    "events_downsample"        -> (EventOps.eventsDownsample(_, _)),
-    "events_tumbling_stats"    -> (EventOps.eventsTumblingStats(_, _)),
-    "events_sliding_stats"     -> (EventOps.eventsSlidingStats(_, _)),
-    "events_session_windows"   -> (EventOps.eventsSessionWindows(_, _)),
-    "events_session_anomaly"   -> (EventOps.eventsSessionAnomaly(_, _)),
+    q("events_retention_cohorts", EventOps.eventsRetentionCohorts,
+      EventOps.eventsRetentionCohortsSql),
+    q("events_cusum_changepoint", EventOps.eventsCusumChangepoint,
+      EventOps.eventsCusumChangepointSql),
+    q("events_top_paths", EventOps.eventsTopPaths, EventOps.eventsTopPathsSql),
+    q("events_velocity_features", EventOps.eventsVelocityFeatures,
+      EventOps.eventsVelocityFeaturesSql),
+    q("events_downsample", EventOps.eventsDownsample, EventOps.eventsDownsampleSql),
+    q("events_tumbling_stats", EventOps.eventsTumblingStats, EventOps.eventsTumblingStatsSql),
+    q("events_sliding_stats", EventOps.eventsSlidingStats, EventOps.eventsSlidingStatsSql),
+    q("events_session_windows", EventOps.eventsSessionWindows, EventOps.eventsSessionWindowsSql),
+    q("events_session_anomaly", EventOps.eventsSessionAnomaly, EventOps.eventsSessionAnomalySql),
     // trailing-50-row baseline: the drift-adaptive twin of the global z
-    "events_rolling_anomaly"   -> (EventOps.eventsRollingAnomaly(_, _)),
-    "dedup_events"             -> (EventOps.dedupEvents(_, _)),
-    "json_props_extract"       -> (EventOps.jsonPropsExtract(_, _)),
-    "json_props_schema"        -> (EventOps.jsonPropsSchema(_, _)),
+    q("events_rolling_anomaly", EventOps.eventsRollingAnomaly, EventOps.eventsRollingAnomalySql),
+    q("dedup_events", EventOps.dedupEvents, EventOps.dedupEventsSql),
+    q("json_props_extract", EventOps.jsonPropsExtract, EventOps.jsonPropsExtractSql),
+    q("json_props_schema", EventOps.jsonPropsSchema, EventOps.jsonPropsSchemaSql),
     // Spark 4 VARIANT binary semi-structured path
-    "json_variant_shred"       -> (EventOps.jsonVariantShred(_, _)),
-    "events_user_funnel"       -> (EventOps.eventsUserFunnel(_, _)),
-    "events_cohort_retention"  -> (EventOps.eventsCohortRetention(_, _)),
-    "events_interarrival"      -> (EventOps.eventsInterarrival(_, _)),
+    q("json_variant_shred", EventOps.jsonVariantShred, EventOps.jsonVariantShredSql),
+    q("events_user_funnel", EventOps.eventsUserFunnel, EventOps.eventsUserFunnelSql),
+    q("events_cohort_retention", EventOps.eventsCohortRetention, EventOps.eventsCohortRetentionSql),
+    q("events_interarrival", EventOps.eventsInterarrival, EventOps.eventsInterarrivalSql),
     // calendar-spine resampling with explicit zero days
-    "events_gap_fill"          -> (EventOps.eventsGapFill(_, _)),
-    "agg_salted_skew"          -> (EventOps.aggSaltedSkew(_, _)),
+    q("events_gap_fill", EventOps.eventsGapFill, EventOps.eventsGapFillSql),
+    q("agg_salted_skew", EventOps.aggSaltedSkew, EventOps.aggSaltedSkewSql),
     // audience-overlap / containment matrix between event-type cohorts
-    "events_audience_overlap"  -> (EventOps.eventsAudienceOverlap(_, _)),
+    q("events_audience_overlap", EventOps.eventsAudienceOverlap, EventOps.eventsAudienceOverlapSql),
     // gaps-and-islands: per-user consecutive-day activity streaks
-    "events_user_streaks"      -> (EventOps.eventsUserStreaks(_, _)),
+    q("events_user_streaks", EventOps.eventsUserStreaks, EventOps.eventsUserStreaksSql),
     // hour-of-day seasonal baseline + exact-integer spike flags
-    "events_seasonal_baseline" -> (EventOps.eventsSeasonalBaseline(_, _)),
+    q("events_seasonal_baseline", EventOps.eventsSeasonalBaseline,
+      EventOps.eventsSeasonalBaselineSql),
     // Gopher-style named-rule quality battery, per-source rollup
-    "quality_gopher_rules"     -> (ProfilingOps.qualityGopherRules(_, _)),
+    q("quality_gopher_rules", ProfilingOps.qualityGopherRules, ProfilingOps.qualityGopherRulesSql),
     // (length, quality) skyline: bucketed-prefilter distributed sweep
-    "curation_pareto_front"    -> (CurationOps.curationParetoFront(_, _)),
+    q("curation_pareto_front", CurationOps.curationParetoFront, CurationOps.curationParetoFrontSql),
     // text analysis
-    "text_token_counts"        -> (TextOps.textTokenCounts(_, _)),
-    "text_language_id"         -> (TextOps.textLanguageId(_, _)),
-    "text_quality_score"       -> (TextOps.textQualityScore(_, _)),
+    q("text_token_counts", TextOps.textTokenCounts, TextOps.textTokenCountsSql),
+    q("text_language_id", TextOps.textLanguageId, TextOps.textLanguageIdSql),
+    q("text_quality_score", TextOps.textQualityScore, TextOps.textQualityScoreSql),
     // trained-classifier application: logistic-regression quality filter
-    "text_quality_logreg"      -> (TextOps.textQualityLogreg(_, _)),
+    q("text_quality_logreg", TextOps.textQualityLogreg, TextOps.textQualityLogregSql),
     // no oracle: distributed GD training loop (model-based, like
     // anomaly_kmeans) — suite asserts monotone loss + teacher recovery
-    "text_logreg_train"        -> (TextOps.textLogregTrain(_, _)),
-    "text_token_count"         -> (TextOps.textTokenCount(_, _)),
-    "text_winnowing_fingerprint" -> (TextOps.textWinnowingFingerprint(_, _)),
-    "dedup_winnowing_pairs"    -> (TextOps.dedupWinnowingPairs(_, _)),
-    "text_fingerprint"         -> (TextOps.textFingerprint(_, _)),
-    "text_bigram_collocations" -> (TextOps.textBigramCollocations(_, _)),
-    "text_rarity_score"        -> (TextOps.textRarityScore(_, _)),
-    "text_chunk_overlap"       -> (TextOps.textChunkOverlap(_, _)),
-    "events_markov_transitions" -> (EventOps.eventsMarkovTransitions(_, _)),
-    "agg_linear_regression"    -> (Relational.aggLinearRegression(_, _)),
+    q("text_logreg_train", TextOps.textLogregTrain),
+    q("text_token_count", TextOps.textTokenCount, TextOps.textTokenCountSql),
+    q("text_winnowing_fingerprint", TextOps.textWinnowingFingerprint,
+      TextOps.textWinnowingFingerprintSql),
+    q("dedup_winnowing_pairs", TextOps.dedupWinnowingPairs, TextOps.dedupWinnowingPairsSql),
+    q("text_fingerprint", TextOps.textFingerprint, TextOps.textFingerprintSql),
+    q("text_bigram_collocations", TextOps.textBigramCollocations,
+      TextOps.textBigramCollocationsSql),
+    q("text_rarity_score", TextOps.textRarityScore, TextOps.textRarityScoreSql),
+    q("text_chunk_overlap", TextOps.textChunkOverlap, TextOps.textChunkOverlapSql),
+    q("events_markov_transitions", EventOps.eventsMarkovTransitions,
+      EventOps.eventsMarkovTransitionsSql),
+    q("agg_linear_regression", Relational.aggLinearRegression, Relational.aggLinearRegressionSql),
     // dedup family
-    "dedup_exact_docs"         -> (DedupOps.dedupExactDocs(_, _)),
-    "dedup_minhash_lsh"        -> (DedupOps.dedupMinhashLsh(_, _)),
+    q("dedup_exact_docs", DedupOps.dedupExactDocs, DedupOps.dedupExactDocsSql),
+    q("dedup_minhash_lsh", DedupOps.dedupMinhashLsh, DedupOps.dedupMinhashLshSql),
     // banding-threshold tuning: candidates exactly verified per bucket
-    "dedup_lsh_tuning"         -> (DedupOps.dedupLshTuning(_, _)),
+    q("dedup_lsh_tuning", DedupOps.dedupLshTuning, DedupOps.dedupLshTuningSql),
     // recall side: true near-dup pairs the band join surfaced vs missed
-    "dedup_lsh_recall"         -> (DedupOps.dedupLshRecall(_, _)),
-    "dedup_simhash"            -> (DedupOps.dedupSimhash(_, _)),
-    "dedup_simhash_probe"      -> (DedupOps.dedupSimhashProbe(_, _)),
-    "dedup_ngram_jaccard"      -> (DedupOps.dedupNgramJaccard(_, _)),
+    q("dedup_lsh_recall", DedupOps.dedupLshRecall, DedupOps.dedupLshRecallSql),
+    q("dedup_simhash", DedupOps.dedupSimhash, DedupOps.dedupSimhashSql),
+    q("dedup_simhash_probe", DedupOps.dedupSimhashProbe, DedupOps.dedupSimhashProbeSql),
+    q("dedup_ngram_jaccard", DedupOps.dedupNgramJaccard, DedupOps.dedupNgramJaccardSql),
     // EXACT Jaccard join via PPJoin prefix filtering (LSH's exact
     // counterpart over the same shingle sets)
-    "dedup_prefix_filter"      -> (DedupOps.dedupPrefixFilter(_, _)),
-    "dedup_embedding_cosine"   -> (DedupOps.dedupEmbeddingCosine(_, _)),
+    q("dedup_prefix_filter", DedupOps.dedupPrefixFilter, DedupOps.dedupPrefixFilterSql),
+    q("dedup_embedding_cosine", DedupOps.dedupEmbeddingCosine, DedupOps.dedupEmbeddingCosineSql),
     // SemDeDup: within-cluster semantic near-dup drop (linear-cost
     // counterpart of the exact O(n²) embedding-cosine baseline). The
     // default runs the trained bounded-K coarse quantizer (model-based →
     // invariant-asserted, no SQL oracle); the _pivots variant keeps the
     // deterministic density-pivot clustering with its byte-exact oracle.
-    "dedup_semantic"           -> (DedupOps.dedupSemantic(_, _)),
-    "dedup_semantic_pivots"    -> (DedupOps.dedupSemanticPivots(_, _)),
-    "dedup_edit_distance"      -> (DedupOps.dedupEditDistance(_, _)),
+    q("dedup_semantic", DedupOps.dedupSemantic).twin("dedup_embedding_cosine"),
+    q("dedup_semantic_pivots", DedupOps.dedupSemanticPivots,
+      DedupOps.dedupSemanticSql).twin("dedup_embedding_cosine"),
+    q("dedup_edit_distance", DedupOps.dedupEditDistance, DedupOps.dedupEditDistanceSql),
     // cross-doc repeated-substring spans (the ExactSubstr pass of
     // Lee et al. 2022, as a K-gram lattice + gaps-and-islands merge)
-    "dedup_repeated_substrings" -> (DedupOps.dedupRepeatedSubstrings(_, _)),
-    "dedup_connected_components" -> (PipelineOps.dedupConnectedComponents(_, _)),
-    "dedup_cluster_sizes"      -> (PipelineOps.dedupClusterSizes(_, _)),
+    q("dedup_repeated_substrings", DedupOps.dedupRepeatedSubstrings,
+      DedupOps.dedupRepeatedSubstringsSql),
+    q("dedup_connected_components", PipelineOps.dedupConnectedComponents,
+      PipelineOps.dedupConnectedComponentsSql),
+    q("dedup_cluster_sizes", PipelineOps.dedupClusterSizes, PipelineOps.dedupClusterSizesSql),
     // keep/drop decision per near-dup cluster (canonical representative)
-    "dedup_canonical_pick"     -> (PipelineOps.dedupCanonicalPick(_, _)),
+    q("dedup_canonical_pick", PipelineOps.dedupCanonicalPick, PipelineOps.dedupCanonicalPickSql),
     // chunk-level dedup over text_chunk_overlap's content hashes
-    "dedup_chunks"             -> (TextOps.dedupChunks(_, _)),
+    q("dedup_chunks", TextOps.dedupChunks, TextOps.dedupChunksSql),
     // similarity search
-    "similarity_topk"          -> (SimilarityOps.similarityTopk(_, _)),
-    "similarity_ann_lsh"       -> (SimilarityOps.similarityAnnLsh(_, _)),
-    "similarity_ivf"           -> (SimilarityOps.similarityIvf(_, _)),
+    q("similarity_topk", SimilarityOps.similarityTopk, SimilarityOps.similarityTopkSql),
+    q("similarity_ann_lsh", SimilarityOps.similarityAnnLsh,
+      SimilarityOps.similarityAnnLshSql).twin("similarity_topk"),
+    q("similarity_ivf", SimilarityOps.similarityIvf,
+      SimilarityOps.similarityIvfSql).twin("similarity_topk"),
     // full corpus k-NN graph from same-cell candidates (n*cell, not n^2)
-    "similarity_cell_balance"  -> (SimilarityOps.similarityCellBalance(_, _)),
-    "similarity_knn_graph"     -> (SimilarityOps.similarityKnnGraph(_, _)),
+    q("similarity_cell_balance", SimilarityOps.similarityCellBalance,
+      SimilarityOps.similarityCellBalanceSql),
+    q("similarity_knn_graph", SimilarityOps.similarityKnnGraph,
+      SimilarityOps.similarityKnnGraphSql),
     // IVF-PQ: same candidate lists, ADC re-rank on product-quantization
     // codes (the memory-scale ANN variant)
-    "similarity_ivfpq"         -> (SimilarityOps.similarityIvfPq(_, _)),
+    q("similarity_ivfpq", SimilarityOps.similarityIvfPq,
+      SimilarityOps.similarityIvfPqSql).twin("similarity_topk"),
     // same ADC pipeline over Lloyd-trained per-subspace codebooks
     // (model-based → invariant-asserted, no SQL oracle)
-    "similarity_ivfpq_trained" -> (SimilarityOps.similarityIvfPqTrained(_, _)),
+    q("similarity_ivfpq_trained", SimilarityOps.similarityIvfPqTrained).twin("similarity_topk"),
     // no oracle: model-based (k-means quantizer), like anomaly_kmeans —
     // the test suite asserts a recall floor vs similarity_topk instead
-    "similarity_ivf_trained"   -> (SimilarityOps.similarityIvfTrained(_, _)),
-    "embedding_quantize_int8"  -> (SimilarityOps.embeddingQuantizeInt8(_, _)),
+    q("similarity_ivf_trained", SimilarityOps.similarityIvfTrained).twin("similarity_topk"),
+    q("embedding_quantize_int8", SimilarityOps.embeddingQuantizeInt8,
+      SimilarityOps.embeddingQuantizeInt8Sql),
     // exact upper-triangle covariance of the fixed-point embeddings
-    "embedding_covariance"     -> (SimilarityOps.embeddingCovariance(_, _)),
+    q("embedding_covariance", SimilarityOps.embeddingCovariance,
+      SimilarityOps.embeddingCovarianceSql),
     // top-2 PCA projection off the covariance (model-based — no oracle;
     // variance/orthogonality/centering invariants in OperatorSpec)
-    "embedding_pca_project"    -> (SimilarityOps.embeddingPcaProject(_, _)),
+    q("embedding_pca_project", SimilarityOps.embeddingPcaProject),
     // recall@3 scorecard of every oracle-checkable ANN variant vs exact
-    "similarity_recall_report" -> (SimilarityOps.similarityRecallReport(_, _)),
+    q("similarity_recall_report", SimilarityOps.similarityRecallReport,
+      SimilarityOps.similarityRecallReportSql),
     // full five-variant rollout scorecard incl. the trained paths
     // (model-based rows → no SQL oracle; suite pins untrained rows ==
     // similarity_recall_report and trained mean-recall floors)
-    "similarity_recall_report_trained" ->
-      (SimilarityOps.similarityRecallReportTrained(_, _)),
+    q("similarity_recall_report_trained", SimilarityOps.similarityRecallReportTrained),
     // pipeline utilities: scoring, sampling, normalization
-    "text_feature_hashing"     -> (TextOps.textFeatureHashing(_, _)),
-    "text_tfidf_topterms"      -> (PipelineOps.textTfidfTopTerms(_, _)),
-    "text_normalize"           -> (PipelineOps.textNormalize(_, _)),
-    "sample_bottomk_docs"      -> (PipelineOps.sampleBottomkDocs(_, _)),
-    "sample_hash_docs"         -> (PipelineOps.sampleHashDocs(_, _)),
-    "sample_weighted_docs"     -> (PipelineOps.sampleWeightedDocs(_, _)),
-    "sample_stratified_events" -> (PipelineOps.sampleStratifiedEvents(_, _)),
-    "sample_topk_per_group"    -> (PipelineOps.sampleTopkPerGroup(_, _)),
-    "merge_upsert_customers"   -> (PipelineOps.mergeUpsertCustomers(_, _)),
-    "sort_zorder_events"       -> (PipelineOps.sortZorderEvents(_, _)),
+    q("text_feature_hashing", TextOps.textFeatureHashing, TextOps.textFeatureHashingSql),
+    q("text_tfidf_topterms", PipelineOps.textTfidfTopTerms, PipelineOps.textTfidfTopTermsSql),
+    q("text_normalize", PipelineOps.textNormalize, PipelineOps.textNormalizeSql),
+    q("sample_bottomk_docs", PipelineOps.sampleBottomkDocs, PipelineOps.sampleBottomkDocsSql),
+    q("sample_hash_docs", PipelineOps.sampleHashDocs, PipelineOps.sampleHashDocsSql),
+    q("sample_weighted_docs", PipelineOps.sampleWeightedDocs, PipelineOps.sampleWeightedDocsSql),
+    q("sample_stratified_events", PipelineOps.sampleStratifiedEvents,
+      PipelineOps.sampleStratifiedEventsSql),
+    q("sample_topk_per_group", PipelineOps.sampleTopkPerGroup, PipelineOps.sampleTopkPerGroupSql),
+    q("merge_upsert_customers", PipelineOps.mergeUpsertCustomers,
+      PipelineOps.mergeUpsertCustomersSql),
+    q("sort_zorder_events", PipelineOps.sortZorderEvents, PipelineOps.sortZorderEventsSql),
     // corpus curation: repetition, contamination, packing, quotas, PII
-    "quality_score_drift"      -> (TextOps.qualityScoreDrift(_, _)),
-    "quality_repetition_score" -> (CurationOps.qualityRepetitionScore(_, _)),
-    "contamination_ngram_overlap" -> (CurationOps.contaminationNgramOverlap(_, _)),
+    q("quality_score_drift", TextOps.qualityScoreDrift, TextOps.qualityScoreDriftSql),
+    q("quality_repetition_score", CurationOps.qualityRepetitionScore,
+      CurationOps.qualityRepetitionScoreSql),
+    q("contamination_ngram_overlap", CurationOps.contaminationNgramOverlap,
+      CurationOps.contaminationNgramOverlapSql),
     // the drop decision the contamination report drives (exact-integer 5%)
-    "curation_decontaminate"   -> (CurationOps.curationDecontaminate(_, _)),
+    q("curation_decontaminate", CurationOps.curationDecontaminate,
+      CurationOps.curationDecontaminateSql),
     // map-only Bloom-probe form of the same decision (no oracle —
     // false-positive-only superset + fpp bound asserted in OperatorSpec)
-    "curation_decontaminate_bloom" -> (CurationOps.curationDecontaminateBloom(_, _)),
-    "curation_contamination_by_source" -> (CurationOps.contaminationBySource(_, _)),
+    q("curation_decontaminate_bloom", CurationOps.curationDecontaminateBloom)
+      .twin("curation_decontaminate"),
+    q("curation_contamination_by_source", CurationOps.contaminationBySource,
+      CurationOps.contaminationBySourceSql),
     // per-stage funnel counts for the gate→decontaminate→dedup pipeline
-    "curation_funnel_report"   -> (CurationOps.curationFunnelReport(_, _)),
-    "curation_dedup_rate_by_source" -> (CurationOps.curationDedupRateBySource(_, _)),
-    "curation_snapshot_diff"   -> (CurationOps.curationSnapshotDiff(_, _)),
-    "pack_sequences"           -> (CurationOps.packSequences(_, _)),
+    q("curation_funnel_report", CurationOps.curationFunnelReport,
+      CurationOps.curationFunnelReportSql),
+    q("curation_dedup_rate_by_source", CurationOps.curationDedupRateBySource,
+      CurationOps.curationDedupRateBySourceSql),
+    q("curation_snapshot_diff", CurationOps.curationSnapshotDiff,
+      CurationOps.curationSnapshotDiffSql),
+    q("pack_sequences", CurationOps.packSequences, CurationOps.packSequencesSql),
     // curate → dedup → pack closed loop: packs only dedup_chunks keepers
-    "pack_sequences_deduped"   -> (CurationOps.packSequencesDeduped(_, _)),
-    "sample_domain_quota"      -> (CurationOps.sampleDomainQuota(_, _)),
-    "events_pii_scrub"         -> (CurationOps.eventsPiiScrub(_, _)),
-    "curation_domain_mixture"  -> (CurationOps.domainMixture(_, _)),
-    "curation_length_buckets"  -> (CurationOps.lengthBuckets(_, _)),
+    q("pack_sequences_deduped", CurationOps.packSequencesDeduped,
+      CurationOps.packSequencesDedupedSql),
+    q("sample_domain_quota", CurationOps.sampleDomainQuota, CurationOps.sampleDomainQuotaSql),
+    q("events_pii_scrub", CurationOps.eventsPiiScrub, CurationOps.eventsPiiScrubSql),
+    q("curation_domain_mixture", CurationOps.domainMixture, CurationOps.domainMixtureSql),
+    q("curation_length_buckets", CurationOps.lengthBuckets, CurationOps.lengthBucketsSql),
     // deterministic salted-hash 90/5/5 hold-out assignment
-    "curation_train_val_test"  -> (CurationOps.curationTrainValTest(_, _)),
+    q("curation_train_val_test", CurationOps.curationTrainValTest,
+      CurationOps.curationTrainValTestSql),
     // composite keep/drop verdict with first-failing-rule audit reason
-    "curation_quality_gate"    -> (CurationOps.curationQualityGate(_, _)),
+    q("curation_quality_gate", CurationOps.curationQualityGate, CurationOps.curationQualityGateSql),
     // classifier-vs-rule-gate calibration by probability decile
-    "curation_model_calibration" -> (CurationOps.curationModelCalibration(_, _)),
+    q("curation_model_calibration", CurationOps.curationModelCalibration,
+      CurationOps.curationModelCalibrationSql),
     // flagship end-to-end: gate -> dedup -> train split -> pack, one plan
-    "curation_training_extract" -> (CurationOps.curationTrainingExtract(_, _)),
+    q("curation_training_extract", CurationOps.curationTrainingExtract,
+      CurationOps.curationTrainingExtractSql),
     // same end-to-end extract, with the MinHash-CC canonical keeper set
-    "curation_training_extract_neardup" ->
-      (CurationOps.curationTrainingExtractNearDup(_, _)),
+    q("curation_training_extract_neardup", CurationOps.curationTrainingExtractNearDup,
+      CurationOps.curationTrainingExtractNearDupSql),
     // per-(lang, source) release summary: counts, exact p50/p95, shares
-    "curation_dataset_card"    -> (CurationOps.datasetCard(_, _)),
+    q("curation_dataset_card", CurationOps.datasetCard, CurationOps.datasetCardSql),
     // alpha=0.5 temperature-resampled language mixture weights
-    "curation_lang_temperature" -> (CurationOps.langTemperatureMixture(_, _)),
+    q("curation_lang_temperature", CurationOps.langTemperatureMixture,
+      CurationOps.langTemperatureMixtureSql),
     // epoch/repeat schedule under a token budget (4-epoch cap,
     // Muennighoff et al. 2023)
-    "curation_epoch_plan"      -> (CurationOps.curationEpochPlan(_, _)),
+    q("curation_epoch_plan", CurationOps.curationEpochPlan, CurationOps.curationEpochPlanSql),
     // the plan made concrete: per-doc repeat counts for the sampler
-    "curation_epoch_sample"    -> (CurationOps.curationEpochSample(_, _)),
+    q("curation_epoch_sample", CurationOps.curationEpochSample, CurationOps.curationEpochSampleSql),
     // size-balanced output-shard assignment + the manifest a writer emits
-    "curation_shard_manifest"  -> (CurationOps.curationShardManifest(_, _)),
+    q("curation_shard_manifest", CurationOps.curationShardManifest,
+      CurationOps.curationShardManifestSql),
     // Gopher-style duplicate-10-gram fraction (sub-document repetition)
-    "text_ngram_novelty"       -> (TextOps.textNgramNovelty(_, _)),
-    "text_dup_ngram_fraction"  -> (TextOps.textDupNgramFraction(_, _)),
+    q("text_ngram_novelty", TextOps.textNgramNovelty, TextOps.textNgramNoveltySql),
+    q("text_dup_ngram_fraction", TextOps.textDupNgramFraction, TextOps.textDupNgramFractionSql),
     // CCNet-style unigram-LM mean log-prob quality signal
-    "text_lm_logprob"          -> (TextOps.textLmLogprob(_, _)),
+    q("text_lm_logprob", TextOps.textLmLogprob, TextOps.textLmLogprobSql),
     // interpolated bigram-LM fluency score (the next model up)
-    "text_bigram_logprob"      -> (TextOps.textBigramLogprob(_, _)),
+    q("text_bigram_logprob", TextOps.textBigramLogprob, TextOps.textBigramLogprobSql),
     // corpus-side PII scrub (emails/phones/ids) with per-class audit
-    "text_pii_scrub"           -> (TextOps.textPiiScrub(_, _)),
+    q("text_pii_scrub", TextOps.textPiiScrub, TextOps.textPiiScrubSql),
     // per-doc character-entropy quality signal (compression-ratio proxy)
-    "text_char_entropy"        -> (TextOps.textCharEntropy(_, _)),
+    q("text_char_entropy", TextOps.textCharEntropy, TextOps.textCharEntropySql),
     // threshold sensitivity sweep over the exact PPJoin pair set
-    "dedup_threshold_sweep"    -> (DedupOps.dedupThresholdSweep(_, _)),
+    q("dedup_threshold_sweep", DedupOps.dedupThresholdSweep, DedupOps.dedupThresholdSweepSql),
     // Benford first-digit audit of the money column
-    "quality_benford_totalprice" -> (ProfilingOps.qualityBenfordTotalprice(_, _)),
+    q("quality_benford_totalprice", ProfilingOps.qualityBenfordTotalprice,
+      ProfilingOps.qualityBenfordTotalpriceSql),
     // the removal action for dedup_repeated_substrings' spans
-    "text_strip_repeated_spans" -> (DedupOps.textStripRepeatedSpans(_, _)),
-    // multi-round BPE merge training on the word-type table
-    // (oracle-checked since r12: the loop restates in DuckDB SQL)
-    "text_bpe_train"           -> (TextOps.textBpeTrain(_, _)),
-    // apply side: trained merges replayed at word-type granularity
-    "text_tokenizer_fertility" -> (TextOps.textTokenizerFertility(_, _)),
-    "text_bpe_encode"          -> (TextOps.textBpeEncode(_, _)),
-    // directed shingle containment (subsumption pairs Jaccard misses)
-    "dedup_containment"        -> (DedupOps.dedupContainment(_, _)),
-    // new-batch-vs-corpus hash-registry dedup (the incremental shape)
-    "dedup_incremental"        -> (DedupOps.dedupIncremental(_, _)),
-    // same result via a Bloom pre-filter: only maybe-seen rows shuffle
-    "dedup_incremental_bloom"  -> (DedupOps.dedupIncrementalBloom(_, _)),
-    // BPE merge-candidate pair counts (tokenizer-training prep)
-    "text_bpe_pairs"           -> (TextOps.textBpePairs(_, _)),
-    "curation_corpus_report"   -> (PipelineOps.curationCorpusReport(_, _)),
-    // HLL-sketch form of the report (no oracle — sketch estimates are
-    // engine-specific; shape + ≤5% error asserted in OperatorSpec)
-    "curation_corpus_report_sketch" -> (PipelineOps.curationCorpusReportSketch(_, _)),
-    "text_vocab_coverage"      -> (TextOps.textVocabCoverage(_, _)),
-    // sketch-based cardinality (no oracle — HLL layouts are engine-specific)
-    "agg_approx_distinct"      -> (PipelineOps.aggApproxDistinct(_, _)),
-    // mergeable DataSketches HLL union (no oracle — test-asserted bounds)
-    "agg_hll_merge"            -> (PipelineOps.aggHllMerge(_, _)),
-    // Count-Min point frequencies: per-source sketches merge exactly to
-    // the global sketch (no oracle — sketch; invariants in OperatorSpec)
-    "agg_cms_topk"             -> (PipelineOps.aggCmsTopk(_, _)),
-    "source_orc_roundtrip"     -> (ReferenceParity.sourceOrcRoundtrip(_, _)),
-    "source_avro_roundtrip"    -> (ReferenceParity.sourceAvroRoundtrip(_, _)),
-    "source_xml_roundtrip"     -> (ReferenceParity.sourceXmlRoundtrip(_, _)),
-    // raw-file binary ingest (media staging shape)
-    "source_binaryfile"        -> (MultimodalOps.sourceBinaryfile(_, _)),
-    // full custom DataSource V2 connector (pushdown + pruning + splits)
-    "source_dsv2_pushdown"     -> (graft.sources.GenSourceOps.sourceDsv2Pushdown(_, _)),
-    // complete aggregate pushdown: the Aggregate node vanishes into the
-    // source's closed-form row (suite asserts the agg-free plan)
-    "source_dsv2_agg_pushdown" -> (graft.sources.GenSourceOps.sourceDsv2AggPushdown(_, _)),
-    // DSv2 WRITE path: commit-protocol metrics sink
-    "sink_dsv2_metrics"        -> (graft.sources.CountSinkOps.sinkDsv2Metrics(_, _)),
-    // observe() metrics piggybacked on the write pass (zero extra scans)
-    "pipeline_observed_write"  -> (PipelineOps.pipelineObservedWrite(_, _)),
-    // multimodal plumbing
-    "multimodal_meta"          -> (MultimodalOps.multimodalMeta(_, _)),
-    "multimodal_frame_sample"  -> (MultimodalOps.multimodalFrameSample(_, _)),
-    // fixed-size thumbnail downsampling (the resize step of the codec path)
-    "multimodal_resize"        -> (MultimodalOps.multimodalResize(_, _)),
-    // collate resized thumbnails into rectangular 32-item batches
-    "multimodal_batch_tensor"  -> (MultimodalOps.multimodalBatchTensor(_, _)),
-    // pHash/PDQ-style banded perceptual near-dup pairs (codec stubbed)
-    "multimodal_phash_dedup"   -> (MultimodalOps.multimodalPhashDedup(_, _)),
-    "multimodal_phash_clusters" -> (MultimodalOps.multimodalPhashClusters(_, _)),
-    // fused per-doc training example across all three modalities
-    "multimodal_example_build" -> (MultimodalOps.multimodalExampleBuild(_, _)),
-    // graph analytics over the k-NN similarity graph
-    "graph_pagerank_knn"       -> (GraphOps.graphPagerankKnn(_, _)),
-    "graph_triangle_count"     -> (GraphOps.graphTriangleCount(_, _)),
-    // data profiling + distribution summaries
-    "profile_columns"          -> (ProfilingOps.profileColumns(_, _)),
-    "agg_equidepth_histogram"  -> (ProfilingOps.aggEquidepthHistogram(_, _)),
-    // no oracle: sketch boundaries are engine-specific — the suite pins
-    // total preservation + per-bin depth against the exact variant
-    "agg_equidepth_sketch"     -> (ProfilingOps.aggEquidepthSketch(_, _)),
-    "agg_rfm_segments"         -> (ProfilingOps.aggRfmSegments(_, _)),
-    // model-based anomaly detection (no oracle — rows-only check)
-    "anomaly_kmeans"           -> (AnomalyOps.anomalyKmeans(_, _)),
-  )
-
-  /** Production-twin annotation for the bench ledger: each key is a
-    * bounded-state / sub-quadratic PRODUCTION variant, its value the
-    * labeled exact baseline it shadows. The baselines stay registered
-    * (most are oracle-green exactness witnesses) but their cost is BY
-    * DESIGN — value-buffering quantiles, all-pairs scans — so a grader
-    * reading the ledger should price each twin against its baseline row,
-    * not in isolation. Emitted as `twin_of` on the twin's per-query line
-    * in `bench_full.json` (see [[graft.Bench]]); pair membership is
-    * spec-pinned against this registry in OperatorSpec. */
-  val twinOf: Map[String, String] = Map(
-    // sketch quantiles / distinct / heavy hitters vs exact aggregates
-    "agg_equidepth_sketch"          -> "agg_equidepth_histogram",
-    "agg_robust_stats_sketch"       -> "agg_robust_stats",
-    "agg_approx_percentile"         -> "agg_percentiles",
-    "agg_approx_distinct"           -> "agg_count_distinct",
-    "agg_hll_merge"                 -> "agg_count_distinct",
-    "agg_cms_topk"                  -> "agg_topk_custom",
-    "curation_corpus_report_sketch" -> "curation_corpus_report",
-    // Bloom pre-filters vs the exact joins they short-circuit
-    "curation_decontaminate_bloom"  -> "curation_decontaminate",
-    "dedup_incremental_bloom"       -> "dedup_incremental",
-    // ANN paths vs the O(n²) brute-force cosine baselines
-    "similarity_ann_lsh"            -> "similarity_topk",
-    "similarity_ivf"                -> "similarity_topk",
-    "similarity_ivf_trained"        -> "similarity_topk",
-    "similarity_ivfpq"              -> "similarity_topk",
-    "similarity_ivfpq_trained"      -> "similarity_topk",
-    "dedup_semantic"                -> "dedup_embedding_cosine",
-    "dedup_semantic_pivots"         -> "dedup_embedding_cosine",
-    // linear cluster labels vs the output-quadratic pair enumeration
-    "multimodal_phash_clusters"     -> "multimodal_phash_dedup",
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "source_from_elements"     -> ReferenceParity.sourceFromElementsSql,
-    "source_read_text"         -> ReferenceParity.sourceReadTextSql,
-    "source_csv_roundtrip"     -> ReferenceParity.sourceCsvRoundtripSql,
-    "source_jsonl_roundtrip"   -> ReferenceParity.sourceJsonlRoundtripSql,
-    "source_orc_roundtrip"     -> ReferenceParity.sourceOrcRoundtripSql,
-    "source_avro_roundtrip"    -> ReferenceParity.sourceAvroRoundtripSql,
-    "source_xml_roundtrip"     -> ReferenceParity.sourceXmlRoundtripSql,
-    "source_binaryfile"        -> MultimodalOps.sourceBinaryfileSql,
-    "source_dsv2_pushdown"     -> graft.sources.GenSourceOps.sourceDsv2PushdownSql,
-    "source_dsv2_agg_pushdown" -> graft.sources.GenSourceOps.sourceDsv2AggPushdownSql,
-    "sink_dsv2_metrics"        -> graft.sources.CountSinkOps.sinkDsv2MetricsSql,
-    "pipeline_observed_write"  -> PipelineOps.pipelineObservedWriteSql,
-    "sink_text_roundtrip"      -> ReferenceParity.sinkTextRoundtripSql,
-    "sink_partitioned_parquet" -> ReferenceParity.sinkPartitionedParquetSql,
-    "map_uppercase"            -> ReferenceParity.mapUppercaseSql,
-    "filter_adults"            -> ReferenceParity.filterAdultsSql,
-    "filter_unstable"          -> ReferenceParity.filterUnstableSql,
-    "union_all"                -> ReferenceParity.unionAllSql,
-    "stateful_concat_final"    -> ReferenceParity.statefulConcatFinalSql,
-    "stateful_concat_prefixes" -> ReferenceParity.statefulConcatPrefixesSql,
-    "tumbling_window_max"      -> ReferenceParity.tumblingWindowMaxSql,
-    "streaming_window_max"     -> graft.streaming.StreamingOps.streamingWindowMaxSql,
-    "streaming_concat_prefixes" -> graft.streaming.StreamingOps.streamingConcatPrefixesSql,
-    "streaming_downsample"     -> graft.streaming.StreamingOps.streamingDownsampleSql,
-    "streaming_dedup"          -> graft.streaming.StreamingOps.streamingDedupSql,
-    "streaming_incremental_dedup" -> graft.streaming.StreamingOps.streamingIncrementalDedupSql,
-    "streaming_stream_join"    -> graft.streaming.StreamingOps.streamingStreamJoinSql,
-    "streaming_outer_join"     -> graft.streaming.StreamingOps.streamingOuterJoinSql,
-    "streaming_dedup_watermarked" -> graft.streaming.StreamingOps.streamingDedupWatermarkedSql,
-    "streaming_static_join"    -> graft.streaming.StreamingOps.streamingStaticJoinSql,
-    "streaming_session_window" -> graft.streaming.StreamingOps.streamingSessionWindowSql,
-    "streaming_rocksdb_agg"    -> graft.streaming.StreamingOps.streamingRocksdbAggSql,
-    "streaming_transform_with_state" -> graft.streaming.StreamingOps.streamingTransformWithStateSql,
-    "streaming_tws_timers"     -> graft.streaming.StreamingOps.streamingTwsTimersSql,
-    "streaming_foreach_batch_upsert" -> graft.streaming.StreamingOps.streamingForeachBatchUpsertSql,
-    "streaming_dsv2_source"    -> graft.sources.GenSourceOps.streamingDsv2SourceSql,
-    "streaming_append_windows" -> graft.sources.GenSourceOps.streamingDsv2AppendWindowsSql,
-    "streaming_chained_windows" -> graft.sources.GenSourceOps.streamingDsv2ChainedWindowsSql,
-    "agg_pricing_summary"      -> Relational.aggPricingSummarySql,
-    "sql_shipping_priority"    -> Sql.shippingPrioritySql,
-    "sql_customer_distribution" -> Sql.customerDistributionSql,
-    "sql_min_cost_supplier"    -> Sql.minCostSupplierSql,
-    "sql_local_supplier_volume" -> Sql.localSupplierVolumeSql,
-    "sql_order_priority_exists" -> Sql.orderPriorityExistsSql,
-    "sql_returned_item_revenue" -> Sql.returnedItemRevenueSql,
-    "sql_promo_revenue"        -> Sql.promoRevenueSql,
-    "sql_top_supplier"         -> Sql.topSupplierSql,
-    "sql_large_orders"         -> Sql.largeOrdersSql,
-    "sql_forecast_revenue"     -> Sql.forecastRevenueSql,
-    "sql_nation_trade_volume"  -> Sql.nationTradeVolumeSql,
-    "sql_shipmode_priority"    -> Sql.shipmodePrioritySql,
-    "sql_small_quantity_revenue" -> Sql.smallQuantityRevenueSql,
-    "sql_disjunctive_revenue"  -> Sql.disjunctiveRevenueSql,
-    "sql_waiting_suppliers"    -> Sql.waitingSuppliersSql,
-    "sql_dormant_accounts"     -> Sql.dormantAccountsSql,
-    "sql_market_share"         -> Sql.marketShareSql,
-    "sql_product_profit"       -> Sql.productProfitSql,
-    "sql_important_stock"      -> Sql.importantStockSql,
-    "sql_supplier_count"       -> Sql.supplierCountSql,
-    "sql_excess_suppliers"     -> Sql.excessSuppliersSql,
-    "join_orders_customers"    -> Relational.joinOrdersCustomersSql,
-    "topn_revenue"             -> Relational.topnRevenueSql,
-    "window_rank_orders"       -> Relational.windowRankOrdersSql,
-    "agg_percentiles"          -> Relational.aggPercentilesSql,
-    "agg_corr_quantity_price"  -> Relational.aggCorrQuantityPriceSql,
-    "agg_robust_stats"         -> Relational.aggRobustStatsSql,
-    "agg_robust_stats_sketch"  -> Relational.aggRobustStatsSketchSql,
-    "agg_welch_ttest"          -> Relational.aggWelchTtestSql,
-    "agg_typed_aggregator"     -> Relational.aggTypedAggregatorSql,
-    "join_asof"                -> Extended.joinAsofSql,
-    "join_asof_tolerance"      -> Extended.joinAsofToleranceSql,
-    "join_asof_native"         -> Extended.joinAsofNativeSql,
-    "join_limit_broadcast"     -> Extended.joinLimitBroadcastSql,
-    "join_semi_customers"      -> Extended.joinSemiCustomersSql,
-    "join_anti_customers"      -> Extended.joinAntiCustomersSql,
-    "join_range_shipping"      -> Extended.joinRangeShippingSql,
-    "join_full_outer"          -> Extended.joinFullOuterSql,
-    "join_bloom_pruned"        -> Extended.joinBloomPrunedSql,
-    "join_salted_skew"         -> Extended.joinSaltedSkewSql,
-    "join_dpp_pruned"          -> Extended.joinDppPrunedSql,
-    "join_aqe_skew"            -> Extended.joinAqeSkewSql,
-    "cross_join_regions"       -> Extended.crossJoinRegionsSql,
-    "window_ntile_quartiles"   -> Extended.windowNtileQuartilesSql,
-    "group_concat_names"       -> Extended.groupConcatNamesSql,
-    "agg_rollup_revenue"       -> Extended.aggRollupRevenueSql,
-    "agg_cube_orders"          -> Extended.aggCubeOrdersSql,
-    "agg_grouping_sets"        -> Extended.aggGroupingSetsSql,
-    "agg_count_distinct"       -> Extended.aggCountDistinctSql,
-    "set_intersect"            -> Extended.setIntersectSql,
-    "set_except"               -> Extended.setExceptSql,
-    "scalar_functions"         -> Extended.scalarFunctionsSql,
-    "window_running_sum"       -> Extended.windowRunningSumSql,
-    "window_range_frame"       -> Extended.windowRangeFrameSql,
-    "agg_topk_custom"          -> Extended.aggTopkCustomSql,
-    "join_interval_binned"     -> Extended.joinIntervalBinnedSql,
-    "sink_bucketed_join"       -> Extended.sinkBucketedJoinSql,
-    "sink_compacted_parquet"   -> Extended.sinkCompactedParquetSql,
-    "pivot_orders_status"      -> Extended.pivotOrdersStatusSql,
-    "unpivot_lineitem_measures" -> Extended.unpivotLineitemMeasuresSql,
-    "window_percent_rank"      -> Extended.windowPercentRankSql,
-    "window_scd2_orders"       -> Extended.windowScd2OrdersSql,
-    "array_stats_embeddings"   -> Extended.arrayStatsEmbeddingsSql,
-    "nested_order_lines"       -> Extended.nestedOrderLinesSql,
-    "quality_referential_check" -> PipelineOps.qualityReferentialCheckSql,
-    "quality_skew_report"      -> PipelineOps.qualitySkewReportSql,
-    "agg_histogram_price"      -> PipelineOps.aggHistogramPriceSql,
-    "events_active_users"      -> EventOps.eventsActiveUsersSql,
-    "events_retention_cohorts" -> EventOps.eventsRetentionCohortsSql,
-    "events_cusum_changepoint" -> EventOps.eventsCusumChangepointSql,
-    "events_top_paths"         -> EventOps.eventsTopPathsSql,
-    "events_velocity_features" -> EventOps.eventsVelocityFeaturesSql,
-    "events_downsample"        -> EventOps.eventsDownsampleSql,
-    "events_tumbling_stats"    -> EventOps.eventsTumblingStatsSql,
-    "events_sliding_stats"     -> EventOps.eventsSlidingStatsSql,
-    "events_session_windows"   -> EventOps.eventsSessionWindowsSql,
-    "events_session_anomaly"   -> EventOps.eventsSessionAnomalySql,
-    "streaming_rolling_anomaly" -> graft.streaming.StreamingOps.streamingRollingAnomalySql,
-    "events_rolling_anomaly"   -> EventOps.eventsRollingAnomalySql,
-    "dedup_events"             -> EventOps.dedupEventsSql,
-    "json_props_extract"       -> EventOps.jsonPropsExtractSql,
-    "json_props_schema"        -> EventOps.jsonPropsSchemaSql,
-    "json_variant_shred"       -> EventOps.jsonVariantShredSql,
-    "events_user_funnel"       -> EventOps.eventsUserFunnelSql,
-    "events_cohort_retention"  -> EventOps.eventsCohortRetentionSql,
-    "events_interarrival"      -> EventOps.eventsInterarrivalSql,
-    "events_gap_fill"          -> EventOps.eventsGapFillSql,
-    "agg_salted_skew"          -> EventOps.aggSaltedSkewSql,
-    "text_token_counts"        -> TextOps.textTokenCountsSql,
-    "text_language_id"         -> TextOps.textLanguageIdSql,
-    "text_quality_score"       -> TextOps.textQualityScoreSql,
-    "text_quality_logreg"      -> TextOps.textQualityLogregSql,
-    "text_token_count"         -> TextOps.textTokenCountSql,
-    "text_winnowing_fingerprint" -> TextOps.textWinnowingFingerprintSql,
-    "dedup_winnowing_pairs"    -> TextOps.dedupWinnowingPairsSql,
-    "text_fingerprint"         -> TextOps.textFingerprintSql,
-    "text_bigram_collocations" -> TextOps.textBigramCollocationsSql,
-    "text_rarity_score"        -> TextOps.textRarityScoreSql,
-    "text_chunk_overlap"       -> TextOps.textChunkOverlapSql,
-    "events_markov_transitions" -> EventOps.eventsMarkovTransitionsSql,
-    "agg_linear_regression"    -> Relational.aggLinearRegressionSql,
-    "embedding_quantize_int8"  -> SimilarityOps.embeddingQuantizeInt8Sql,
-    "embedding_covariance"     -> SimilarityOps.embeddingCovarianceSql,
-    "dedup_exact_docs"         -> DedupOps.dedupExactDocsSql,
-    "dedup_minhash_lsh"        -> DedupOps.dedupMinhashLshSql,
-    "dedup_lsh_tuning"         -> DedupOps.dedupLshTuningSql,
-    "dedup_lsh_recall"         -> DedupOps.dedupLshRecallSql,
-    "dedup_simhash"            -> DedupOps.dedupSimhashSql,
-    "dedup_simhash_probe"      -> DedupOps.dedupSimhashProbeSql,
-    "dedup_ngram_jaccard"      -> DedupOps.dedupNgramJaccardSql,
-    "dedup_containment"        -> DedupOps.dedupContainmentSql,
-    "dedup_incremental"        -> DedupOps.dedupIncrementalSql,
-    "dedup_incremental_bloom"  -> DedupOps.dedupIncrementalBloomSql,
-    "dedup_prefix_filter"      -> DedupOps.dedupPrefixFilterSql,
-    "dedup_embedding_cosine"   -> DedupOps.dedupEmbeddingCosineSql,
-    "dedup_semantic_pivots"    -> DedupOps.dedupSemanticSql,
-    "dedup_edit_distance"      -> DedupOps.dedupEditDistanceSql,
-    "dedup_repeated_substrings" -> DedupOps.dedupRepeatedSubstringsSql,
-    "dedup_connected_components" -> PipelineOps.dedupConnectedComponentsSql,
-    "dedup_cluster_sizes"      -> PipelineOps.dedupClusterSizesSql,
-    "dedup_canonical_pick"     -> PipelineOps.dedupCanonicalPickSql,
-    "dedup_chunks"             -> TextOps.dedupChunksSql,
-    "similarity_topk"          -> SimilarityOps.similarityTopkSql,
-    "similarity_ann_lsh"       -> SimilarityOps.similarityAnnLshSql,
-    "similarity_ivf"           -> SimilarityOps.similarityIvfSql,
-    "similarity_cell_balance"  -> SimilarityOps.similarityCellBalanceSql,
-    "similarity_knn_graph"     -> SimilarityOps.similarityKnnGraphSql,
-    "similarity_ivfpq"         -> SimilarityOps.similarityIvfPqSql,
-    "similarity_recall_report" -> SimilarityOps.similarityRecallReportSql,
-    "text_feature_hashing"     -> TextOps.textFeatureHashingSql,
-    "text_tfidf_topterms"      -> PipelineOps.textTfidfTopTermsSql,
-    "text_normalize"           -> PipelineOps.textNormalizeSql,
-    "sample_bottomk_docs"      -> PipelineOps.sampleBottomkDocsSql,
-    "sample_hash_docs"         -> PipelineOps.sampleHashDocsSql,
-    "sample_weighted_docs"     -> PipelineOps.sampleWeightedDocsSql,
-    "sample_stratified_events" -> PipelineOps.sampleStratifiedEventsSql,
-    "sample_topk_per_group"    -> PipelineOps.sampleTopkPerGroupSql,
-    "merge_upsert_customers"   -> PipelineOps.mergeUpsertCustomersSql,
-    "sort_zorder_events"       -> PipelineOps.sortZorderEventsSql,
-    "quality_score_drift"      -> TextOps.qualityScoreDriftSql,
-    "quality_repetition_score" -> CurationOps.qualityRepetitionScoreSql,
-    "contamination_ngram_overlap" -> CurationOps.contaminationNgramOverlapSql,
-    "curation_decontaminate"   -> CurationOps.curationDecontaminateSql,
-    "curation_contamination_by_source" -> CurationOps.contaminationBySourceSql,
-    "curation_funnel_report"   -> CurationOps.curationFunnelReportSql,
-    "curation_dedup_rate_by_source" -> CurationOps.curationDedupRateBySourceSql,
-    "curation_snapshot_diff"   -> CurationOps.curationSnapshotDiffSql,
-    "pack_sequences"           -> CurationOps.packSequencesSql,
-    "pack_sequences_deduped"   -> CurationOps.packSequencesDedupedSql,
-    "sample_domain_quota"      -> CurationOps.sampleDomainQuotaSql,
-    "events_pii_scrub"         -> CurationOps.eventsPiiScrubSql,
-    "curation_domain_mixture"  -> CurationOps.domainMixtureSql,
-    "curation_length_buckets"  -> CurationOps.lengthBucketsSql,
-    "curation_train_val_test"  -> CurationOps.curationTrainValTestSql,
-    "curation_quality_gate"    -> CurationOps.curationQualityGateSql,
-    "curation_model_calibration" -> CurationOps.curationModelCalibrationSql,
-    "curation_training_extract" -> CurationOps.curationTrainingExtractSql,
-    "curation_training_extract_neardup" ->
-      CurationOps.curationTrainingExtractNearDupSql,
-    "curation_dataset_card"    -> CurationOps.datasetCardSql,
-    "curation_lang_temperature" -> CurationOps.langTemperatureMixtureSql,
-    "curation_epoch_plan"      -> CurationOps.curationEpochPlanSql,
-    "curation_epoch_sample"    -> CurationOps.curationEpochSampleSql,
-    "curation_shard_manifest"  -> CurationOps.curationShardManifestSql,
-    "text_ngram_novelty"       -> TextOps.textNgramNoveltySql,
-    "text_dup_ngram_fraction"  -> TextOps.textDupNgramFractionSql,
-    "text_lm_logprob"          -> TextOps.textLmLogprobSql,
-    "text_bigram_logprob"      -> TextOps.textBigramLogprobSql,
-    "text_pii_scrub"           -> TextOps.textPiiScrubSql,
-    "text_char_entropy"        -> TextOps.textCharEntropySql,
-    "text_strip_repeated_spans" -> DedupOps.textStripRepeatedSpansSql,
-    "text_bpe_pairs"           -> TextOps.textBpePairsSql,
-    // r12: the full 8-round training loop restated in DuckDB (delimiter-
+    q("text_strip_repeated_spans", DedupOps.textStripRepeatedSpans,
+      DedupOps.textStripRepeatedSpansSql),
+    // multi-round BPE merge training on the word-type table. Oracle-checked
+    // since r12: the full 8-round training loop restated in DuckDB (delimiter-
     // string replace == the leftmost-greedy fold) — these three were the
     // last model-based rows a cross-engine oracle could reach
-    "text_bpe_train"           -> TextOps.textBpeTrainSql,
-    "text_bpe_encode"          -> TextOps.textBpeEncodeSql,
-    "text_tokenizer_fertility" -> TextOps.textTokenizerFertilitySql,
-    "curation_corpus_report"   -> PipelineOps.curationCorpusReportSql,
-    "text_vocab_coverage"      -> TextOps.textVocabCoverageSql,
-    "multimodal_meta"          -> MultimodalOps.multimodalMetaSql,
-    "multimodal_frame_sample"  -> MultimodalOps.multimodalFrameSampleSql,
-    "multimodal_resize"        -> MultimodalOps.multimodalResizeSql,
-    "multimodal_batch_tensor"  -> MultimodalOps.multimodalBatchTensorSql,
-    "multimodal_phash_dedup"   -> MultimodalOps.multimodalPhashDedupSql,
-    "multimodal_phash_clusters" -> MultimodalOps.multimodalPhashClustersSql,
-    "multimodal_example_build" -> MultimodalOps.multimodalExampleBuildSql,
-    "graph_pagerank_knn"       -> GraphOps.graphPagerankKnnSql,
-    "graph_triangle_count"     -> GraphOps.graphTriangleCountSql,
-    "events_audience_overlap"  -> EventOps.eventsAudienceOverlapSql,
-    "events_user_streaks"      -> EventOps.eventsUserStreaksSql,
-    "events_seasonal_baseline" -> EventOps.eventsSeasonalBaselineSql,
-    "quality_gopher_rules"     -> ProfilingOps.qualityGopherRulesSql,
-    "curation_pareto_front"    -> CurationOps.curationParetoFrontSql,
-    "window_cume_dist"         -> Extended.windowCumeDistSql,
-    "agg_mode_priority"        -> Extended.aggModePrioritySql,
-    "dedup_threshold_sweep"    -> DedupOps.dedupThresholdSweepSql,
-    "quality_benford_totalprice" -> ProfilingOps.qualityBenfordTotalpriceSql,
-    "profile_columns"          -> ProfilingOps.profileColumnsSql,
-    "agg_equidepth_histogram"  -> ProfilingOps.aggEquidepthHistogramSql,
-    "agg_rfm_segments"         -> ProfilingOps.aggRfmSegmentsSql,
-  )
+    q("text_bpe_train", TextOps.textBpeTrain, TextOps.textBpeTrainSql),
+    // apply side: trained merges replayed at word-type granularity
+    q("text_tokenizer_fertility", TextOps.textTokenizerFertility,
+      TextOps.textTokenizerFertilitySql),
+    q("text_bpe_encode", TextOps.textBpeEncode, TextOps.textBpeEncodeSql),
+    // directed shingle containment (subsumption pairs Jaccard misses)
+    q("dedup_containment", DedupOps.dedupContainment, DedupOps.dedupContainmentSql),
+    // new-batch-vs-corpus hash-registry dedup (the incremental shape)
+    q("dedup_incremental", DedupOps.dedupIncremental, DedupOps.dedupIncrementalSql),
+    // same result via a Bloom pre-filter: only maybe-seen rows shuffle
+    q("dedup_incremental_bloom", DedupOps.dedupIncrementalBloom,
+      DedupOps.dedupIncrementalBloomSql).twin("dedup_incremental"),
+    // BPE merge-candidate pair counts (tokenizer-training prep)
+    q("text_bpe_pairs", TextOps.textBpePairs, TextOps.textBpePairsSql),
+    q("curation_corpus_report", PipelineOps.curationCorpusReport,
+      PipelineOps.curationCorpusReportSql),
+    // HLL-sketch form of the report (no oracle — sketch estimates are
+    // engine-specific; shape + ≤5% error asserted in OperatorSpec)
+    q("curation_corpus_report_sketch", PipelineOps.curationCorpusReportSketch)
+      .twin("curation_corpus_report"),
+    q("text_vocab_coverage", TextOps.textVocabCoverage, TextOps.textVocabCoverageSql),
+    // sketch-based cardinality (no oracle — HLL layouts are engine-specific)
+    q("agg_approx_distinct", PipelineOps.aggApproxDistinct).twin("agg_count_distinct"),
+    // mergeable DataSketches HLL union (no oracle — test-asserted bounds)
+    q("agg_hll_merge", PipelineOps.aggHllMerge).twin("agg_count_distinct"),
+    // Count-Min point frequencies: per-source sketches merge exactly to
+    // the global sketch (no oracle — sketch; invariants in OperatorSpec)
+    q("agg_cms_topk", PipelineOps.aggCmsTopk).twin("agg_topk_custom"),
+    q("source_orc_roundtrip", ReferenceParity.sourceOrcRoundtrip,
+      ReferenceParity.sourceOrcRoundtripSql),
+    q("source_avro_roundtrip", ReferenceParity.sourceAvroRoundtrip,
+      ReferenceParity.sourceAvroRoundtripSql),
+    q("source_xml_roundtrip", ReferenceParity.sourceXmlRoundtrip,
+      ReferenceParity.sourceXmlRoundtripSql),
+    // raw-file binary ingest (media staging shape)
+    q("source_binaryfile", MultimodalOps.sourceBinaryfile, MultimodalOps.sourceBinaryfileSql),
+    // full custom DataSource V2 connector (pushdown + pruning + splits)
+    q("source_dsv2_pushdown", GenSourceOps.sourceDsv2Pushdown, GenSourceOps.sourceDsv2PushdownSql),
+    // complete aggregate pushdown: the Aggregate node vanishes into the
+    // source's closed-form row (suite asserts the agg-free plan)
+    q("source_dsv2_agg_pushdown", GenSourceOps.sourceDsv2AggPushdown,
+      GenSourceOps.sourceDsv2AggPushdownSql),
+    // DSv2 WRITE path: commit-protocol metrics sink
+    q("sink_dsv2_metrics", CountSinkOps.sinkDsv2Metrics, CountSinkOps.sinkDsv2MetricsSql),
+    // observe() metrics piggybacked on the write pass (zero extra scans)
+    q("pipeline_observed_write", PipelineOps.pipelineObservedWrite,
+      PipelineOps.pipelineObservedWriteSql),
+    // multimodal plumbing
+    q("multimodal_meta", MultimodalOps.multimodalMeta, MultimodalOps.multimodalMetaSql),
+    q("multimodal_frame_sample", MultimodalOps.multimodalFrameSample,
+      MultimodalOps.multimodalFrameSampleSql),
+    // fixed-size thumbnail downsampling (the resize step of the codec path)
+    q("multimodal_resize", MultimodalOps.multimodalResize, MultimodalOps.multimodalResizeSql),
+    // collate resized thumbnails into rectangular 32-item batches
+    q("multimodal_batch_tensor", MultimodalOps.multimodalBatchTensor,
+      MultimodalOps.multimodalBatchTensorSql),
+    // pHash/PDQ-style banded perceptual near-dup pairs (codec stubbed)
+    q("multimodal_phash_dedup", MultimodalOps.multimodalPhashDedup,
+      MultimodalOps.multimodalPhashDedupSql),
+    q("multimodal_phash_clusters", MultimodalOps.multimodalPhashClusters,
+      MultimodalOps.multimodalPhashClustersSql).twin("multimodal_phash_dedup"),
+    // fused per-doc training example across all three modalities
+    q("multimodal_example_build", MultimodalOps.multimodalExampleBuild,
+      MultimodalOps.multimodalExampleBuildSql),
+    // graph analytics over the k-NN similarity graph
+    q("graph_pagerank_knn", GraphOps.graphPagerankKnn, GraphOps.graphPagerankKnnSql),
+    q("graph_triangle_count", GraphOps.graphTriangleCount, GraphOps.graphTriangleCountSql),
+    // data profiling + distribution summaries
+    q("profile_columns", ProfilingOps.profileColumns, ProfilingOps.profileColumnsSql),
+    q("agg_equidepth_histogram", ProfilingOps.aggEquidepthHistogram,
+      ProfilingOps.aggEquidepthHistogramSql),
+    // no oracle: sketch boundaries are engine-specific — the suite pins
+    // total preservation + per-bin depth against the exact variant
+    q("agg_equidepth_sketch", ProfilingOps.aggEquidepthSketch).twin("agg_equidepth_histogram"),
+    q("agg_rfm_segments", ProfilingOps.aggRfmSegments, ProfilingOps.aggRfmSegmentsSql),
+    // model-based anomaly detection (no oracle — rows-only check)
+    q("anomaly_kmeans", AnomalyOps.anomalyKmeans),
+  ))
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(s => s.name -> s.build).toMap
+
+  /** Query name → its DuckDB oracle SQL, for every query that has one. */
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(s => s.oracle.map(s.name -> _)).toMap
+
+  /** Production twin → the exact baseline it shadows (see [[QuerySpec]]). */
+  lazy val twinOf: Map[String, String] =
+    registry.flatMap(s => s.twinOf.map(s.name -> _)).toMap
 }

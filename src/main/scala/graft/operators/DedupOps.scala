@@ -248,8 +248,9 @@ object DedupOps {
     * bounding the cache to the APPLICATION's lifetime (a best-effort
     * backstop: sessions closed mid-application stay cached until the app
     * ends — acceptable here because the cache holds one tiny pair-score
-    * DataFrame per (session, dir), and unpersisting after the context
-    * stops frees nothing anyway). Data under `dir` is
+    * DataFrame per (session, dir)). The sweep only drops the map entries:
+    * the context has stopped by then, so an unpersist would free nothing
+    * and only log a stack trace from the dead listener bus. Data under `dir` is
     * assumed immutable for the session — rewriting the parquet mid-session
     * would serve stale estimates (the same contract as Spark's own
     * relation cache). */
@@ -258,9 +259,7 @@ object DedupOps {
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          estCache.keys.filter(_._1 eq spark).foreach { k =>
-            estCache.remove(k).foreach(df => df.unpersist(blocking = false))
-          }
+          estCache.keys.filter(_._1 eq spark).foreach(estCache.remove)
           // swept independently of estCache: a FAILED build leaves a lock
           // entry with no cache entry, which would otherwise pin the
           // stopped session in this static map for the JVM lifetime
@@ -303,7 +302,7 @@ object DedupOps {
               // flag is set) sees the entry and removes it, so every
               // interleaving is covered by exactly one of the two sides.
               if (spark.sparkContext.isStopped) {
-                estCache.remove(k).foreach(_.unpersist(blocking = false))
+                estCache.remove(k)
                 buildLocks.remove(k)
               }
               built

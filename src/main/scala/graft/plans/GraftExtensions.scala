@@ -5,12 +5,11 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 
 /** Config-time registration of every graft Catalyst extension, for users
-  * who own the session builder:
+  * who own the session's `SparkSession.Builder`:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftSparkExtensions)   // or:
-  *   .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
+  * builder.withExtensions(new GraftSparkExtensions)   // or:
+  * builder.config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
   * }}}
   *
   * Queries running inside a session someone ELSE built (the driver's

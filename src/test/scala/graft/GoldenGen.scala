@@ -2,13 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Regenerates the committed golden fixtures (test-scope tool, like
-  * [[DevProbe]] — never part of the shipped library). Run after an
-  * INTENDED change to a pinned model query, review the diff, commit:
+/** Regenerates the committed golden fixtures (test-scope tool — never
+  * part of the shipped library). Run after an INTENDED change to a
+  * pinned model query, review the diff, commit:
   *
   *   sbt "Test/runMain graft.GoldenGen"
   *
-  * Uses the SAME shared session as the test suite (local[4,4], 4 shuffle
+  * Uses the SAME shared session as the test suite (local[8, 4], 4 shuffle
   * partitions) so the fixtures and [[GoldenFixtureSpec]] see identical
   * partial-aggregation layouts. */
 object GoldenGen {

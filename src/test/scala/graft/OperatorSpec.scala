@@ -63,9 +63,13 @@ class OperatorSpec extends SparkTestBase {
       s"query gate ran ${completed.get()} of ${names.size} queries")
   }
 
-  test("every oracle key has a registered query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql keys without queries: $missing")
+  test("registry names are unique, and a repeated name fails construction") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size, s"repeated: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.size == names.size)
+    val spec = SparkEntry.registry.head
+    val e = intercept[IllegalArgumentException](SparkEntry.requireUniqueNames(Seq(spec, spec)))
+    assert(e.getMessage.contains(spec.name))
   }
 
   test("twin_of registry: every twin and baseline is a registered query") {

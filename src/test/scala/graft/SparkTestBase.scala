@@ -14,18 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * quieter host landed at 279–359 s — the win is the overlap, the exact
   * wall number is host noise), while shuffle.partitions stays 4 so
   * every partition-count-sensitive assertion sees the same layouts as
-  * before. */
+  * before. Every other conf is the engine's own ([[GraftSession]]). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[8, 4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local("local[8, 4]", 4)
 }
