@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** The one place engine confs live: `Bench`, `Verify`, `Plans` and the
   * test suite all build their session here, so a conf measured in one of
   * them holds for all of them. Master and shuffle partitions are the only
-  * per-caller values. */
+  * per-caller values; a query that needs its own confs takes a
+  * [[derived]] session. */
 object GraftSession {
   def local(master: String, shufflePartitions: Int): SparkSession =
     SparkSession.builder()
@@ -41,4 +43,40 @@ object GraftSession {
       .config("spark.ui.retainedTasks", "1000")
       .config("spark.sql.streaming.numRecentProgressUpdates", "10")
       .getOrCreate()
+
+  /** A clone of `parent` (shared SparkContext, own conf and temp views)
+    * with `confs` set on top of two fixed ones. Every query that needs its
+    * own confs — the streaming scenarios' small state-partition count, the
+    * RocksDB state store, a join rule switched off — derives its session
+    * here and nowhere else.
+    *
+    *  - `spark.sql.artifact.isolation.enabled=false`: Spark gives every
+    *    clone its own artifact UUID, and with isolation on the tasks of
+    *    each clone run under a fresh `ExecutorClassLoader`. The codegen
+    *    cache is keyed by (class loader, code), so every query of a new
+    *    clone recompiled byte-identical classes: 18 per
+    *    `streaming_concat_prefixes` run and 25 per `streaming_window_max`
+    *    run, even with a 10,000-entry cache; with isolation off both
+    *    compile 0 after their first run. graft adds no jars or artifacts
+    *    to any session, so there is nothing to isolate.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` = the
+    *    FileSystem-based manager: without the native Hadoop library the
+    *    default FileContext manager forks `readlink` 8 times per
+    *    checkpoint-file rename (file, temp file and their `.crc`s) and
+    *    `chmod` once per create: 129 process forks per query, averaged
+    *    over `streaming_concat_prefixes` and `streaming_window_max`. The
+    *    FileSystem manager renames with `File.renameTo`, which leaves 33,
+    *    nearly all of them `chmod`. `.crc` files and the checkpoint-file
+    *    checksums stay on.
+    *
+    * Together they took the `stream_ref` benchmark's later pass from
+    * 4.02 s to 2.92 s (median of 10 parent/change pairs on a 4-core VM). */
+  def derived(parent: SparkSession, confs: (String, String)*): SparkSession = {
+    val s = parent.newSession()
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{GraftSession, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -702,8 +702,8 @@ object Extended {
     * row/key conservation); OperatorSpec asserts the on-disk counts. */
   def sinkCompactedParquet(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val frag = java.nio.file.Files.createTempDirectory("graft_frag").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val frag = TempDirs.create("graft_frag").toString
+    val out = TempDirs.create("graft_compact").toString
     Tables.events(spark, dir)
       .select($"event_id", $"event_type", $"value")
       .repartition(64).write.mode("overwrite").parquet(frag)
@@ -825,11 +825,11 @@ object Extended {
     * is a performance rewrite with identical semantics, which is exactly
     * what the oracle checks. */
   def joinBloomPruned(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    s.conf.set("spark.sql.optimizer.runtimeFilter.number.threshold", "10")
+    val s = GraftSession.derived(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.optimizer.runtimeFilter.number.threshold" -> "10")
     import s.implicits._
     val hot = Tables.orders(s, dir).filter($"o_totalprice" > 450000)
     Tables.lineitem(s, dir)
@@ -862,8 +862,7 @@ object Extended {
     * at the scale this models, the dim side does not fit. */
   private val SaltBuckets = 8
   def joinSaltedSkew(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = GraftSession.derived(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     import s.implicits._
     val fact = Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_quantity",
@@ -918,8 +917,7 @@ object Extended {
     * plan-asserted in OperatorSpec. Without it, the fact table pays a full
     * shuffle to meet 10 rows in a sort-merge join. */
   def joinLimitBroadcast(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = GraftSession.derived(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     graft.plans.GraftOps.ensureInjected(s)
     import s.implicits._
     val topOrders = Tables.orders(s, dir)
@@ -1092,7 +1090,7 @@ object Extended {
     import spark.implicits._
     val base = DppFixtureDirs.synchronized {
       DppFixtureDirs.getOrElseUpdate(dir, {
-        val b = java.nio.file.Files.createTempDirectory("graft_dpp")
+        val b = TempDirs.create("graft_dpp")
         Tables.orders(spark, dir)
           .select($"o_orderkey", $"o_totalprice", $"o_orderpriority")
           .write.mode("overwrite").partitionBy("o_orderpriority")
@@ -1137,12 +1135,12 @@ object Extended {
     * splits post-shuffle map output); this query is the runtime half of
     * that story. */
   def joinAqeSkew(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1KB")
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
+    val s = GraftSession.derived(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB")
     import s.implicits._
     // AQE splits a skewed partition along MAPPER boundaries, so the fact
     // side must come from several map tasks — the fixture's single-row-

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -331,7 +331,7 @@ object MultimodalOps {
     * for payloads measured in MB/file, not a row format. */
   def sourceBinaryfile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_binfiles").toString
+    val out = TempDirs.create("graft_binfiles").toString
     Tables.documents(spark, dir)
       .filter($"doc_id" % 37 === 0)
       .select($"doc_id", $"text".cast("binary").as("payload"))

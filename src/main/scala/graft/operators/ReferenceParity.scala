@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.{FailureRegistry, Person, Tables, UnstableData}
+import graft.{FailureRegistry, Person, Tables, TempDirs, UnstableData}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,7 +48,7 @@ object ReferenceParity {
     * `TestFlinkStreams.java:104`). Writes the reference's 3-line fixture to
     * a temp file, then reads it back through the real text source. */
   def sourceReadText(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_src_text")
+    val tmp = TempDirs.create("graft_src_text")
     Files.write(tmp.resolve("input.txt"), "love\nflink\nhardly\n".getBytes("UTF-8"))
     spark.read.text(tmp.resolve("input.txt").toString).orderBy("value")
   }
@@ -61,7 +61,7 @@ object ReferenceParity {
     * names (SURVEY.md §7.4). */
   def sinkTextRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_sink_text").resolve("out").toString
+    val out = TempDirs.create("graft_sink_text").resolve("out").toString
     Seq("love", "flink", "hardly").toDF("value")
       .coalesce(1).write.mode("overwrite").text(out)
     spark.read.text(out).orderBy("value")
@@ -77,7 +77,7 @@ object ReferenceParity {
     * source directly. */
   def sinkPartitionedParquet(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_part_sink").resolve("docs").toString
+    val out = TempDirs.create("graft_part_sink").resolve("docs").toString
     Tables.documents(spark, dir)
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     spark.read.parquet(out)
@@ -99,7 +99,7 @@ object ReferenceParity {
     * roundtrip is the oracle. */
   def sourceCsvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_csv").resolve("nation").toString
+    val out = TempDirs.create("graft_csv").resolve("nation").toString
     Tables.nation(spark, dir)
       .select($"n_nationkey", $"n_name", $"n_regionkey")
       .coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
@@ -117,7 +117,7 @@ object ReferenceParity {
     * the real JSON source. */
   def sourceJsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_jsonl").resolve("region").toString
+    val out = TempDirs.create("graft_jsonl").resolve("region").toString
     Tables.region(spark, dir)
       .select($"r_regionkey", $"r_name")
       .coalesce(1).write.mode("overwrite").json(out)
@@ -141,7 +141,7 @@ object ReferenceParity {
     * the types, not just the values). */
   def sourceOrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_orc").resolve("nation").toString
+    val out = TempDirs.create("graft_orc").resolve("nation").toString
     Tables.nation(spark, dir)
       .select($"n_nationkey", $"n_name", $"n_regionkey")
       .coalesce(1).write.mode("overwrite").orc(out)
@@ -166,7 +166,7 @@ object ReferenceParity {
   def sourceAvroRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val avro = "org.apache.spark.sql.avro.AvroFileFormat"
-    val out = Files.createTempDirectory("graft_avro").resolve("nation").toString
+    val out = TempDirs.create("graft_avro").resolve("nation").toString
     Tables.nation(spark, dir)
       .select($"n_nationkey", $"n_name", $"n_regionkey")
       .coalesce(1).write.mode("overwrite").format(avro).save(out)
@@ -185,7 +185,7 @@ object ReferenceParity {
     * keeps type inference (a per-file extra pass at scale) off. */
   def sourceXmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_xml").resolve("region").toString
+    val out = TempDirs.create("graft_xml").resolve("region").toString
     Tables.region(spark, dir)
       .select($"r_regionkey", $"r_name")
       .coalesce(1).write.mode("overwrite")

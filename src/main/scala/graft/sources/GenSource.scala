@@ -4,6 +4,8 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import graft.GraftSession
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -407,8 +409,7 @@ object GenSourceOps {
     * invariance (plus idempotent replay from offsets) is exactly what
     * the micro-batch contract promises. */
   def streamingDsv2Source(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
     val name = "graft_dsv2s_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = s.readStream.format("graftgen")
@@ -440,8 +441,7 @@ object GenSourceOps {
     * semantics. The result is batching-invariant: watermarks advance
     * monotonically whatever the offset windows did. */
   def streamingDsv2AppendWindows(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
     val name = "graft_dsv2w_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val base = 1700000000L
@@ -480,8 +480,7 @@ object GenSourceOps {
     * This is the production shape for multi-resolution rollups (raw →
     * minute → hour) in one pass instead of one job per tier. */
   def streamingDsv2ChainedWindows(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
     val name = "graft_dsv2c_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val base = 1700000000L

@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.UUID
 import java.util.concurrent.atomic.AtomicReference
 
-import graft.{FailureRegistry, UnstableData}
+import graft.{FailureRegistry, GraftSession, TempDirs, UnstableData}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, ForeachWriter, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -38,20 +38,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingOps {
 
-  /** Cloned session (shared SparkContext, own conf) with a small shuffle-
-    * partition count for the streaming fixture queries: every stateful
-    * streaming operator allocates one state store PER shuffle partition
-    * per micro-batch, so a 32-partition session pays ~100 store
+  /** Shuffle-partition count for the streaming fixture queries, set on
+    * their [[GraftSession.derived]] session: every stateful streaming
+    * operator allocates one state store PER shuffle partition per
+    * micro-batch, so a 32-partition session pays ~100 store
     * initializations and checkpoint dirs for a 5-row fixture stream.
     * Sizing state partitions to the stream volume is a per-query decision
     * on a real cluster too (state partition count is fixed at the first
     * checkpoint, so production queries size it deliberately up front) —
-    * the clone keeps that choice from leaking into batch queries. */
-  private def streamSession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    s
-  }
+    * the derived session keeps that choice from leaking into batch
+    * queries. */
+  val StreamPartitions: (String, String) = "spark.sql.shuffle.partitions" -> "2"
+
+  /** Off-heap state store with incremental checkpoints (see
+    * [[streamingRocksdbAgg]]); `transformWithState` requires it. */
+  val RocksDbStateStore: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Per-key stateful concatenation emitting every prefix in arrival
     * order. Works identically over a batch Dataset (fresh state) and a
@@ -113,7 +115,7 @@ object StreamingOps {
     * returns the drained result — so the correctness gate checks a real
     * streaming execution, not just the batch analog. */
   def streamingWindowMax(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
@@ -142,7 +144,7 @@ object StreamingOps {
     * batches), drained to a memory sink. Single-partition input keeps
     * arrival order deterministic (`Main.java:60-83` semantics). */
   def streamingConcatPrefixes(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val in = MemoryStream[UnstableData](numPartitions = 1)
@@ -173,7 +175,7 @@ object StreamingOps {
     * at-least-once upstream needs. Duplicate rows are exact duplicates,
     * so the kept-row choice is immaterial to the result. */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val in = MemoryStream[(Long, String)](numPartitions = 1)
@@ -205,7 +207,7 @@ object StreamingOps {
     * the output, by design). Exactly the at-least-once upstream contract:
     * duplicates are suppressed within the disorder bound, not forever. */
   def streamingDedupWatermarked(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
@@ -251,9 +253,7 @@ object StreamingOps {
     * StreamingSpec. State carries across micro-batches (complete-mode
     * counts merge batch 1 + 2); results are engine-deterministic longs. */
   def streamingRocksdbAgg(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = GraftSession.derived(spark, StreamPartitions, RocksDbStateStore)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val in = MemoryStream[(Long, Long)](numPartitions = 1)
@@ -350,9 +350,7 @@ object StreamingOps {
     * Key 9's own timer is never passed → stays open, absent from the
     * output. */
   def streamingTwsTimers(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = GraftSession.derived(spark, StreamPartitions, RocksDbStateStore)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
@@ -389,9 +387,7 @@ object StreamingOps {
     * from checkpointed state, proving the cross-batch carry; single-
     * partition input keeps per-key row order deterministic. */
   def streamingTransformWithState(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = GraftSession.derived(spark, StreamPartitions, RocksDbStateStore)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val in = MemoryStream[(Long, Long)](numPartitions = 1)
@@ -431,7 +427,7 @@ object StreamingOps {
     * micro-batch after its impression still matches against the buffered
     * impression state. */
   def streamingStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
@@ -484,7 +480,7 @@ object StreamingOps {
     * rows whose window the watermark has not yet passed stay buffered
     * and absent from the output. */
   def streamingOuterJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
@@ -539,7 +535,7 @@ object StreamingOps {
     * micro-batch — at scale it broadcasts (bounded dimension), so the
     * stream never shuffles for the enrichment. */
   def streamingStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val in = MemoryStream[(Long, Long)]
@@ -603,7 +599,7 @@ object StreamingOps {
   @volatile private[graft] var lastRunExercisedSentinel: Boolean = false
 
   def streamingIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val registry = graft.Tables.documents(s, dir)
@@ -671,7 +667,7 @@ object StreamingOps {
     * session stays open and unemitted, which is the correct append-mode
     * semantics (only CLOSED sessions are final). */
   def streamingSessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
@@ -762,11 +758,11 @@ object StreamingOps {
     * with map-side `max_by` truncation. A compaction pass
     * (sink_compacted_parquet) bounds the directory count. */
   def streamingForeachBatchUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft_fbatch").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fbatch_ckpt").toString
+    val outDir = TempDirs.create("graft_fbatch").toString
+    val ckpt = TempDirs.create("graft_fbatch_ckpt").toString
     val in = MemoryStream[(Long, String, Long)](numPartitions = 1)
     val q = in.toDF().toDF("k", "v", "seq")
       .writeStream
@@ -848,9 +844,7 @@ object StreamingOps {
     * path; chunk boundaries respect the global order so per-key state
     * sees the same prefix the batch window does). */
   def streamingRollingAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = GraftSession.derived(spark, StreamPartitions, RocksDbStateStore)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val fixture = graft.Tables.events(s, dir)
@@ -913,7 +907,7 @@ object StreamingOps {
     * same single-aggregation plan as the batch form, just state-backed.
     * Oracle: VALUES fixture of the final decimated table. */
   def streamingDownsample(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
+    val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val in = MemoryStream[(Long, Long, Long, Double)]

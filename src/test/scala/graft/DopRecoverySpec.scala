@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{BatchCollector, CollectingSink}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -43,7 +41,7 @@ class DopRecoverySpec extends SparkTestBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     FailureRegistry.reset()
     BatchCollector.reset()
-    val ckpt = Files.createTempDirectory(s"graft_dop${dop}_ckpt").toString
+    val ckpt = TempDirs.create(s"graft_dop${dop}_ckpt").toString
     val in = MemoryStream[UnstableData](numPartitions = dop)
     def start() = StreamingOps.concatPrefixes(
         StreamingOps.unstableFilter(in.toDS()))
@@ -140,7 +138,7 @@ class DopRecoverySpec extends SparkTestBase {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckpt = Files.createTempDirectory("graft_midbatch_ckpt").toString
+      val ckpt = TempDirs.create("graft_midbatch_ckpt").toString
       val in = MemoryStream[UnstableData](numPartitions = 2)
       // poison AFTER the stateful concat: group A's final batch-2 prefix
       // "abcd" fails 5 times — 4 in-flight task attempts (each having
@@ -203,7 +201,7 @@ class DopRecoverySpec extends SparkTestBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     FailureRegistry.reset()
     CollectingSink.reset()
-    val ckpt = Files.createTempDirectory("graft_union_ckpt").toString
+    val ckpt = TempDirs.create("graft_union_ckpt").toString
     val in1 = MemoryStream[UnstableData]
     val in2 = MemoryStream[UnstableData]
     // stream 1: a, b, c each fail once (absorbed by task retries);

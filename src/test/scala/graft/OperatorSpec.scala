@@ -1567,7 +1567,7 @@ class OperatorSpec extends SparkTestBase {
     import spark.implicits._
     // a group whose x-values are all equal has n·sxx − sx² = 0: the OLS
     // closed form must come back NULL (guarded), never NaN/Inf
-    val dir = java.nio.file.Files.createTempDirectory("graft_ols").toString
+    val dir = TempDirs.create("graft_ols").toString
     Seq(
       ("A", 5.0, 100.0), ("A", 5.0, 200.0), ("A", 5.0, 300.0), // constant x
       ("B", 1.0, 10.0), ("B", 2.0, 20.0), ("B", 3.0, 30.0))    // exact line
@@ -1756,7 +1756,7 @@ class OperatorSpec extends SparkTestBase {
     val docs = Seq(
       (0L, payload(Set.empty)), (1L, payload(d01)), (2L, payload(d01 ++ d12)),
       (3L, payload(far1)), (4L, payload(far1 ++ d34)), (5L, payload(far2)))
-    val dir = java.nio.file.Files.createTempDirectory("phashcc").toString
+    val dir = TempDirs.create("phashcc").toString
     docs.map { case (id, t) => (id, t, "en", "synthetic", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -1888,7 +1888,7 @@ class OperatorSpec extends SparkTestBase {
     // the global moments agg always produces one state row; the n > 0
     // guard must keep the empty-input shape of the grouped oracle (zero
     // rows) instead of unpacking 2080 cells with a 0/0 covariance
-    val empty = java.nio.file.Files.createTempDirectory("cov_empty").toString
+    val empty = TempDirs.create("cov_empty").toString
     Tables.embeddings(spark, sfDir).limit(0)
       .write.mode("overwrite").parquet(s"$empty/embeddings.parquet")
     assert(SparkEntry.queries("embedding_covariance")(spark, empty).count() == 0L)
@@ -2190,7 +2190,7 @@ class OperatorSpec extends SparkTestBase {
               else 10.0 + rnd.nextInt(5) * 0.25
       (i, new java.sql.Timestamp(ts / 1000), i % 17, s"t${i % 3}", v, "{}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("tiesafe").toString
+    val dir = TempDirs.create("tiesafe").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
     val w = Window.partitionBy($"event_type")

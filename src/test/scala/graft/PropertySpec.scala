@@ -159,7 +159,7 @@ class PropertySpec extends SparkTestBase {
       // exact duplicates: same TEXT, new ids (exercise canonicalization)
       val dups = bases.take(6).map { case (id, text) => (200L + id, text) }
       val docs = bases ++ mutated ++ dups
-      val dir = java.nio.file.Files.createTempDirectory(s"ppjoin_prop$round").toString
+      val dir = TempDirs.create(s"ppjoin_prop$round").toString
       docs.toDF("doc_id", "text").repartition(3)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val gotRows = graft.operators.DedupOps.dedupPrefixFilter(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.CollectingSink
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -40,7 +38,7 @@ class RecoverySpec extends SparkTestBase {
     FailureRegistry.reset()
     CollectingSink.reset()
     StreamingOps.BatchCollector.reset()
-    val ckpt = Files.createTempDirectory("graft_recover_ckpt").toString
+    val ckpt = TempDirs.create("graft_recover_ckpt").toString
     val in = MemoryStream[UnstableData]
     // batch 1 clean; batch 2 contains one element failing past the task
     // retry budget (memory sink cannot recover from a checkpoint, so the
@@ -76,7 +74,7 @@ class RecoverySpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     FailureRegistry.reset()
     CollectingSink.reset()
-    val ckpt = Files.createTempDirectory("graft_sink_ckpt").toString
+    val ckpt = TempDirs.create("graft_sink_ckpt").toString
     val in = MemoryStream[UnstableData]
     // d fails once mid-batch; a/b/c may already be written by the sink
     // when the failure aborts the batch → replay duplicates them

@@ -97,7 +97,7 @@ class StreamingSpec extends SparkTestBase {
     // window and check totals equal the batch aggregation
     val batch = Tables.events(spark, sfDir)
     // FileStreamSource needs a directory; stage the single parquet file
-    val dir = Files.createTempDirectory("graft_events_stream")
+    val dir = TempDirs.create("graft_events_stream")
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"))
     // stream with whatever raw ts type the file carries (nanos-long or
@@ -253,9 +253,9 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming text file roundtrip (S3+O2)") {
     import spark.implicits._
-    val inDir = Files.createTempDirectory("graft_stream_in").toString
-    val outDir = Files.createTempDirectory("graft_stream_out").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val inDir = TempDirs.create("graft_stream_in").toString
+    val outDir = TempDirs.create("graft_stream_out").toString
+    val ckpt = TempDirs.create("graft_stream_ckpt").toString
     Seq("love", "flink", "hardly").toDF("value")
       .coalesce(1).write.mode("overwrite").text(inDir)
     val q = spark.readStream.text(inDir)
@@ -269,10 +269,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("RocksDB state store backend actually carries the streaming state") {
     import scala.jdk.CollectionConverters._
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = GraftSession.derived(spark,
+      StreamingOps.StreamPartitions, StreamingOps.RocksDbStateStore)
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val in = MemoryStream[(Long, Long)](numPartitions = 1)
@@ -292,12 +290,11 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("foreachBatch upsert sink: restart from the checkpoint, no duplicates in merge-on-read") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val outDir = Files.createTempDirectory("graft_fb_recover").toString
-    val ckpt = Files.createTempDirectory("graft_fb_recover_ckpt").toString
+    val outDir = TempDirs.create("graft_fb_recover").toString
+    val ckpt = TempDirs.create("graft_fb_recover_ckpt").toString
     val in = MemoryStream[(Long, String, Long)](numPartitions = 1)
     def start() = in.toDF().toDF("k", "v", "seq")
       .writeStream.option("checkpointLocation", ckpt)
@@ -330,8 +327,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("graftgen DSv2 micro-batch stream delivers all rows across multiple real batches") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
     val q = s.readStream.format("graftgen")
       .option("n", "1000").option("batchRows", "300").option("parts", "2")
@@ -374,11 +370,10 @@ class StreamingSpec extends SparkTestBase {
     // latest offset ONCE up front — through the ReadAllAvailable limit
     // path — then processes up to it and stops. One run must deliver
     // the whole interval exactly once, not one batchRows step.
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
-    val outDir = Files.createTempDirectory("graft_gen_avail").toString
-    val ckpt = Files.createTempDirectory("graft_gen_avail_ckpt").toString
+    val outDir = TempDirs.create("graft_gen_avail").toString
+    val ckpt = TempDirs.create("graft_gen_avail_ckpt").toString
     val q = s.readStream.format("graftgen")
       .option("n", "1000").option("batchRows", "300").option("parts", "2")
       .load()
@@ -406,11 +401,10 @@ class StreamingSpec extends SparkTestBase {
     // reopens the SAME checkpoint with the interval grown to 1000 and
     // must emit EXACTLY [300, 1000): a regressing source would stall at
     // 300 total, a replaying one would duplicate [0, 300).
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
-    val ckpt = Files.createTempDirectory("graft_gen_ckpt").toString
-    val outDir = Files.createTempDirectory("graft_gen_out").toString
+    val ckpt = TempDirs.create("graft_gen_ckpt").toString
+    val outDir = TempDirs.create("graft_gen_out").toString
     def runOnce(n: Int): Unit = {
       val q = s.readStream.format("graftgen")
         .option("n", n.toString).option("batchRows", "300").option("parts", "2")
@@ -483,8 +477,7 @@ class StreamingSpec extends SparkTestBase {
     // executed streaming query, not a tier-2 recomputation from scratch.
     // StreamingQueryProgress.stateOperators reports exactly the stateful
     // operators of the executed plan, one entry per state store.
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
     val name = "chained_plan_probe"
     val base = 1700000000L
