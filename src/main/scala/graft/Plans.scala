@@ -235,8 +235,8 @@ object Plans {
 
   /** Shape contracts for the one-shot SHARED-STAGE builds the benchmark
     * times as their own ledger lines (r12, judge task 2): the stages are
-    * memoized + eagerly materialized inside [[graft.operators.DedupOps
-    * .cachedDf]], so their post-build explain shows only the cached
+    * memoized + eagerly materialized inside [[graft.stages.Stages.memo]],
+    * so their post-build explain shows only the cached
     * result — the BUILD's scale story is stated here as a contract the
     * source must honor, with the measured substage decomposition where
     * one was profiled this round. */

@@ -45,12 +45,13 @@ object SparkEntry {
   private def q(name: String, build: Build, oracle: String): QuerySpec =
     QuerySpec(name, build, Some(oracle), None)
 
-  /** The registry as given, after checking that no name repeats: the
-    * derived maps would otherwise keep one entry per name silently. */
-  private[graft] def requireUniqueNames(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
-    val dups = specs.groupBy(_.name).collect { case (n, s) if s.size > 1 => n }
-    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
-    specs
+  /** The entries as given, after checking that no name repeats: a map
+    * derived by name would otherwise keep one entry per name silently.
+    * Guards this registry and [[graft.stages.Stages.list]]. */
+  private[graft] def requireUniqueNames[A](entries: Seq[A])(name: A => String): Seq[A] = {
+    val dups = entries.groupBy(name).collect { case (n, s) if s.size > 1 => n }
+    require(dups.isEmpty, s"duplicate names: ${dups.toSeq.sorted.mkString(", ")}")
+    entries
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -511,7 +512,7 @@ object SparkEntry {
     q("agg_rfm_segments", ProfilingOps.aggRfmSegments, ProfilingOps.aggRfmSegmentsSql),
     // model-based anomaly detection (no oracle — rows-only check)
     q("anomaly_kmeans", AnomalyOps.anomalyKmeans),
-  ))
+  ))(_.name)
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(s => s.name -> s.build).toMap

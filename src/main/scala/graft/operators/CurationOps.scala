@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.stages.Stages
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -428,7 +429,7 @@ object CurationOps {
     // budget class as shingle_sets — and every consumer now reads the
     // aggregation instead of re-exploding the token stream. Guide §2.4
     // (share one exchange), §5 (cache only what is reused and bounded).
-    DedupOps.cachedDf(spark, s"tokstats:$dir") {
+    Stages.memo(spark, s"tokstats:$dir") {
       import spark.implicits._
       Tables.documents(spark, dir)
         .select($"doc_id", explode(split(lower($"text"), " ")).as("token"))
@@ -454,7 +455,7 @@ object CurationOps {
     * scale). One skinny row per scoreable document, so the persist is
     * doc-count-bounded. Guide §2.4. */
   private[graft] def decontamStats(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"decontam:$dir") {
+    Stages.memo(spark, s"decontam:$dir") {
       import spark.implicits._
       val sh = DedupOps.sharedShingles(spark, dir)
       val bench = sh.filter($"doc_id" % 97 === 0)
@@ -1277,10 +1278,6 @@ object CurationOps {
       |FROM ranked r JOIN plan p USING (lang)
       |ORDER BY r.doc_id""".stripMargin
 
-  /** (session, dir) → registered probe-function name, so the Bloom build
-    * job runs once per session/dir instead of once per query invocation. */
-  private val bloomFns = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Bloom-filter decontamination (`curation_decontaminate_bloom`) — the
     * 100 TB form of [[curationDecontaminate]]: instead of joining every
     * corpus shingle against the benchmark shingle table, build ONE
@@ -1301,18 +1298,8 @@ object CurationOps {
     * OperatorSpec against the exact query. */
   def curationDecontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sh = DedupOps.sharedShingles(spark, dir)
-      .select($"doc_id",
-        conv(substring(hex($"m"), 1, 15), 16, 10).cast("long").as("h60"))
-    val key = s"${System.identityHashCode(spark)}:$dir"
-    val fn = bloomFns.computeIfAbsent(key, { _ =>
-      val name = "graft_bloom_" + (dir.hashCode.toLong & 0xffffffffL).toHexString
-      val bench = sh.filter($"doc_id" % 97 === 0).select($"h60").distinct()
-      graft.functions.BloomMightContain.buildAndRegister(
-        spark, name, bench, math.max(1L, bench.count()), 0.01)
-      name
-    })
-    sh.filter($"doc_id" % 97 =!= 0)
+    val fn = decontamBloomFn(spark, dir)
+    shingleH60(spark, dir).filter($"doc_id" % 97 =!= 0)
       .select($"doc_id", expr(s"$fn(h60)").as("hit"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_shingles"),
@@ -1322,6 +1309,26 @@ object CurationOps {
           .otherwise("kept").as("decision"))
       .orderBy($"doc_id")
   }
+
+  private def shingleH60(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    DedupOps.sharedShingles(spark, dir)
+      .select($"doc_id",
+        conv(substring(hex($"m"), 1, 15), 16, 10).cast("long").as("h60"))
+  }
+
+  /** Name of the registered benchmark-key probe, memoized so the Bloom
+    * build job runs once per session/dir instead of once per query
+    * invocation. */
+  private[graft] def decontamBloomFn(spark: SparkSession, dir: String): String =
+    Stages.memo(spark, s"bloom:$dir") {
+      import spark.implicits._
+      val name = "graft_bloom_" + (dir.hashCode.toLong & 0xffffffffL).toHexString
+      val bench = shingleH60(spark, dir).filter($"doc_id" % 97 === 0).select($"h60").distinct()
+      graft.functions.BloomMightContain.buildAndRegister(
+        spark, name, bench, math.max(1L, bench.count()), 0.01)
+      name
+    }
 
   /** Shard count for [[curationShardManifest]] — 8 output shards, the
     * bounded key space the manifest aggregates into. */

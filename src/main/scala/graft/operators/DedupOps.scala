@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.stages.{SharedStage, Stages}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -144,11 +145,6 @@ object DedupOps {
       |JOIN first_in_batch f ON f.content_hash = b.content_hash
       |ORDER BY b.doc_id""".stripMargin
 
-  /** (session, dir) → registered probe-function name, so the registry
-    * Bloom build runs once per session/dir, not once per invocation. */
-  private val incrBloomFns =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Bloom-prefiltered incremental dedup (`dedup_incremental_bloom`) —
     * the 100 TB plan for [[dedupIncremental]]'s registry join, with
     * IDENTICAL output (full oracle parity, unlike the sketch queries):
@@ -170,20 +166,8 @@ object DedupOps {
     * first-occurrence join is batch-internal and untouched. */
   def dedupIncrementalBloom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val hashed = Tables.documents(spark, dir)
-      .select($"doc_id", md5(lower($"text")).as("content_hash"))
-      .withColumn("h60",
-        conv(substring($"content_hash", 1, 15), 16, 10).cast("long"))
-    val key = s"${System.identityHashCode(spark)}:$dir"
-    val fn = incrBloomFns.computeIfAbsent(key, { _ =>
-      val name = "graft_bloom_incr_" +
-        (dir.hashCode.toLong & 0xffffffffL).toHexString
-      val registry = hashed.filter($"doc_id" % 10 < 7)
-        .select($"h60").distinct()
-      graft.functions.BloomMightContain.buildAndRegister(
-        spark, name, registry, math.max(1L, registry.count()), 0.01)
-      name
-    })
+    val hashed = hashedDocs(spark, dir)
+    val fn = incrBloomFn(spark, dir)
     val existing = hashed.filter($"doc_id" % 10 < 7)
       .select($"content_hash").distinct()
       .withColumn("in_corpus", lit(1))
@@ -206,6 +190,28 @@ object DedupOps {
       .transform(Presentation.ordered(_, $"doc_id"))
   }
 
+  private def hashedDocs(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+      .select($"doc_id", md5(lower($"text")).as("content_hash"))
+      .withColumn("h60",
+        conv(substring($"content_hash", 1, 15), 16, 10).cast("long"))
+  }
+
+  /** Name of the registered registry-key probe, memoized so the registry
+    * Bloom build runs once per session/dir, not once per invocation. */
+  private[graft] def incrBloomFn(spark: SparkSession, dir: String): String =
+    Stages.memo(spark, s"bloomincr:$dir") {
+      import spark.implicits._
+      val name = "graft_bloom_incr_" +
+        (dir.hashCode.toLong & 0xffffffffL).toHexString
+      val registry = hashedDocs(spark, dir).filter($"doc_id" % 10 < 7)
+        .select($"h60").distinct()
+      graft.functions.BloomMightContain.buildAndRegister(
+        spark, name, registry, math.max(1L, registry.count()), 0.01)
+      name
+    }
+
   /** Same oracle as the exact query — the Bloom is a plan-level
     * optimization that cannot change the result. */
   val dedupIncrementalBloomSql: String = dedupIncrementalSql
@@ -224,93 +230,6 @@ object DedupOps {
     (derive("minhash_a_", 28), derive("minhash_b_", 30))
   }
 
-  /** MinHash signatures: one md5 per shingle → 32-bit base hash → 16
-    * universal-hash permutations `(a_i*h + b_i) mod p` (cheap codegen'd
-    * arithmetic instead of 16 md5 calls per shingle), banded 4×4 for LSH;
-    * candidates share a band, then are scored by signature agreement
-    * (est. Jaccard = matching minhashes / 16) with a 0.5 cutoff.
-    *
-    * Shape note: all 16 minima come out of ONE hash aggregation over the
-    * shingle stream (16 agg columns) — no 16× row explosion, one shuffle
-    * keyed by doc_id. Band keys and the signature-agreement count are
-    * plain column expressions over those 16 columns (fully codegen). */
-  /** Memoized, persisted candidate-estimate stage `(doc_a, doc_b,
-    * est_jaccard)` shared by [[dedupMinhashLsh]] and [[dedupEditDistance]]
-    * — the sketch DAG (shingle → signature → bands → bucket join → score)
-    * is computed once per (session, dir) and its tiny output cached, so
-    * the verification query never recomputes the full sketch. */
-  private val estCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val estCacheHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** Evict every cached estimate of `spark` when its SparkContext ends,
-    * bounding the cache to the APPLICATION's lifetime (a best-effort
-    * backstop: sessions closed mid-application stay cached until the app
-    * ends — acceptable here because the cache holds one tiny pair-score
-    * DataFrame per (session, dir)). The sweep only drops the map entries:
-    * the context has stopped by then, so an unpersist would free nothing
-    * and only log a stack trace from the dead listener bus. Data under `dir` is
-    * assumed immutable for the session — rewriting the parquet mid-session
-    * would serve stale estimates (the same contract as Spark's own
-    * relation cache). */
-  private def hookEviction(spark: SparkSession): Unit =
-    if (estCacheHooked.add(spark)) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          estCache.keys.filter(_._1 eq spark).foreach(estCache.remove)
-          // swept independently of estCache: a FAILED build leaves a lock
-          // entry with no cache entry, which would otherwise pin the
-          // stopped session in this static map for the JVM lifetime
-          buildLocks.keySet.removeIf(_._1 eq spark)
-          estCacheHooked.remove(spark)
-        }
-      })
-    }
-
-  /** Race-safe per-key memoization of a PERSISTED DataFrame: the build
-    * is SERIALIZED per key under a double-checked lock, so exactly one
-    * caller ever constructs (and persists) it and concurrent first
-    * callers block for the finished result — which is what they want
-    * anyway. A lose-and-unpersist scheme would be wrong here, not just
-    * wasteful: Spark's CacheManager is keyed by the canonicalized PLAN,
-    * so two identical builds share one cache entry and the loser's
-    * unpersist would evict the winner's data too, leaving the memoized
-    * DataFrame silently uncached. */
-  private val buildLocks =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]()
-
-  private[operators] def cachedDf(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    hookEviction(spark)
-    val k = (spark, key)
-    estCache.get(k) match {
-      case Some(df) => df
-      case None =>
-        val lock = buildLocks.computeIfAbsent(k, _ => new Object)
-        lock.synchronized {
-          estCache.get(k) match {
-            case Some(df) => df
-            case None =>
-              val built = build
-              estCache.put(k, built)
-              // if the application ended while the build was in flight the
-              // eviction sweep may have already run and missed this entry,
-              // which would pin the stopped session in the static map for
-              // the JVM lifetime — re-check and drop. If stop() begins
-              // AFTER this check, the sweep (which fires after the stopped
-              // flag is set) sees the entry and removes it, so every
-              // interleaving is covered by exactly one of the two sides.
-              if (spark.sparkContext.isStopped) {
-                estCache.remove(k)
-                buildLocks.remove(k)
-              }
-              built
-          }
-        }
-    }
-  }
-
   /** Memoized, PERSISTED shingle set shared by every shingle consumer —
     * [[minhashEstimates]], [[dedupNgramJaccard]], [[dedupPrefixFilter]]
     * and [[CurationOps.contaminationNgramOverlap]]. Before this stage
@@ -321,10 +240,10 @@ object DedupOps {
     * than evicts at 100 TB shard sizes) and held for the application —
     * the set is re-read by curation queries long after the dedup
     * sketches are built, so an eager release would just re-run the scan;
-    * app-end eviction is the [[hookEviction]] backstop shared with every
+    * app-end eviction is the [[Stages.memo]] backstop shared with every
     * other cached stage. */
   private[graft] def sharedShingles(spark: SparkSession, dir: String): DataFrame =
-    cachedDf(spark, s"shingles:$dir") { shingleSets(spark, dir).persist() }
+    Stages.memo(spark, s"shingles:$dir") { shingleSets(spark, dir).persist() }
 
   /** Memoized 60-bit inverted shingle index `(doc_id, h, df)` — the
     * hashed projection of [[sharedShingles]] with each shingle's global
@@ -347,7 +266,7 @@ object DedupOps {
     * collision crossover past 10¹⁶ pair-comparisons; the DuckDB oracle
     * derives the identical 60-bit ints. */
   private[graft] def shingleIndex(spark: SparkSession, dir: String): DataFrame =
-    cachedDf(spark, s"shidx:$dir") {
+    Stages.memo(spark, s"shidx:$dir") {
       import spark.implicits._
       val sh = sharedShingles(spark, dir)
         .select($"doc_id",
@@ -360,15 +279,31 @@ object DedupOps {
   /** Memoized per-document FULL shingle-set sizes `(doc_id, nsh)` — one
     * row per document, shared by every consumer of [[shingleIndex]]. */
   private[graft] def shingleSizes(spark: SparkSession, dir: String): DataFrame =
-    cachedDf(spark, s"shsizes:$dir") {
+    Stages.memo(spark, s"shsizes:$dir") {
       import spark.implicits._
       shingleIndex(spark, dir)
         .groupBy($"doc_id").agg(count(lit(1)).as("nsh"))
         .persist()
     }
 
+  /** MinHash signatures: one md5 per shingle → 32-bit base hash → 16
+    * universal-hash permutations `(a_i*h + b_i) mod p` (cheap codegen'd
+    * arithmetic instead of 16 md5 calls per shingle), banded 4×4 for LSH;
+    * candidates share a band, then are scored by signature agreement
+    * (est. Jaccard = matching minhashes / 16) with a 0.5 cutoff.
+    *
+    * Shape note: all 16 minima come out of ONE hash aggregation over the
+    * shingle stream (16 agg columns) — no 16× row explosion, one shuffle
+    * keyed by doc_id. Band keys and the signature-agreement count are
+    * plain column expressions over those 16 columns (fully codegen).
+    *
+    * Memoized, persisted candidate-estimate stage `(doc_a, doc_b,
+    * est_jaccard)` shared by [[dedupMinhashLsh]] and [[dedupEditDistance]]
+    * — the sketch DAG (shingle → signature → bands → bucket join → score)
+    * is computed once per (session, dir) and its tiny output cached, so
+    * the verification query never recomputes the full sketch. */
   private[graft] def minhashEstimates(spark: SparkSession, dir: String): DataFrame =
-    cachedDf(spark, s"minhash:$dir") {
+    Stages.memo(spark, s"minhash:$dir") {
       import spark.implicits._
       // hex() yields uppercase, conv() is case-insensitive — same h32 the
       // oracle derives from its lowercase md5 string
@@ -496,8 +431,8 @@ object DedupOps {
     * windows over it, so without the cache each caller re-ran the full
     * token explode+agg. The cached output is one (long, long) row per
     * document — tiny. */
-  private[operators] def simhashSketch(spark: SparkSession, dir: String): DataFrame =
-    cachedDf(spark, s"simhash:$dir") {
+  private[graft] def simhashSketch(spark: SparkSession, dir: String): DataFrame =
+    Stages.memo(spark, s"simhash:$dir") {
       import spark.implicits._
       val hv = Tables.documents(spark, dir)
         .select($"doc_id", explode(split(lower($"text"), " ")).as("w"))
@@ -591,7 +526,7 @@ object DedupOps {
     // action materializes it) and its only inputs are the session-shared
     // [[shingleIndex]]/[[shingleSizes]] caches, so nothing here needs an
     // eager materialize-and-release cycle of its own.
-    val pairs = cachedDf(spark, s"ngram:$dir") {
+    val pairs = Stages.memo(spark, s"ngram:$dir") {
       // the hashed + df-attached inverted index is the session-shared
       // [[shingleIndex]] stage (60-bit md5-derived ints: 8-byte join/
       // shuffle keys instead of ~30-byte strings; the oracle derives the
@@ -693,7 +628,7 @@ object DedupOps {
     *    only, same as the oracle), `m` = ⌈4·nsh/5⌉ (the integer
     *    intersection threshold: 5·n ≥ 4·s ⟺ n ≥ ⌈4s/5⌉). */
   private[graft] def containmentTok(spark: SparkSession, dir: String): DataFrame =
-    cachedDf(spark, s"ctok:$dir") {
+    Stages.memo(spark, s"ctok:$dir") {
       import spark.implicits._
       // collect_set, not collect_list: the SortedIntersectCount verify
       // kernel CONTRACTS duplicate-free arrays, and while shingleIndex
@@ -831,8 +766,8 @@ object DedupOps {
     * each paid 11-12 s. The finished span table is tiny (spans per doc),
     * so it persists whole and the pair shares one build, the
     * `dup_windows`/`exact_topk` pattern. */
-  private def repeatedSpans(spark: SparkSession, dir: String): DataFrame =
-    cachedDf(spark, s"dupspans:$dir") { buildRepeatedSpans(spark, dir).persist() }
+  private[graft] def repeatedSpans(spark: SparkSession, dir: String): DataFrame =
+    Stages.memo(spark, s"dupspans:$dir") { buildRepeatedSpans(spark, dir).persist() }
 
   private def buildRepeatedSpans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1051,7 +986,7 @@ object DedupOps {
     // persisted: feeds four plan branches (both self-join sides, the dup
     // set, and the final status join) — without the cache the
     // assign⋈quantized shuffle join would recompute per branch
-    val withVec = cachedDf(spark, s"$cacheKey:$dir") {
+    val withVec = Stages.memo(spark, s"$cacheKey:$dir") {
       assign.join(n, "vec_id").persist()
     }
     val aSide = withVec.select($"cluster_id", $"vec_id".as("vec_a"),
@@ -1154,7 +1089,7 @@ object DedupOps {
     // result instead of stacking a fresh pair of persisted shingle
     // intermediates per call — tok/pfx are eagerly materialized into the
     // result below and unpersisted before this block returns
-    val pairs = cachedDf(spark, s"ppjoin:$dir") {
+    val pairs = Stages.memo(spark, s"ppjoin:$dir") {
       // every join/group key is a 60-bit md5-derived long, not the 3-word
       // shingle string: the rank join, the prefix index/probe join and
       // both verify joins shuffle 8-byte keys instead of
@@ -1412,157 +1347,9 @@ object DedupOps {
        |ORDER BY threshold_x100""".stripMargin
   }
 
-  /** One benchmark-visible shared stage: `build()` returns the memoized
-    * persisted DataFrame (constructing + caching it on first call), and
-    * `memoKeys` names every [[cachedDf]] entry that first call populates —
-    * the handle [[evictStage]] needs to force a genuine from-scratch
-    * rebuild (a bare `unpersist` on the returned DataFrame would leave the
-    * memo map pointing at an uncached plan and measure a different, worse
-    * recompute than the real builder, which persists its own
-    * intermediates). `extraEvict` drops any NON-cachedDf state the first
-    * build populated (e.g. a driver-side model memo) so a contamination
-    * retry re-measures the full build, not a tail of it. */
-  final case class SharedStage(
-    name: String, memoKeys: Seq[String], build: () => DataFrame,
-    extraEvict: () => Unit = () => ())
-
-  /** Drop the named memoized stages so the next accessor call re-runs the
-    * full builder. Eviction happens under the same per-key build lock as
-    * [[cachedDf]], and strictly BEFORE any rebuild is attempted: Spark's
-    * CacheManager is keyed by the canonicalized plan, so unpersisting the
-    * old DataFrame after an identical new one is persisted would evict
-    * the new one's data too. Blocking unpersist, so the freed blocks
-    * cannot bill their removal churn to the timed rebuild. */
-  private[graft] def evictStage(spark: SparkSession, memoKeys: Seq[String]): Unit =
-    memoKeys.foreach { key =>
-      val k = (spark, key)
-      val lock = buildLocks.computeIfAbsent(k, _ => new Object)
-      lock.synchronized {
-        estCache.remove(k).foreach(_.unpersist(blocking = true))
-      }
-    }
-
-  /** Every memoized shared stage the benchmark materializes (and times)
-    * up front, in dependency order — the shingle set FIRST so every
-    * downstream build line measures only its OWN work (in r8 the shingle
-    * explode+distinct ran inside minhash, ngram and ppjoin each,
-    * inflating all three). Building these BEFORE timing individual
-    * queries means no query's ledger line silently includes another
-    * family member's sketch build — the first-toucher-pays attribution
-    * noise that made unchanged queries appear to regress between rounds.
-    *
-    * `memoKeys` must list every cache entry the stage's first build
-    * populates (e.g. `kmeans_assign` trains the centroids too), or a
-    * contamination retry would re-time only the cheap tail of the stage
-    * and under-report an honest regression. */
-  def sharedStageList(spark: SparkSession, dir: String): Seq[SharedStage] = Seq(
-    SharedStage("shingle_sets", Seq(s"shingles:$dir"),
-      () => sharedShingles(spark, dir)),
-    // 60-bit df-attached inverted index + per-doc sizes (r12, widened
-    // r13): consumed
-    // by ngram Jaccard, containment, and LSH tuning — previously each
-    // re-derived the md5 projection and df aggregate per plan branch
-    // (containment on both sides of its self-join). One stage: the sizes
-    // table is a single cheap aggregate over the index and they always
-    // build together.
-    SharedStage("shingle_index", Seq(s"shidx:$dir", s"shsizes:$dir"),
-      () => shingleSizes(spark, dir)),
-    // per-doc capped (df,h)-ranked + h-sorted arrays for the containment
-    // prefix/positional join (r15) — one linear collect+sort over the
-    // capped index, its own line so the containment query's per-run cost
-    // is the join+verify it actually re-executes
-    SharedStage("containment_tok", Seq(s"ctok:$dir"),
-      () => containmentTok(spark, dir)),
-    SharedStage("minhash_estimates", Seq(s"minhash:$dir"),
-      () => minhashEstimates(spark, dir)),
-    SharedStage("simhash_sketch", Seq(s"simhash:$dir"),
-      () => simhashSketch(spark, dir)),
-    SharedStage("ngram_pairs", Seq(s"ngram:$dir"),
-      () => dedupNgramJaccard(spark, dir)),
-    SharedStage("ppjoin_pairs", Seq(s"ppjoin:$dir"),
-      () => dedupPrefixFilter(spark, dir)),
-    // CC label fixpoint (r10): five consumers (components, canonical
-    // pick, cluster sizes, near-dup extract, per-source dedup rates) —
-    // the iterative build gets its own line for the same reason
-    SharedStage("cc_labels", Seq(s"cc_labels:$dir"),
-      () => PipelineOps.dedupConnectedComponents(spark, dir)),
-    // per-doc 256-bit perceptual-hash quarters (r16): consumed by the
-    // phash pair/cluster twins from up to five plan branches each —
-    // un-memoized, every branch re-ran scan + kernel + 8-col exchange
-    SharedStage("phash_members", Seq(s"phashmem:$dir"),
-      () => MultimodalOps.phashMembers(spark, dir)),
-    SharedStage("dup_windows", Seq(s"dupwins:$dir"),
-      () => TextOps.dupWindows(spark, dir)),
-    // repeated-span lattice (r11): shared by the span report + removal
-    SharedStage("dup_spans", Seq(s"dupspans:$dir"),
-      () => repeatedSpans(spark, dir)),
-    SharedStage("winnow_fps", Seq(s"winnow:$dir"),
-      () => TextOps.winnowFps(spark, dir)),
-    SharedStage("quantized_vectors", Seq(s"quantized:$dir"),
-      () => SimilarityOps.quantized(spark, dir)),
-    // brute-force exact top-5 (r11): the ground-truth side of
-    // similarity_topk and both recall scorecards — the O(n²/100) score
-    // join runs once here instead of per consumer per bench round
-    SharedStage("exact_topk", Seq(s"exacttopk:$dir"),
-      () => SimilarityOps.exactTopk(spark, dir)),
-    SharedStage("ivf_assign", Seq(s"ivfassign:$dir"),
-      () => SimilarityOps.ivfAssign(spark, dir)),
-    SharedStage("ivf_candidates", Seq(s"ivfcand:$dir:4"),
-      () => SimilarityOps.ivfCandidates(spark, dir)),
-    // trained-model stages (r10): k-means coarse quantizer shared by
-    // dedup_semantic + similarity_ivf_trained, and the Lloyd-trained
-    // PQ codebook — without their own lines the TRAINING cost would
-    // bill to whichever consumer runs first alphabetically. The assign
-    // stage's first build also trains the centroids (kmcent), so both
-    // keys evict together.
-    SharedStage("kmeans_assign", Seq(s"kmassign:$dir", s"kmcent:$dir"),
-      () => SimilarityOps.kmeansAssign(spark, dir)),
-    SharedStage("pq_codebook_trained", Seq(s"pqcbt:$dir"),
-      () => SimilarityOps.pqCodebookTrained(spark, dir)),
-    // per-variant top-3 ANN results (r11): each is #queries×3 rows read
-    // by three consumers (the variant's own query + both recall
-    // scorecards) — built once here so the candidate join + window
-    // re-rank stops re-running per consumer per round
-    SharedStage("ann_lsh", Seq(s"annres:lsh:$dir"),
-      () => SimilarityOps.similarityAnnLsh(spark, dir)),
-    SharedStage("ann_ivf", Seq(s"annres:ivf:$dir"),
-      () => SimilarityOps.similarityIvf(spark, dir)),
-    SharedStage("ann_ivf_trained", Seq(s"annres:ivf_trained:$dir"),
-      () => SimilarityOps.similarityIvfTrained(spark, dir)),
-    SharedStage("ann_ivfpq", Seq(s"annres:ivfpq:$dir"),
-      () => SimilarityOps.similarityIvfPq(spark, dir)),
-    SharedStage("ann_ivfpq_trained", Seq(s"annres:ivfpq_trained:$dir"),
-      () => SimilarityOps.similarityIvfPqTrained(spark, dir)),
-    // k-NN edge list + its canonical/oriented derivations (r12): consumed
-    // by both graph queries — without their own line the same-cell
-    // candidate join billed to whichever graph query ran first
-    // alphabetically (the r11 pagerank 1.5→3.9 s "move"). One stage, not
-    // three: the derivations are single cheap shuffles over the cached
-    // list and always build together.
-    SharedStage("knn_edges",
-      Seq(s"knnedges:$dir", s"knnund:$dir", s"knnoriented:$dir"),
-      () => GraphOps.knnOriented(spark, dir)),
-    // encoded word-type table (r11): shared by text_bpe_encode +
-    // text_tokenizer_fertility — the 8-merge fold tower executes once
-    // here instead of (interpreted, under an Expand ×2) per consumer
-    SharedStage("bpe_types", Seq(s"bpetypes:$dir"),
-      () => TextOps.bpeEncodedTypes(spark, dir),
-      // the first build also TRAINS the merge table into TextOps'
-      // driver-side memo; a retry must drop it too or the rebuild
-      // re-times only the encode tail and under-reports the stage
-      extraEvict = () => TextOps.evictBpeMergeMemo(spark, dir)),
-    // per-document token stats (r17): five consumers — repetition score,
-    // quality gate, both training extracts, and the funnel (via the
-    // gate) — each recomputed the tokenize + two-aggregation chain
-    SharedStage("token_stats", Seq(s"tokstats:$dir"),
-      () => CurationOps.tokenStatsStage(spark, dir)),
-    // per-document contamination counts (r17): the shingles ⋈ benchmark
-    // join + per-doc aggregation, shared by the overlap report, the
-    // decontamination decision, the by-source rollup, and the funnel.
-    // AFTER shingle_sets in this list so its line measures only the
-    // join+agg, not the shingle build.
-    SharedStage("decontam_stats", Seq(s"decontam:$dir"),
-      () => CurationOps.decontamStats(spark, dir)))
+  /** Forwards to [[graft.stages.Stages.list]]; `perfbench` calls this name. */
+  def sharedStageList(spark: SparkSession, dir: String): Seq[SharedStage] =
+    Stages.list(spark, dir)
 
   /** LSH banding-threshold tuning report (`dedup_lsh_tuning`): every
     * MinHash candidate pair verified against EXACT shingle Jaccard,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.stages.Stages
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +56,7 @@ object GraphOps {
     * and the triangle pass 3×, so both read the tiny cached 3n-row list
     * instead of re-running the same-cell join. */
   private[operators] def knnEdges(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"knnedges:$dir") {
+    Stages.memo(spark, s"knnedges:$dir") {
       SimilarityOps.similarityKnnGraph(spark, dir)
         .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
         .persist()
@@ -151,14 +152,14 @@ object GraphOps {
     * 1-2 s at sf0.1 on a 4k-edge graph). 3n-row bound at any corpus
     * size, so the persist is as cheap as the edge list itself. */
   private[graft] def knnUndirected(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"knnund:$dir") {
+    Stages.memo(spark, s"knnund:$dir") {
       canonicalUndirected(knnEdges(spark, dir)).persist()
     }
 
   /** Memoized degree-rank-oriented edges, persisted: the wedge self-join
     * reads it twice. Same 3n bound as [[knnUndirected]]. */
   private[graft] def knnOriented(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"knnoriented:$dir") {
+    Stages.memo(spark, s"knnoriented:$dir") {
       orientEdges(knnUndirected(spark, dir)).persist()
     }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Tables, TempDirs}
+import graft.stages.Stages
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -429,8 +430,8 @@ object MultimodalOps {
     * rung), which the cluster twin's first triangle measured as a
     * phantom ×5.6 top step on a query whose real work is linear. Same
     * genus as [[DedupOps.shingleIndex]]. */
-  private[operators] def phashMembers(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"phashmem:$dir") {
+  private[graft] def phashMembers(spark: SparkSession, dir: String): DataFrame =
+    Stages.memo(spark, s"phashmem:$dir") {
       phashMembersUncached(spark, dir).persist()
     }
 

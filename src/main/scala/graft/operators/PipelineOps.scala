@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.stages.Stages
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -257,7 +258,7 @@ object PipelineOps {
     * `cc_labels` is its own prewarm ledger line so the fixpoint cost
     * never bills to whichever consumer runs first alphabetically. */
   def dedupConnectedComponents(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"cc_labels:$dir") {
+    Stages.memo(spark, s"cc_labels:$dir") {
       computeConnectedComponents(spark, dir)
     }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.stages.Stages
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -128,7 +129,7 @@ object ProfilingOps {
     * TPC-H price grid saturates (~583k distinct at sf10 for 60M rows),
     * so this stage stops growing with the corpus. */
   private def equidepthCum(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"equidepth_cum:$dir") {
+    Stages.memo(spark, s"equidepth_cum:$dir") {
       import spark.implicits._
       val wLoc = Window.partitionBy($"bucket").orderBy($"v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.stages.Stages
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ object SimilarityOps {
     * recomputes) and is released by the app-end eviction backstop. */
   private[graft] def quantized(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.FixedPointDotProduct.register(spark)
-    DedupOps.cachedDf(spark, s"quantized:$dir") {
+    Stages.memo(spark, s"quantized:$dir") {
       import spark.implicits._
       Tables.embeddings(spark, dir)
         .select($"vec_id",
@@ -165,7 +166,7 @@ object SimilarityOps {
     * runs once per (session, dir); the cached result is #queries×5 rows
     * (corpus/20), bounded and cheap to hold. */
   private[graft] def exactTopk(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"exacttopk:$dir") {
+    Stages.memo(spark, s"exacttopk:$dir") {
       import spark.implicits._
       val n = quantized(spark, dir)
       val queries = n.filter(isQuery($"vec_id"))
@@ -248,7 +249,7 @@ object SimilarityOps {
   private def annTop3(spark: SparkSession, dir: String, variant: String)(
       build: => DataFrame): DataFrame = {
     import spark.implicits._
-    DedupOps.cachedDf(spark, s"annres:$variant:$dir") { build.persist() }
+    Stages.memo(spark, s"annres:$variant:$dir") { build.persist() }
       .orderBy($"query_id", $"rk")
   }
 
@@ -299,7 +300,7 @@ object SimilarityOps {
     * persisted; the scoring crossJoin behind it runs once per
     * (session, dir). */
   private[graft] def ivfAssign(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"ivfassign:$dir") {
+    Stages.memo(spark, s"ivfassign:$dir") {
       import spark.implicits._
       quantized(spark, dir).crossJoin(broadcast(ivfPivots(spark, dir)))
         .select($"vec_id", $"pivot_id", cosine("q", "pq", "n2", "pn2").as("pcos"))
@@ -309,7 +310,7 @@ object SimilarityOps {
     }
 
   private[graft] def ivfCandidates(
-      spark: SparkSession, dir: String, nprobe: Int = 4): DataFrame = DedupOps.cachedDf(
+      spark: SparkSession, dir: String, nprobe: Int = 4): DataFrame = Stages.memo(
       spark, s"ivfcand:$dir:$nprobe") {
     import spark.implicits._
     // probe ranking scores only the QUERY rows (1% of the corpus) against
@@ -459,7 +460,7 @@ object SimilarityOps {
     * centroids are still deterministic, and the suites' recall floors
     * pin the quality. */
   private[graft] def kmeansCentroids(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"kmcent:$dir") {
+    Stages.memo(spark, s"kmcent:$dir") {
       import spark.implicits._
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.linalg.Vectors
@@ -521,7 +522,7 @@ object SimilarityOps {
     * sort-shuffle the whole corpus). The scale-correct cluster id for
     * [[DedupOps.dedupSemantic]]. */
   private[graft] def kmeansAssign(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"kmassign:$dir") {
+    Stages.memo(spark, s"kmassign:$dir") {
       import spark.implicits._
       kmeansCentScores(spark, dir, queriesOnly = false)
         .groupBy($"vec_id")
@@ -722,11 +723,6 @@ object SimilarityOps {
        |GROUP BY i, j
        |ORDER BY i, j""".stripMargin
 
-  /** (session, dir) → fitted (means, v1, λ1, v2, λ2), so the covariance
-    * job and the 64×64 eigen-solve run once per session/dir. */
-  private val pcaModels = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Double], Array[Double], Double, Array[Double], Double)]()
-
   /** PCA projection (`embedding_pca_project`) — the dimensionality-
     * reduction / whitening step [[embeddingCovariance]] exists to feed:
     * fit the top-2 principal components and project every embedding onto
@@ -751,8 +747,28 @@ object SimilarityOps {
     * centering (mean(pcₖ) ≈ 0), and orthogonality (⟨v₁,v₂⟩ ≈ 0). */
   def embeddingPcaProject(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = s"${System.identityHashCode(spark)}:$dir"
-    val (mu, v1, l1, v2, l2) = pcaModels.computeIfAbsent(key, { _ =>
+    val (mu, v1, _, v2, _) = pcaModel(spark, dir)
+    def litArr(a: Array[Double]): String =
+      a.map(x => s"${x}D").mkString("array(", ", ", ")")
+    quantized(spark, dir)
+      .select($"vec_id",
+        expr(s"""aggregate(zip_with(q, zip_with(${litArr(mu)}, ${litArr(v1)},
+                  (m, w) -> named_struct('m', m, 'w', w)),
+                  (x, t) -> (cast(x as double) / 1000000.0D - t.m) * t.w),
+                0D, (acc, z) -> acc + z)""").as("pc1"),
+        expr(s"""aggregate(zip_with(q, zip_with(${litArr(mu)}, ${litArr(v2)},
+                  (m, w) -> named_struct('m', m, 'w', w)),
+                  (x, t) -> (cast(x as double) / 1000000.0D - t.m) * t.w),
+                0D, (acc, z) -> acc + z)""").as("pc2"))
+      .orderBy($"vec_id")
+  }
+
+  /** The fitted (means, v1, λ1, v2, λ2), memoized so the covariance job
+    * and the 64×64 eigen-solve run once per session/dir. */
+  private[graft] def pcaModel(spark: SparkSession, dir: String)
+      : (Array[Double], Array[Double], Double, Array[Double], Double) =
+    Stages.memo(spark, s"pca:$dir") {
+      import spark.implicits._
       val cells = embeddingCovariance(spark, dir)
         .select($"i", $"j", $"n", $"s_i", $"cov").collect()
       val d = 64
@@ -786,35 +802,7 @@ object SimilarityOps {
         c(i)(j) -= lam1 * e1(i) * e1(j)))
       val (e2, lam2) = powerIterate()
       (means, e1, lam1, e2, lam2)
-    })
-    def litArr(a: Array[Double]): String =
-      a.map(x => s"${x}D").mkString("array(", ", ", ")")
-    quantized(spark, dir)
-      .select($"vec_id",
-        expr(s"""aggregate(zip_with(q, zip_with(${litArr(mu)}, ${litArr(v1)},
-                  (m, w) -> named_struct('m', m, 'w', w)),
-                  (x, t) -> (cast(x as double) / 1000000.0D - t.m) * t.w),
-                0D, (acc, z) -> acc + z)""").as("pc1"),
-        expr(s"""aggregate(zip_with(q, zip_with(${litArr(mu)}, ${litArr(v2)},
-                  (m, w) -> named_struct('m', m, 'w', w)),
-                  (x, t) -> (cast(x as double) / 1000000.0D - t.m) * t.w),
-                0D, (acc, z) -> acc + z)""").as("pc2"))
-      .orderBy($"vec_id")
-  }
-
-  /** The fitted eigenvalues, for the spec's variance invariants. */
-  private[graft] def pcaEigenvalues(spark: SparkSession, dir: String): (Double, Double) = {
-    embeddingPcaProject(spark, dir) // ensure fitted
-    val m = pcaModels.get(s"${System.identityHashCode(spark)}:$dir")
-    (m._3, m._5)
-  }
-
-  /** The fitted component vectors, for the orthogonality invariant. */
-  private[graft] def pcaComponents(spark: SparkSession, dir: String): (Array[Double], Array[Double]) = {
-    embeddingPcaProject(spark, dir)
-    val m = pcaModels.get(s"${System.identityHashCode(spark)}:$dir")
-    (m._2, m._4)
-  }
+    }
 
   /** Product-quantization geometry: 64 dims split into [[PqM]] = 8
     * subspaces of [[PqSubDim]] = 8 dims; 16 codewords per subspace drawn
@@ -893,7 +881,7 @@ object SimilarityOps {
     * Empty clusters keep their previous codeword (carryover, the
     * standard Lloyd guard). Memoized + persisted per (session, dir). */
   private[graft] def pqCodebookTrained(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"pqcbt:$dir") {
+    Stages.memo(spark, s"pqcbt:$dir") {
       import spark.implicits._
       // coalesce: the training set is (corpus × 8 subspaces) SKINNY rows
       // (16 k at sf0.1) — at 32 partitions each Lloyd pass schedules ~5

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.stages.Stages
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -493,8 +494,8 @@ object TextOps {
     * ([[dedupWinnowingPairs]]); its own `winnow_fps` prewarm ledger line
     * keeps the k-gram md5 pass from billing to whichever consumer runs
     * first. */
-  private[operators] def winnowFps(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.cachedDf(spark, s"winnow:$dir") {
+  private[graft] def winnowFps(spark: SparkSession, dir: String): DataFrame =
+    Stages.memo(spark, s"winnow:$dir") {
       import spark.implicits._
       graft.functions.GramHashes.register(spark)
       graft.functions.WinnowPositions.register(spark)
@@ -1109,23 +1110,10 @@ object TextOps {
        |FROM wl JOIN tokn USING (w)
        |GROUP BY lang ORDER BY lang""".stripMargin
 
-  /** Tiny driver-side memo of the trained merge table, keyed by session
-    * identity + dir. Holds no reference to the session itself (identity
-    * hash only) and at most a handful of ≤8-tuple lists, so stopped
-    * sessions leak nothing that matters. */
-  private val bpeMergeMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Seq[(Int, String, String, String, Long)]]
-
-  private def bpeMerges(spark: SparkSession, dir: String): Seq[(Int, String, String, String, Long)] =
-    bpeMergeMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), dir), trainBpeMerges(spark, dir))
-
-  /** Drop the memoized merge table so the next [[bpeEncodedTypes]] build
-    * re-trains — the bench's contamination retry calls this alongside
-    * evicting the encode cache, because the stage's FIRST build pays for
-    * training and a retry that skips it would under-report the stage. */
-  private[operators] def evictBpeMergeMemo(spark: SparkSession, dir: String): Unit =
-    bpeMergeMemo.remove((System.identityHashCode(spark), dir))
+  /** The trained merge table, memoized per session/dir: the first
+    * [[bpeEncodedTypes]] build pays for training. */
+  private[graft] def bpeMerges(spark: SparkSession, dir: String): Seq[(Int, String, String, String, Long)] =
+    Stages.memo(spark, s"bpemerges:$dir")(trainBpeMerges(spark, dir))
 
   /** Memoized, PERSISTED encoded word-type table `(w, cnt, syms)` shared
     * by [[textBpeEncode]] and [[textTokenizerFertility]] — the tokenizer
@@ -1143,9 +1131,9 @@ object TextOps {
     * tower consumed once (r10 verdict); now both queries share the one
     * ~0.7 s build. `cnt` is the corpus frequency of the word type, so
     * frequency-weighted consumers need no second corpus scan. */
-  private[operators] def bpeEncodedTypes(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def bpeEncodedTypes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    DedupOps.cachedDf(spark, s"bpetypes:$dir") {
+    Stages.memo(spark, s"bpetypes:$dir") {
       val merges = bpeMerges(spark, dir)
       require(merges.forall(m => m._2.matches("[a-z0-9]+") && m._3.matches("[a-z0-9]+")),
         "merge symbols must stay in [a-z0-9]+ — they are interpolated into expr strings")
@@ -1243,10 +1231,10 @@ object TextOps {
     * persist (r14; was 16-byte binary) — the cached rows carry 8-byte
     * keys, and nothing downstream ever needs the text. App-end eviction
     * backstop as with every other cached stage. */
-  private[operators] def dupWindows(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def dupWindows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.functions.GramHashes.register(spark)
-    DedupOps.cachedDf(spark, s"dupwins:$dir") {
+    Stages.memo(spark, s"dupwins:$dir") {
       Tables.documents(spark, dir)
         .select($"doc_id", split(lower($"text"), " ").as("ts"))
         .filter(size($"ts") >= 10)

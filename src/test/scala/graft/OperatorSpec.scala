@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.{CurationOps, DedupOps, TextOps}
+import graft.stages.Stages
 import org.apache.spark.sql.Row
 
 /** Golden tests for the batch operator surface at sf0.001 — cheap local
@@ -11,19 +13,21 @@ class OperatorSpec extends SparkTestBase {
     // ~500 query executions dominate the suite's wall clock, and most of
     // each execution is driver-side analysis/codegen + scheduling latency,
     // not task CPU — so the gate fans out over six worker threads. Each
-    // thread gets its OWN spark.newSession(): several operators mutate
+    // thread gets its OWN session from GraftSession.derived(spark), the
+    // shape the library clones sessions in: several operators mutate
     // session conf (broadcast thresholds, shuffle partitions, state-store
     // provider), which is exactly the state a shared session would race
-    // on; a new session starts from the SparkContext conf (UTC, 4 shuffle
-    // partitions) and the dedup/ANN memo caches are already keyed by
-    // (SparkSession, key). The a/b determinism pair stays sequential
+    // on; a derived session starts from the SparkContext conf (UTC, 4
+    // shuffle partitions), and every memoized stage and driver-side model
+    // is keyed by (SparkSession, key) in Stages.memo, so each thread
+    // builds its own. The a/b determinism pair stays sequential
     // WITHIN one thread, so each query still re-runs under the identical
     // session state it first ran under.
     val workers = 6
     val names = SparkEntry.queries.keys.toVector.sorted
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     // completion counter: a thread that dies OUTSIDE the per-query try
-    // (e.g. spark.newSession() throwing) would previously vanish
+    // (e.g. GraftSession.derived throwing) would previously vanish
     // silently — join() still returns and failures stays empty, passing
     // the gate while its slot's queries never ran. The outer catch
     // records any such death, and the completed-count assertion makes
@@ -32,7 +36,7 @@ class OperatorSpec extends SparkTestBase {
     val threads = (0 until workers).map { slot =>
       val t = new Thread(() => {
         try {
-          val session = spark.newSession()
+          val session = GraftSession.derived(spark)
           for (i <- slot until names.size by workers) {
             val name = names(i)
             try {
@@ -67,8 +71,12 @@ class OperatorSpec extends SparkTestBase {
     val names = SparkEntry.registry.map(_.name)
     assert(names.distinct.size == names.size, s"repeated: ${names.diff(names.distinct)}")
     assert(SparkEntry.queries.size == names.size)
+    val stageNames = Stages.list(spark, sfDir).map(_.name)
+    assert(stageNames.distinct.size == stageNames.size,
+      s"repeated stages: ${stageNames.diff(stageNames.distinct)}")
     val spec = SparkEntry.registry.head
-    val e = intercept[IllegalArgumentException](SparkEntry.requireUniqueNames(Seq(spec, spec)))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.requireUniqueNames(Seq(spec, spec))(_.name))
     assert(e.getMessage.contains(spec.name))
   }
 
@@ -80,6 +88,13 @@ class OperatorSpec extends SparkTestBase {
     // a baseline is the exact anchor — it must not itself be a twin
     val chained = t.values.toSet.intersect(t.keySet)
     assert(chained.isEmpty, s"baselines that are also twins: $chained")
+    // the same rules for the shared stages' twin_of
+    val st = Stages.list(spark, sfDir).flatMap(s => s.twinOf.map(s.name -> _)).toMap
+    assert(st.nonEmpty)
+    val stageGhosts = st.values.toSet -- Stages.list(spark, sfDir).map(_.name)
+    assert(stageGhosts.isEmpty, s"twinOf names not in Stages.list: $stageGhosts")
+    assert(st.forall { case (k, v) => k != v }, "a stage cannot twin itself")
+    assert(st.values.toSet.intersect(st.keySet).isEmpty)
   }
 
   test("entry smoke: flagship query yields rows") {
@@ -1979,7 +1994,7 @@ class OperatorSpec extends SparkTestBase {
     val (pc1, pc2) = (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
     def mean(a: Array[Double]) = a.sum / n
     def variance(a: Array[Double]) = { val m = mean(a); a.map(x => (x - m) * (x - m)).sum / n }
-    val (l1, l2) = SimilarityOps.pcaEigenvalues(spark, sfDir)
+    val (_, _, l1, _, l2) = SimilarityOps.pcaModel(spark, sfDir)
     // projections are centered (the fold subtracts the fitted means)
     assert(math.abs(mean(pc1)) < 1e-6 && math.abs(mean(pc2)) < 1e-6)
     // sample variance along each component recovers its Rayleigh
@@ -1993,7 +2008,7 @@ class OperatorSpec extends SparkTestBase {
       .collect().filter(r => r.getInt(0) == r.getInt(1)).map(_.getDouble(6)).max
     assert(l1 >= maxDiag - 1e-12, s"lambda1=$l1 below max coord variance $maxDiag")
     // fitted components are orthonormal
-    val (v1, v2) = SimilarityOps.pcaComponents(spark, sfDir)
+    val (_, v1, _, v2, _) = SimilarityOps.pcaModel(spark, sfDir)
     assert(math.abs(v1.zip(v2).map { case (a, b) => a * b }.sum) < 1e-6)
     assert(math.abs(v1.map(x => x * x).sum - 1.0) < 1e-9)
   }
@@ -2592,6 +2607,35 @@ class OperatorSpec extends SparkTestBase {
     // distinct nprobe = distinct cache entries (different candidate sets)
     assert(!(SimilarityOps.ivfCandidates(spark, sfDir, nprobe = 2) eq
       SimilarityOps.ivfCandidates(spark, sfDir)))
+    // driver-side models share the memo: the PCA fit, the BPE merge
+    // table, and both Bloom probe names
+    assert(SimilarityOps.pcaModel(spark, sfDir) eq SimilarityOps.pcaModel(spark, sfDir))
+    assert(TextOps.bpeMerges(spark, sfDir) eq TextOps.bpeMerges(spark, sfDir))
+    assert(CurationOps.decontamBloomFn(spark, sfDir) eq CurationOps.decontamBloomFn(spark, sfDir))
+    assert(DedupOps.incrBloomFn(spark, sfDir) eq DedupOps.incrBloomFn(spark, sfDir))
+    // a derived session is another (session, dir) key: its own entries
+    val derived = GraftSession.derived(spark)
+    assert(!(SimilarityOps.quantized(derived, sfDir) eq SimilarityOps.quantized(spark, sfDir)))
+    assert(!(TextOps.bpeMerges(derived, sfDir) eq TextOps.bpeMerges(spark, sfDir)))
+    assert(Stages.keys(derived) == Set(s"quantized:$sfDir", s"bpemerges:$sfDir"))
+  }
+
+  test("a stage's eviction keys are what its first build adds; evict forces a rebuild") {
+    val s = GraftSession.derived(spark) // a fresh session: an empty memo
+    val bpe = Stages.list(s, sfDir).find(_.name == "bpe_types").get
+    bpe.build()
+    val added = Stages.keys(s)
+    assert(added.contains(s"bpetypes:$sfDir") && added.contains(s"bpemerges:$sfDir"), added)
+    val merges = TextOps.bpeMerges(s, sfDir)
+    val types = bpe.build()
+    Stages.evict(s, added)
+    assert(Stages.keys(s).isEmpty)
+    assert(types.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    bpe.build()
+    assert(Stages.keys(s) == added)
+    // retrained: a new table object with the same (deterministic) merges
+    val retrained = TextOps.bpeMerges(s, sfDir)
+    assert(!(retrained eq merges) && retrained == merges)
   }
 
   test("dedup_cluster_sizes: histogram reconciles with the CC labels") {
