@@ -77,6 +77,20 @@ object GraftSession {
     s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
       classOf[FileSystemBasedCheckpointFileManager].getName)
     confs.foreach { case (k, v) => s.conf.set(k, v) }
+    roots.put(s, root(parent))
     s
   }
+
+  /** Derived session → the session its chain of [[derived]] calls started
+    * from. Weak keys: a derived session that is no longer referenced
+    * drops its entry, so recording it pins nothing. */
+  private val roots =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, SparkSession]())
+
+  /** The session `spark` was [[derived]] from, following the chain back
+    * to its start, or `spark` itself. A value that does not depend on a
+    * derived session's own confs (a table's parquet schema,
+    * [[Tables.table]]) is memoized on the root, so a query that reads
+    * inside a per-call derived session reuses it. */
+  def root(spark: SparkSession): SparkSession = Option(roots.get(spark)).getOrElse(spark)
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.json4s.DefaultFormats
 import org.json4s.jackson.Serialization
 
@@ -17,20 +19,28 @@ object Verify {
     val spark = GraftSession.local(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // a query that throws is named and the run exits non-zero: a missing
+    // result dir alone would only surface later, in the oracle compare
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       }
-    }
     // the JSON writer escapes quotes, backslashes and ALL control chars —
     // a raw tab or CR in oracle SQL would otherwise make the DuckDB
     // compare's json.load fail and silently zero the correctness run
     val json = Serialization.write(SparkEntry.oracleSql)(DefaultFormats)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

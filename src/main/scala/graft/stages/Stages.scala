@@ -15,12 +15,15 @@ final case class SharedStage(
 /** The per-(session, dir) memo and the list of shared stages.
   *
   * Every value derived once per session and data directory lives here:
-  * persisted DataFrames shared by several queries, and driver-side models
-  * (a PCA fit, a BPE merge table, the name of a registered Bloom probe).
+  * persisted DataFrames shared by several queries, driver-side models
+  * (a PCA fit, a BPE merge table, the name of a registered Bloom probe),
+  * and each catalog table's parquet schema (`schema:$dir/$name.parquet`,
+  * held by the root session, see [[graft.Tables]]).
   * A key is a plain string that embeds the directory (`quantized:$dir`);
   * the session is the other half of the map key. Data under `dir` is
   * assumed immutable for the session, the same contract as Spark's own
-  * relation cache.
+  * relation cache: a caller that rewrites a table writes it to a new
+  * directory.
   *
   * Lifetime: entries are dropped when the session's application ends
   * (see [[hookEviction]]), or on demand by [[evict]], which the bench's
