@@ -1,7 +1,7 @@
 package graft
 
+import graft.streaming.CheckpointFiles
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** The one place engine confs live: `Bench`, `Verify`, `Plans` and the
   * test suite all build their session here, so a conf measured in one of
@@ -59,23 +59,32 @@ object GraftSession {
     *    run, even with a 10,000-entry cache; with isolation off both
     *    compile 0 after their first run. graft adds no jars or artifacts
     *    to any session, so there is nothing to isolate.
-    *  - `spark.sql.streaming.checkpointFileManagerClass` = the
-    *    FileSystem-based manager: without the native Hadoop library the
-    *    default FileContext manager forks `readlink` 8 times per
-    *    checkpoint-file rename (file, temp file and their `.crc`s) and
+    *  - `spark.sql.streaming.checkpointFileManagerClass` =
+    *    [[graft.streaming.CheckpointFiles]]: without the native Hadoop
+    *    library the default FileContext manager forks `readlink` 8 times
+    *    per checkpoint-file rename (file, temp file and their `.crc`s) and
     *    `chmod` once per create: 129 process forks per query, averaged
-    *    over `streaming_concat_prefixes` and `streaming_window_max`. The
-    *    FileSystem manager renames with `File.renameTo`, which leaves 33,
-    *    nearly all of them `chmod`. `.crc` files and the checkpoint-file
-    *    checksums stay on.
+    *    over `streaming_concat_prefixes` and `streaming_window_max`. Spark's
+    *    FileSystem-based manager renames with `File.renameTo`, which left
+    *    33, nearly all of them `chmod` from `RawLocalFileSystem.setPermission`
+    *    (26 per `streaming_window_max` call, 38 per
+    *    `streaming_concat_prefixes` call at 2 state partitions, 4–5 ms
+    *    each). graft's manager is that FileSystem-based manager over a
+    *    local file system that sets the same permission bits through
+    *    `java.nio`: 0 forks per query. `.crc` files and the
+    *    checkpoint-file checksums stay on.
     *
-    * Together they took the `stream_ref` benchmark's later pass from
-    * 4.02 s to 2.92 s (median of 10 parent/change pairs on a 4-core VM). */
+    * Isolation off and Spark's FileSystem-based manager together took the
+    * `stream_ref` benchmark's later pass from 4.02 s to 2.92 s (median of
+    * 10 parent/change pairs on a 4-core VM); graft's manager, with one
+    * state partition and a one-partition memory-sink read-back
+    * ([[graft.streaming.StreamingOps]]), took it from 2.65 s to 2.16 s
+    * (same method and host). */
   def derived(parent: SparkSession, confs: (String, String)*): SparkSession = {
     val s = parent.newSession()
     s.conf.set("spark.sql.artifact.isolation.enabled", "false")
     s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      classOf[FileSystemBasedCheckpointFileManager].getName)
+      classOf[CheckpointFiles].getName)
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     roots.put(s, root(parent))
     s

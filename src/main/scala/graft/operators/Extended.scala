@@ -704,10 +704,9 @@ object Extended {
     import spark.implicits._
     val frag = TempDirs.create("graft_frag").toString
     val out = TempDirs.create("graft_compact").toString
-    Tables.events(spark, dir)
-      .select($"event_id", $"event_type", $"value")
-      .repartition(64).write.mode("overwrite").parquet(frag)
-    spark.read.parquet(frag)
+    val events = Tables.events(spark, dir).select($"event_id", $"event_type", $"value")
+    events.repartition(64).write.mode("overwrite").parquet(frag)
+    spark.read.schema(events.schema).parquet(frag)
       .coalesce(4).write.mode("overwrite").parquet(out)
     // the compacted rewrite is eager — the fragmented staging copy can go
     import scala.jdk.CollectionConverters._
@@ -715,7 +714,7 @@ object Extended {
       .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
     val nFiles = new java.io.File(out).listFiles()
       .count(f => f.getName.startsWith("part-"))
-    spark.read.parquet(out)
+    spark.read.schema(events.schema).parquet(out)
       .agg(count(lit(1)).as("n_rows"), countDistinct($"event_id").as("n_ids"))
       .select(lit(nFiles).as("n_files"), $"n_rows", $"n_ids")
   }
@@ -1088,12 +1087,14 @@ object Extended {
     * measured the write path, not the pruned scan). */
   def joinDppPruned(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    // the partition column is already last, where partition discovery
+    // puts it, so the written schema is the one to read back with
+    val written = Tables.orders(spark, dir)
+      .select($"o_orderkey", $"o_totalprice", $"o_orderpriority")
     val base = DppFixtureDirs.synchronized {
       DppFixtureDirs.getOrElseUpdate(dir, {
         val b = TempDirs.create("graft_dpp")
-        Tables.orders(spark, dir)
-          .select($"o_orderkey", $"o_totalprice", $"o_orderpriority")
-          .write.mode("overwrite").partitionBy("o_orderpriority")
+        written.write.mode("overwrite").partitionBy("o_orderpriority")
           .parquet(b.resolve("orders_by_priority").toString)
         // the dim must be a STORED relation: a filter over an in-memory
         // LocalRelation is constant-folded away before the pruning rule
@@ -1109,7 +1110,7 @@ object Extended {
     }
     val out = base.resolve("orders_by_priority").toString
     val dimPath = base.resolve("priority_dim").toString
-    val fact = spark.read.parquet(out)
+    val fact = spark.read.schema(written.schema).parquet(out)
     val dim = spark.read
       .schema("p_priority STRING, p_class STRING").parquet(dimPath)
     fact.join(dim.filter($"p_class" === "expedite"),

@@ -6,6 +6,7 @@ import graft.{FailureRegistry, Person, Tables, TempDirs, UnstableData}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Batch ports of the reference's operator surface (SURVEY.md §2.1-2.6).
   * Streaming variants of the stateful/windowed ops live in
@@ -78,9 +79,11 @@ object ReferenceParity {
   def sinkPartitionedParquet(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = TempDirs.create("graft_part_sink").resolve("docs").toString
-    Tables.documents(spark, dir)
-      .write.mode("overwrite").partitionBy("lang").parquet(out)
-    spark.read.parquet(out)
+    val docs = Tables.documents(spark, dir)
+    docs.write.mode("overwrite").partitionBy("lang").parquet(out)
+    // partition discovery puts the partition column after the data columns
+    val written = StructType(docs.schema.filterNot(_.name == "lang") :+ docs.schema("lang"))
+    spark.read.schema(written).parquet(out)
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
       .orderBy($"lang")

@@ -420,7 +420,7 @@ object GenSourceOps {
       .writeStream.format("memory").queryName(name).outputMode("complete")
       .start()
     try q.processAllAvailable() finally q.stop()
-    s.table(name).orderBy($"bucket")
+    StreamingOps.readSink(s, name).orderBy($"bucket")
   }
 
   val streamingDsv2SourceSql: String =
@@ -456,7 +456,7 @@ object GenSourceOps {
       .writeStream.format("memory").queryName(name).outputMode("append")
       .start()
     try q.processAllAvailable() finally q.stop()
-    s.table(name).orderBy($"w_start")
+    StreamingOps.readSink(s, name).orderBy($"w_start")
   }
 
   /** Only the 9 watermark-closed windows appear; [900,1000) is open. */
@@ -499,7 +499,7 @@ object GenSourceOps {
       .writeStream.format("memory").queryName(name).outputMode("append")
       .start()
     try q.processAllAvailable() finally q.stop()
-    s.table(name).orderBy($"w_start")
+    StreamingOps.readSink(s, name).orderBy($"w_start")
   }
 
   val streamingDsv2ChainedWindowsSql: String =

@@ -41,14 +41,22 @@ object StreamingOps {
   /** Shuffle-partition count for the streaming fixture queries, set on
     * their [[GraftSession.derived]] session: every stateful streaming
     * operator allocates one state store PER shuffle partition per
-    * micro-batch, so a 32-partition session pays ~100 store
-    * initializations and checkpoint dirs for a 5-row fixture stream.
-    * Sizing state partitions to the stream volume is a per-query decision
-    * on a real cluster too (state partition count is fixed at the first
-    * checkpoint, so production queries size it deliberately up front) —
-    * the derived session keeps that choice from leaking into batch
-    * queries. */
-  val StreamPartitions: (String, String) = "spark.sql.shuffle.partitions" -> "2"
+    * micro-batch, and each store writes its own delta, checksum and
+    * checkpoint files. The fixture streams carry at most 5 rows per
+    * scenario (the graftgen ones 1000 rows in ~300-row batches), so one
+    * partition holds all of it and a second one only adds a store, its
+    * files and a task to every batch. Sizing state partitions to the
+    * stream volume is a per-query decision on a real cluster too (state
+    * partition count is fixed at the first checkpoint, so production
+    * queries size it deliberately up front) — the derived session keeps
+    * that choice from leaking into batch queries. */
+  val StreamPartitions: (String, String) = "spark.sql.shuffle.partitions" -> "1"
+
+  /** The rows a memory sink collected, as one partition. MemorySink keeps
+    * its rows on the driver, so one partition costs no parallelism, and a
+    * total-order `orderBy` over it needs no range-partition sampling job
+    * and no shuffle: the read-back is one job with no exchange. */
+  def readSink(s: SparkSession, name: String): DataFrame = s.table(name).coalesce(1)
 
   /** Off-heap state store with incremental checkpoints (see
     * [[streamingRocksdbAgg]]); `transformWithState` requires it. */
@@ -127,7 +135,7 @@ object StreamingOps {
       .writeStream.format("memory").queryName(name).outputMode("complete")
       .start()
     try q.processAllAvailable() finally q.stop()
-    s.table(name)
+    readSink(s, name)
       .select(unix_timestamp($"w_start").as("w_start"), $"value")
       .orderBy($"w_start")
   }
@@ -159,7 +167,7 @@ object StreamingOps {
       in.addData(UnstableData("c", 0, 0, "g1"), UnstableData("x", 0, 0, "g2"))
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"group_id", $"prefix")
+    readSink(s, name).orderBy($"group_id", $"prefix")
   }
 
   val streamingConcatPrefixesSql: String =
@@ -189,7 +197,7 @@ object StreamingOps {
       in.addData((2L, "b"), (3L, "c"))
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"id")
+    readSink(s, name).orderBy($"id")
   }
 
   val streamingDedupSql: String =
@@ -232,7 +240,7 @@ object StreamingOps {
       in.addData((1L, base + 995))
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"id", $"ts_s")
+    readSink(s, name).orderBy($"id", $"ts_s")
   }
 
   val streamingDedupWatermarkedSql: String =
@@ -269,7 +277,7 @@ object StreamingOps {
       in.addData((2L, 7L), (3L, 1L))
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"k")
+    readSink(s, name).orderBy($"k")
   }
 
   val streamingRocksdbAggSql: String =
@@ -374,7 +382,7 @@ object StreamingOps {
       q.processAllAvailable()
       q.processAllAvailable() // watermark-advance batch fires the timers
     } finally q.stop()
-    s.table(name).orderBy($"k")
+    readSink(s, name).orderBy($"k")
   }
 
   val streamingTwsTimersSql: String =
@@ -406,7 +414,7 @@ object StreamingOps {
       in.addData((2L, 7L), (3L, 1L))
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"k", $"n")
+    readSink(s, name).orderBy($"k", $"n")
   }
 
   val streamingTransformWithStateSql: String =
@@ -458,7 +466,7 @@ object StreamingOps {
       clicks.addData((3, base + 530))
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"ad_id", $"imp_s", $"click_s")
+    readSink(s, name).orderBy($"ad_id", $"imp_s", $"click_s")
   }
 
   val streamingStreamJoinSql: String =
@@ -518,7 +526,7 @@ object StreamingOps {
       q.processAllAvailable()
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"ad_id")
+    readSink(s, name).orderBy($"ad_id")
   }
 
   val streamingOuterJoinSql: String =
@@ -554,7 +562,7 @@ object StreamingOps {
       in.addData((1L, 7L), (2L, 1L))
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"n_name")
+    readSink(s, name).orderBy($"n_name")
   }
 
   val streamingStaticJoinSql: String =
@@ -639,7 +647,7 @@ object StreamingOps {
       in.addData((second ++ sentinel).toSeq: _*)
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"doc_id")
+    readSink(s, name).orderBy($"doc_id")
   }
 
   val streamingIncrementalDedupSql: String =
@@ -694,7 +702,7 @@ object StreamingOps {
       q.processAllAvailable()
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name).orderBy($"uid", $"sess_start")
+    readSink(s, name).orderBy($"uid", $"sess_start")
   }
 
   val streamingSessionWindowSql: String =
@@ -779,7 +787,7 @@ object StreamingOps {
       in.addData((1L, "a2", 3L), (3L, "c", 4L))
       q.processAllAvailable()
     } finally q.stop()
-    s.read.parquet(outDir + "/batch=*")
+    s.read.schema("k BIGINT, v STRING, seq BIGINT").parquet(outDir + "/batch=*")
       .groupBy($"k")
       .agg(max_by(struct($"v", $"seq"), $"seq").as("t"))
       .select($"k", $"t.v".as("v"), $"t.seq".as("seq"))
@@ -869,7 +877,7 @@ object StreamingOps {
         q.processAllAvailable()
       }
     } finally q.stop()
-    s.table(name).orderBy($"event_id")
+    readSink(s, name).orderBy($"event_id")
   }
 
   val streamingRollingAnomalySql: String =
@@ -927,7 +935,7 @@ object StreamingOps {
       in.addData((1L, 1700000030L, 104L, 4.0), (2L, 1700000070L, 105L, 5.0))
       q.processAllAvailable()
     } finally q.stop()
-    s.table(name)
+    readSink(s, name)
       .select($"user_id", unix_timestamp($"m_ts").as("m_start"),
         $"last.event_id".as("event_id"), $"last.value".as("value"))
       .orderBy($"user_id", $"m_start")

@@ -27,4 +27,39 @@ class ConstructionSpec extends SparkTestBase {
     }
     assert(eager.isEmpty, eager.mkString("\n"))
   }
+
+  // the benchmark executes a timed result with a `noop` write
+  private def run(n: String): Unit =
+    SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+
+  test("on a warm session, each stream_ref scenario runs its pinned number of jobs") {
+    // streaming scenarios: one job per micro-batch plus one for the
+    // one-partition memory-sink read-back; the parquet roundtrip: the
+    // partitioned write, then the aggregate and its sort over the file
+    // read with the schema it wrote (no inference job)
+    val pinned = Seq("streaming_window_max" -> 2, "streaming_concat_prefixes" -> 3,
+      "sink_partitioned_parquet" -> 5)
+    pinned.foreach { case (n, _) => run(n) } // warm
+    val counted = pinned.map { case (n, _) => n -> Jobs.during(spark.sparkContext)(run(n)) }
+    val wrong = counted.zip(pinned).collect {
+      case ((n, sites), (_, want)) if sites.size != want =>
+        s"$n: ${sites.size} jobs, pinned $want:\n  ${sites.mkString("\n  ")}"
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("no memory-sink read-back plans a range exchange") {
+    // a total-order sort over a multi-partition sink samples its range
+    // bounds in a job of its own and shuffles; over one partition it needs
+    // neither
+    val readBacks = SparkEntry.queries.keys.toSeq.filter(_.startsWith("streaming_")).sorted.flatMap { n =>
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      val readsSink = df.queryExecution.analyzed.collectLeaves()
+        .exists(_.getClass.getSimpleName == "MemoryPlan")
+      if (readsSink) Some(n -> df.queryExecution.executedPlan.toString) else None
+    }
+    assert(readBacks.size >= 17, s"only ${readBacks.size} memory-sink read-backs found")
+    val ranged = readBacks.collect { case (n, plan) if plan.contains("rangepartitioning") => s"$n:\n$plan" }
+    assert(ranged.isEmpty, ranged.mkString("\n"))
+  }
 }

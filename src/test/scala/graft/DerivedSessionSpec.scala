@@ -1,11 +1,15 @@
 package graft
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.StreamingOps
+import graft.streaming.{CheckpointFiles, StreamingOps}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.Forks
 import org.apache.spark.sql.ForeachWriter
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -25,7 +29,8 @@ object LoaderProbe {
 }
 
 /** The two fixed confs of [[GraftSession.derived]], each pinned by the
-  * mechanism it exists for. */
+  * mechanism it exists for: one task class loader across clones, and
+  * checkpoint files written without a forked `chmod`. */
 class DerivedSessionSpec extends SparkTestBase {
 
   test("successive streaming queries on derived sessions share one task class loader") {
@@ -56,7 +61,35 @@ class DerivedSessionSpec extends SparkTestBase {
     val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     val dir = TempDirs.create("graft_ckpt_probe").toString
     val mgr = CheckpointFileManager.create(new Path(dir), s.sessionState.newHadoopConf())
-    assert(mgr.isInstanceOf[FileSystemBasedCheckpointFileManager],
-      s"checkpoint manager is ${mgr.getClass.getName}")
+    assert(mgr.isInstanceOf[CheckpointFiles], s"checkpoint manager is ${mgr.getClass.getName}")
+  }
+
+  test("graft's checkpoint manager writes the stock manager's files: .crc sibling, same permissions") {
+    val conf = GraftSession.derived(spark).sessionState.newHadoopConf()
+    def written(mgr: (Path, Configuration) => CheckpointFileManager): Seq[Set[PosixFilePermission]] = {
+      val dir = TempDirs.create("graft_ckpt_perm")
+      val file = new Path(dir.resolve("sub/offsets/0").toString)
+      val m = mgr(new Path(dir.toString), conf)
+      m.mkdirs(file.getParent)
+      val out = m.createAtomic(file, overwriteIfPossible = false)
+      out.write("v1\n{}".getBytes("UTF-8"))
+      out.close()
+      val crc = dir.resolve("sub/offsets/.0.crc")
+      assert(Files.exists(crc), s"no checksum file beside $file")
+      Seq(dir.resolve("sub/offsets"), dir.resolve("sub/offsets/0"), crc)
+        .map(p => Files.getPosixFilePermissions(p).asScala.toSet)
+    }
+    val graft = written(new CheckpointFiles(_, _))
+    val stock = written(new FileSystemBasedCheckpointFileManager(_, _))
+    assert(graft == stock, s"graft wrote $graft, the stock manager $stock")
+  }
+
+  test("a streaming query on a derived session forks no chmod") {
+    SparkEntry.queries("streaming_concat_prefixes")(spark, sfDir).collect() // warm
+    // Spark's ArtifactManager cleaner removes artifact directories with an
+    // asynchronous `rm -rf`, which may land inside the recording
+    val forks = Forks.during(SparkEntry.queries("streaming_concat_prefixes")(spark, sfDir).collect())
+      .filterNot(_.command.startsWith("rm -rf"))
+    assert(forks.isEmpty, forks.map(f => s"${f.command}\n${f.stack}").mkString("\n\n"))
   }
 }
