@@ -411,16 +411,12 @@ object GenSourceOps {
   def streamingDsv2Source(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
-    val name = "graft_dsv2s_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = s.readStream.format("graftgen")
+    val counts = s.readStream.format("graftgen")
       .option("n", "1000").option("batchRows", "300").option("parts", "2")
       .load()
       .groupBy($"bucket")
       .agg(count(lit(1)).as("n"), sum($"id").as("sum_id"))
-      .writeStream.format("memory").queryName(name).outputMode("complete")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    StreamingOps.readSink(s, name).orderBy($"bucket")
+    StreamingOps.drain(counts, "complete")().orderBy($"bucket")
   }
 
   val streamingDsv2SourceSql: String =
@@ -443,9 +439,8 @@ object GenSourceOps {
   def streamingDsv2AppendWindows(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
-    val name = "graft_dsv2w_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val base = 1700000000L
-    val q = s.readStream.format("graftgen")
+    val windows = s.readStream.format("graftgen")
       .option("n", "1000").option("batchRows", "300").option("parts", "2")
       .load()
       .select($"id", timestamp_seconds(lit(base) + $"id").as("ts"))
@@ -453,10 +448,7 @@ object GenSourceOps {
       .groupBy(window($"ts", "100 seconds"))
       .agg(count(lit(1)).as("n"), sum($"id").as("sum_id"))
       .select(unix_timestamp($"window.start").as("w_start"), $"n", $"sum_id")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    StreamingOps.readSink(s, name).orderBy($"w_start")
+    StreamingOps.drain(windows, "append")().orderBy($"w_start")
   }
 
   /** Only the 9 watermark-closed windows appear; [900,1000) is open. */
@@ -482,9 +474,8 @@ object GenSourceOps {
   def streamingDsv2ChainedWindows(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
     import s.implicits._
-    val name = "graft_dsv2c_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val base = 1700000000L
-    val q = s.readStream.format("graftgen")
+    val rollups = s.readStream.format("graftgen")
       .option("n", "1000").option("batchRows", "300").option("parts", "2")
       .load()
       .select($"id", timestamp_seconds(lit(base) + $"id").as("ts"))
@@ -496,10 +487,7 @@ object GenSourceOps {
         count(lit(1)).as("n_subwindows"))
       .select(unix_timestamp($"w2.start").as("w_start"),
         $"n", $"sum_id", $"n_subwindows")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    StreamingOps.readSink(s, name).orderBy($"w_start")
+    StreamingOps.drain(rollups, "append")().orderBy($"w_start")
   }
 
   val streamingDsv2ChainedWindowsSql: String =

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import java.nio.file.Path
 import java.util.UUID
 import java.util.concurrent.atomic.AtomicReference
 
 import graft.{FailureRegistry, GraftSession, TempDirs, UnstableData}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, ForeachWriter, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -28,6 +30,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - [[runWithRestarts]] — the fixed-delay restart strategy
   *    (`Main.java:29-30`): restart the query from the same checkpoint up
   *    to n times.
+  *  - [[drain]] — the run protocol of every memory-sink scenario: feed
+  *    each micro-batch, drain it, stop, and read the sink back.
   *
   * Semantics mapping (SURVEY.md §2.7/F1): Flink AT_LEAST_ONCE checkpoints
   * admit duplicated *state updates*; Spark micro-batch replay gives
@@ -52,11 +56,33 @@ object StreamingOps {
     * that choice from leaking into batch queries. */
   val StreamPartitions: (String, String) = "spark.sql.shuffle.partitions" -> "1"
 
-  /** The rows a memory sink collected, as one partition. MemorySink keeps
-    * its rows on the driver, so one partition costs no parallelism, and a
-    * total-order `orderBy` over it needs no range-partition sampling job
-    * and no shuffle: the read-back is one job with no exchange. */
-  def readSink(s: SparkSession, name: String): DataFrame = s.table(name).coalesce(1)
+  /** Runs the streaming `query` on a memory sink in output `mode` and
+    * returns the rows the sink collected. Each batch thunk feeds the
+    * query's sources and is followed by `processAllAvailable()`; with no
+    * thunks the query drains once. The query is named `graft_<uuid>` and
+    * checkpoints under [[TempDirs]]; it is stopped and its checkpoint
+    * deleted whether it fails or not (the sink's rows live on the driver,
+    * so nothing reads the checkpoint afterwards).
+    *
+    * The rows come back as one partition: MemorySink keeps them on the
+    * driver, so one partition costs no parallelism, and a total-order
+    * `orderBy` over it needs no range-partition sampling job and no
+    * shuffle: the read-back is one job with no exchange. */
+  private[graft] def drain(query: DataFrame, mode: String)(batches: (() => Unit)*): DataFrame = {
+    val name = "graft_" + UUID.randomUUID().toString.replace("-", "")
+    val checkpoint = TempDirs.create(name)
+    val q = query.writeStream.format("memory").queryName(name).outputMode(mode)
+      .option("checkpointLocation", checkpoint.toString).start()
+    try {
+      if (batches.isEmpty) q.processAllAvailable()
+      batches.foreach { feed => feed(); q.processAllAvailable() }
+    } finally stop(q, checkpoint)
+    query.sparkSession.table(name).coalesce(1)
+  }
+
+  /** Stops `q`, then deletes its checkpoint directory even if the stop throws. */
+  private def stop(q: StreamingQuery, checkpoint: Path): Unit =
+    try q.stop() finally FileUtils.deleteQuietly(checkpoint.toFile)
 
   /** Off-heap state store with incremental checkpoints (see
     * [[streamingRocksdbAgg]]); `transformWithState` requires it. */
@@ -125,17 +151,11 @@ object StreamingOps {
   def streamingWindowMax(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
-    val in = MemoryStream[(Int, Long)]
+    val in = MemoryStream[(Int, Long)](s)
     in.addData((15, base + 120), (17, base + 1501), (16, base + 1500))
-    val name = "graft_w1_" + UUID.randomUUID().toString.replace("-", "")
-    val q = tumblingWindowMax(
-        in.toDF().select(timestamp_seconds($"_2").as("ts"), $"_1".as("value")))
-      .writeStream.format("memory").queryName(name).outputMode("complete")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    readSink(s, name)
+    drain(tumblingWindowMax(
+        in.toDF().select(timestamp_seconds($"_2").as("ts"), $"_1".as("value"))), "complete")()
       .select(unix_timestamp($"w_start").as("w_start"), $"value")
       .orderBy($"w_start")
   }
@@ -154,20 +174,11 @@ object StreamingOps {
   def streamingConcatPrefixes(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[UnstableData](numPartitions = 1)
-    val name = "graft_k2_" + UUID.randomUUID().toString.replace("-", "")
-    val q = concatPrefixes(in.toDS())
-      .toDF("group_id", "prefix")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
-      in.addData(UnstableData("a", 0, 0, "g1"), UnstableData("b", 0, 0, "g1"))
-      q.processAllAvailable()
-      in.addData(UnstableData("c", 0, 0, "g1"), UnstableData("x", 0, 0, "g2"))
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"group_id", $"prefix")
+    val in = MemoryStream[UnstableData](s, numPartitions = 1)
+    drain(concatPrefixes(in.toDS()).toDF("group_id", "prefix"), "append")(
+      () => in.addData(UnstableData("a", 0, 0, "g1"), UnstableData("b", 0, 0, "g1")),
+      () => in.addData(UnstableData("c", 0, 0, "g1"), UnstableData("x", 0, 0, "g2")))
+      .orderBy($"group_id", $"prefix")
   }
 
   val streamingConcatPrefixesSql: String =
@@ -185,19 +196,11 @@ object StreamingOps {
   def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[(Long, String)](numPartitions = 1)
-    val name = "graft_dedup_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDF().toDF("id", "v").dropDuplicates("id")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
-      in.addData((1L, "a"), (2L, "b"), (1L, "a"))
-      q.processAllAvailable()
-      in.addData((2L, "b"), (3L, "c"))
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"id")
+    val in = MemoryStream[(Long, String)](s, numPartitions = 1)
+    drain(in.toDF().toDF("id", "v").dropDuplicates("id"), "append")(
+      () => in.addData((1L, "a"), (2L, "b"), (1L, "a")),
+      () => in.addData((2L, "b"), (3L, "c")))
+      .orderBy($"id")
   }
 
   val streamingDedupSql: String =
@@ -217,30 +220,22 @@ object StreamingOps {
   def streamingDedupWatermarked(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
-    val in = MemoryStream[(Long, Long)](numPartitions = 1)
-    val name = "graft_dedupw_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDF().toDF("id", "sec")
+    val in = MemoryStream[(Long, Long)](s, numPartitions = 1)
+    val deduped = in.toDF().toDF("id", "sec")
       .select($"id", timestamp_seconds($"sec").as("ts"))
       .withWatermark("ts", "10 seconds")
       .dropDuplicatesWithinWatermark("id")
       .select($"id", unix_timestamp($"ts").as("ts_s"))
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
+    drain(deduped, "append")(
       // batch 1: id 1 duplicated within the watermark window → one row
-      in.addData((1L, base + 10), (1L, base + 12), (2L, base + 20))
-      q.processAllAvailable()
+      () => in.addData((1L, base + 10), (1L, base + 12), (2L, base + 20)),
       // batch 2: far-future event advances the watermark past ids 1-2,
       // evicting their dedup state
-      in.addData((9L, base + 1000))
-      q.processAllAvailable()
+      () => in.addData((9L, base + 1000)),
       // batch 3: id 1 reappears AFTER its state expired → re-emitted
-      in.addData((1L, base + 995))
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"id", $"ts_s")
+      () => in.addData((1L, base + 995)))
+      .orderBy($"id", $"ts_s")
   }
 
   val streamingDedupWatermarkedSql: String =
@@ -263,21 +258,14 @@ object StreamingOps {
   def streamingRocksdbAgg(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions, RocksDbStateStore)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[(Long, Long)](numPartitions = 1)
-    val name = "graft_rocks_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDF().toDF("k", "amount")
+    val in = MemoryStream[(Long, Long)](s, numPartitions = 1)
+    val totals = in.toDF().toDF("k", "amount")
       .groupBy($"k")
       .agg(count(lit(1)).as("n"), sum($"amount").as("total"))
-      .writeStream.format("memory").queryName(name).outputMode("complete")
-      .start()
-    try {
-      in.addData((1L, 10L), (2L, 20L), (1L, 5L))
-      q.processAllAvailable()
-      in.addData((2L, 7L), (3L, 1L))
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"k")
+    drain(totals, "complete")(
+      () => in.addData((1L, 10L), (2L, 20L), (1L, 5L)),
+      () => in.addData((2L, 7L), (3L, 1L)))
+      .orderBy($"k")
   }
 
   val streamingRocksdbAggSql: String =
@@ -360,11 +348,9 @@ object StreamingOps {
   def streamingTwsTimers(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions, RocksDbStateStore)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
-    val in = MemoryStream[(Long, Long)](numPartitions = 1)
-    val name = "graft_twst_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDF().toDF("k", "sec")
+    val in = MemoryStream[(Long, Long)](s, numPartitions = 1)
+    val sessions = in.toDF().toDF("k", "sec")
       .select($"k", timestamp_seconds($"sec").as("ts"))
       .withWatermark("ts", "10 seconds")
       .as[(Long, java.sql.Timestamp)]
@@ -373,16 +359,11 @@ object StreamingOps {
         TimeMode.EventTime(), OutputMode.Append(),
         Encoders.product[(Long, Long)])
       .toDF("k", "n_events")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
-      in.addData((1L, base + 10), (1L, base + 12), (2L, base + 20))
-      q.processAllAvailable()
-      in.addData((9L, base + 1000))
-      q.processAllAvailable()
-      q.processAllAvailable() // watermark-advance batch fires the timers
-    } finally q.stop()
-    readSink(s, name).orderBy($"k")
+    drain(sessions, "append")(
+      () => in.addData((1L, base + 10), (1L, base + 12), (2L, base + 20)),
+      () => in.addData((9L, base + 1000)),
+      () => ()) // watermark-advance batch fires the timers
+      .orderBy($"k")
   }
 
   val streamingTwsTimersSql: String =
@@ -397,24 +378,17 @@ object StreamingOps {
   def streamingTransformWithState(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions, RocksDbStateStore)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[(Long, Long)](numPartitions = 1)
-    val name = "graft_tws_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDS()
+    val in = MemoryStream[(Long, Long)](s, numPartitions = 1)
+    val running = in.toDS()
       .groupByKey(_._1)
       .transformWithState(new RunningTotalsProcessor,
         TimeMode.None(), OutputMode.Append(),
         Encoders.product[(Long, Long, Long)])
       .toDF("k", "n", "total")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
-      in.addData((1L, 10L), (2L, 20L), (1L, 5L))
-      q.processAllAvailable()
-      in.addData((2L, 7L), (3L, 1L))
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"k", $"n")
+    drain(running, "append")(
+      () => in.addData((1L, 10L), (2L, 20L), (1L, 5L)),
+      () => in.addData((2L, 7L), (3L, 1L)))
+      .orderBy($"k", $"n")
   }
 
   val streamingTransformWithStateSql: String =
@@ -437,10 +411,9 @@ object StreamingOps {
   def streamingStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
-    val imps = MemoryStream[(Int, Long)]
-    val clicks = MemoryStream[(Int, Long)]
+    val imps = MemoryStream[(Int, Long)](s)
+    val clicks = MemoryStream[(Int, Long)](s)
     val impDf = imps.toDF().toDF("ad_id", "s")
       .select($"ad_id", timestamp_seconds($"s").as("imp_ts"))
       .withWatermark("imp_ts", "1 minute")
@@ -450,23 +423,18 @@ object StreamingOps {
     val joined = impDf.join(clkDf,
       expr("ad_id = c_ad_id AND click_ts >= imp_ts AND " +
         "click_ts <= imp_ts + interval 60 seconds"))
-    val name = "graft_ssj_" + UUID.randomUUID().toString.replace("-", "")
-    val q = joined
-      .select($"ad_id", unix_timestamp($"imp_ts").as("imp_s"),
-        unix_timestamp($"click_ts").as("click_s"))
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
+    val pairs = joined.select($"ad_id", unix_timestamp($"imp_ts").as("imp_s"),
+      unix_timestamp($"click_ts").as("click_s"))
+    drain(pairs, "append")(
       // batch 1: ads 1-3 impressed; ad 1 clicked in-window, ad 2 clicked
       // 180 s later (outside the 60 s window — must NOT match)
-      imps.addData((1, base + 10), (2, base + 20), (3, base + 500))
-      clicks.addData((1, base + 40), (2, base + 200))
-      q.processAllAvailable()
+      () => {
+        imps.addData((1, base + 10), (2, base + 20), (3, base + 500))
+        clicks.addData((1, base + 40), (2, base + 200))
+      },
       // batch 2: ad 3's click arrives a micro-batch later, still in-window
-      clicks.addData((3, base + 530))
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"ad_id", $"imp_s", $"click_s")
+      () => clicks.addData((3, base + 530)))
+      .orderBy($"ad_id", $"imp_s", $"click_s")
   }
 
   val streamingStreamJoinSql: String =
@@ -490,10 +458,9 @@ object StreamingOps {
   def streamingOuterJoin(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
-    val imps = MemoryStream[(Int, Long)]
-    val clicks = MemoryStream[(Int, Long)]
+    val imps = MemoryStream[(Int, Long)](s)
+    val clicks = MemoryStream[(Int, Long)](s)
     val impDf = imps.toDF().toDF("ad_id", "s")
       .select($"ad_id", timestamp_seconds($"s").as("imp_ts"))
       .withWatermark("imp_ts", "1 minute")
@@ -504,29 +471,26 @@ object StreamingOps {
       expr("ad_id = c_ad_id AND click_ts >= imp_ts AND " +
         "click_ts <= imp_ts + interval 60 seconds"),
       "left_outer")
-    val name = "graft_soj_" + UUID.randomUUID().toString.replace("-", "")
-    val q = joined
-      .select($"ad_id", unix_timestamp($"imp_ts").as("imp_s"),
-        unix_timestamp($"click_ts").as("click_s"))
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
+    val pairs = joined.select($"ad_id", unix_timestamp($"imp_ts").as("imp_s"),
+      unix_timestamp($"click_ts").as("click_s"))
+    drain(pairs, "append")(
       // batch 1: ad 1 impressed + clicked in-window; ad 2 impressed,
       // never clicked
-      imps.addData((1, base + 10), (2, base + 20))
-      clicks.addData((1, base + 40))
-      q.processAllAvailable()
+      () => {
+        imps.addData((1, base + 10), (2, base + 20))
+        clicks.addData((1, base + 40))
+      },
       // batch 2: far-future events on BOTH streams (global watermark is
       // the min across inputs) push the watermark past ad 2's window →
       // its null-click row is emitted by state eviction. Ad 9's own
       // window is still open, so it stays buffered and absent; click 8
       // matches nothing and is dropped.
-      imps.addData((9, base + 1000))
-      clicks.addData((8, base + 1000))
-      q.processAllAvailable()
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"ad_id")
+      () => {
+        imps.addData((9, base + 1000))
+        clicks.addData((8, base + 1000))
+      },
+      () => ())
+      .orderBy($"ad_id")
   }
 
   val streamingOuterJoinSql: String =
@@ -545,24 +509,17 @@ object StreamingOps {
   def streamingStaticJoin(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[(Long, Long)]
+    val in = MemoryStream[(Long, Long)](s)
     val nation = graft.Tables.nation(s, dir)
       .select($"n_nationkey", $"n_name")
-    val name = "graft_ssj2_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDF().toDF("nk", "v")
+    val totals = in.toDF().toDF("nk", "v")
       .join(nation, $"nk" === $"n_nationkey")
       .groupBy($"n_name")
       .agg(sum($"v").as("total"))
-      .writeStream.format("memory").queryName(name).outputMode("complete")
-      .start()
-    try {
-      in.addData((0L, 10L), (1L, 20L), (0L, 5L))
-      q.processAllAvailable()
-      in.addData((1L, 7L), (2L, 1L))
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"n_name")
+    drain(totals, "complete")(
+      () => in.addData((0L, 10L), (1L, 20L), (0L, 5L)),
+      () => in.addData((1L, 7L), (2L, 1L)))
+      .orderBy($"n_name")
   }
 
   val streamingStaticJoinSql: String =
@@ -571,6 +528,17 @@ object StreamingOps {
       |JOIN nation n ON n.n_nationkey = s.nk
       |GROUP BY n.n_name
       |ORDER BY n.n_name""".stripMargin
+
+  /** Whether the most recent [[streamingIncrementalDedup]] run in this
+    * JVM planted (and therefore exercised) the cross-batch sentinel —
+    * the degraded sentinel-free path used to be visible only as a
+    * stderr line, so a testdata generation could silently stop
+    * exercising the state-carry property while the oracle kept
+    * matching. StreamingSpec asserts this flag whenever the testdata
+    * supports the sentinel, making the degradation loud in CI instead
+    * of buried in a log. Test-observability surface only — never read
+    * by query logic. */
+  @volatile private[graft] var lastRunExercisedSentinel: Boolean = false
 
   /** REAL streaming incremental dedup — the continuous-ingest form of
     * the batch `dedup_incremental` query: a stream of incoming documents
@@ -595,21 +563,9 @@ object StreamingOps {
     * the stream. At scale the registry is the
     * per-snapshot hash table production maintains; the stream side only
     * ever shuffles 8-byte-keyed hashes into bounded dedup state. */
-  /** Whether the most recent [[streamingIncrementalDedup]] run in this
-    * JVM planted (and therefore exercised) the cross-batch sentinel —
-    * the degraded sentinel-free path used to be visible only as a
-    * stderr line, so a testdata generation could silently stop
-    * exercising the state-carry property while the oracle kept
-    * matching. StreamingSpec asserts this flag whenever the testdata
-    * supports the sentinel, making the degradation loud in CI instead
-    * of buried in a log. Test-observability surface only — never read
-    * by query logic. */
-  @volatile private[graft] var lastRunExercisedSentinel: Boolean = false
-
   def streamingIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val registry = graft.Tables.documents(s, dir)
       .filter($"doc_id" % 10 < 7)
       .select(md5(lower($"text")).as("content_hash")).distinct()
@@ -619,35 +575,29 @@ object StreamingOps {
       .select($"doc_id", md5(lower($"text")).as("content_hash"))
       .orderBy($"doc_id")
       .as[(Long, String)].collect()
-    val in = MemoryStream[(Long, String)](numPartitions = 1)
-    val name = "graft_sid_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDF().toDF("doc_id", "content_hash")
+    val in = MemoryStream[(Long, String)](s, numPartitions = 1)
+    val verdicts = in.toDF().toDF("doc_id", "content_hash")
       .dropDuplicates("content_hash")
       .join(registry, Seq("content_hash"), "left")
       .select($"doc_id", $"content_hash",
         when($"in_corpus".isNotNull, "dup_of_corpus").otherwise("new").as("status"))
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
-      val (first, second) = incoming.splitAt(incoming.length / 2)
-      in.addData(first.toSeq: _*)
-      q.processAllAvailable()
-      // cross-batch duplicate: same hash as the first doc, sentinel id —
-      // must be swallowed by the dedup STATE, not re-emitted. If a
-      // testdata generation leaves the first half empty (fewer than 2
-      // matching docs), degrade to a sentinel-free run instead of
-      // crashing the stream on first.head
-      val sentinel = first.headOption
-        .map { case (id, hash) => (id + 1000000L, hash) }.toSeq
-      if (sentinel.isEmpty)
-        System.err.println("[streaming_incremental_dedup] <2 matching docs in " +
-          "this testdata generation: sentinel-free run, cross-batch state " +
-          "carry NOT exercised")
-      lastRunExercisedSentinel = sentinel.nonEmpty
-      in.addData((second ++ sentinel).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"doc_id")
+    val (first, second) = incoming.splitAt(incoming.length / 2)
+    // cross-batch duplicate: same hash as the first doc, sentinel id —
+    // must be swallowed by the dedup STATE, not re-emitted. If a
+    // testdata generation leaves the first half empty (fewer than 2
+    // matching docs), degrade to a sentinel-free run instead of
+    // crashing the stream on first.head
+    val sentinel = first.headOption
+      .map { case (id, hash) => (id + 1000000L, hash) }.toSeq
+    if (sentinel.isEmpty)
+      System.err.println("[streaming_incremental_dedup] <2 matching docs in " +
+        "this testdata generation: sentinel-free run, cross-batch state " +
+        "carry NOT exercised")
+    lastRunExercisedSentinel = sentinel.nonEmpty
+    drain(verdicts, "append")(
+      () => in.addData(first.toSeq: _*),
+      () => in.addData((second ++ sentinel).toSeq: _*))
+      .orderBy($"doc_id")
   }
 
   val streamingIncrementalDedupSql: String =
@@ -677,11 +627,9 @@ object StreamingOps {
   def streamingSessionWindow(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val base = 1700000000L
-    val in = MemoryStream[(Int, Long)]
-    val name = "graft_sess_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDF().toDF("uid", "sec")
+    val in = MemoryStream[(Int, Long)](s)
+    val sessions = in.toDF().toDF("uid", "sec")
       .select($"uid", timestamp_seconds($"sec").as("ts"))
       .withWatermark("ts", "10 seconds")
       .groupBy($"uid", session_window($"ts", "30 seconds"))
@@ -689,20 +637,15 @@ object StreamingOps {
       .select($"uid",
         unix_timestamp($"session_window.start").as("sess_start"),
         unix_timestamp($"session_window.end").as("sess_end"), $"n_events")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
+    drain(sessions, "append")(
       // batch 1: user 1 opens a session (events 10 s apart < 30 s gap),
       // user 2 opens a singleton session
-      in.addData((1, base + 10), (1, base + 25), (2, base + 40))
-      q.processAllAvailable()
+      () => in.addData((1, base + 10), (1, base + 25), (2, base + 40)),
       // batch 2: user 1's session extends across the batch boundary
       // (35 < 25 + 30); the far-future event then closes every session
-      in.addData((1, base + 35), (9, base + 10000))
-      q.processAllAvailable()
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name).orderBy($"uid", $"sess_start")
+      () => in.addData((1, base + 35), (9, base + 10000)),
+      () => ())
+      .orderBy($"uid", $"sess_start")
   }
 
   val streamingSessionWindowSql: String =
@@ -768,13 +711,12 @@ object StreamingOps {
   def streamingForeachBatchUpsert(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val outDir = TempDirs.create("graft_fbatch").toString
-    val ckpt = TempDirs.create("graft_fbatch_ckpt").toString
-    val in = MemoryStream[(Long, String, Long)](numPartitions = 1)
+    val ckpt = TempDirs.create("graft_fbatch_ckpt")
+    val in = MemoryStream[(Long, String, Long)](s, numPartitions = 1)
     val q = in.toDF().toDF("k", "v", "seq")
       .writeStream
-      .option("checkpointLocation", ckpt)
+      .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/batch=$batchId")
@@ -786,7 +728,7 @@ object StreamingOps {
       // batch 2 upserts key 1 and inserts key 3
       in.addData((1L, "a2", 3L), (3L, "c", 4L))
       q.processAllAvailable()
-    } finally q.stop()
+    } finally stop(q, ckpt) // `outDir` stays: the returned frame reads it lazily
     s.read.schema("k BIGINT, v STRING, seq BIGINT").parquet(outDir + "/batch=*")
       .groupBy($"k")
       .agg(max_by(struct($"v", $"seq"), $"seq").as("t"))
@@ -854,30 +796,22 @@ object StreamingOps {
   def streamingRollingAnomaly(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions, RocksDbStateStore)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val fixture = graft.Tables.events(s, dir)
       .filter($"event_id" < 1200)
       .select($"event_id", expr("unix_micros(ts)").as("us"), $"event_type",
         expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("c"))
       .orderBy($"us", $"event_id")
       .as[(Long, Long, String, Long)].collect()
-    val in = MemoryStream[(Long, Long, String, Long)](numPartitions = 1)
-    val name = "graft_ra_" + UUID.randomUUID().toString.replace("-", "")
-    val q = in.toDS()
+    val in = MemoryStream[(Long, Long, String, Long)](s, numPartitions = 1)
+    val alarms = in.toDS()
       .groupByKey(_._3)
       .transformWithState(new RollingAnomalyProcessor,
         TimeMode.None(), OutputMode.Append(),
         Encoders.product[(Long, String, Long, Double)])
       .toDF("event_id", "event_type", "baseline_n", "z")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .start()
-    try {
-      fixture.grouped(math.max(1, fixture.length / 3 + 1)).foreach { chunk =>
-        in.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    readSink(s, name).orderBy($"event_id")
+    drain(alarms, "append")(fixture.grouped(math.max(1, fixture.length / 3 + 1))
+      .map[() => Unit](chunk => () => in.addData(chunk.toSeq: _*)).toSeq: _*)
+      .orderBy($"event_id")
   }
 
   val streamingRollingAnomalySql: String =
@@ -917,25 +851,17 @@ object StreamingOps {
   def streamingDownsample(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, StreamPartitions)
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[(Long, Long, Long, Double)]
-    val name = "graft_ds_" + UUID.randomUUID().toString.replace("-", "")
+    val in = MemoryStream[(Long, Long, Long, Double)](s)
     val agg = in.toDF()
       .select($"_1".as("user_id"), timestamp_seconds($"_2").as("ts"),
         $"_3".as("event_id"), $"_4".as("value"))
       .groupBy($"user_id",
         window($"ts", "1 minute").getField("start").as("m_ts"))
       .agg(max(struct($"ts", $"event_id", $"value")).as("last"))
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try {
-      in.addData((1L, 1700000010L, 101L, 1.0), (1L, 1700000020L, 102L, 2.0),
-        (2L, 1700000070L, 103L, 3.0))
-      q.processAllAvailable()
-      in.addData((1L, 1700000030L, 104L, 4.0), (2L, 1700000070L, 105L, 5.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    readSink(s, name)
+    drain(agg, "complete")(
+      () => in.addData((1L, 1700000010L, 101L, 1.0), (1L, 1700000020L, 102L, 2.0),
+        (2L, 1700000070L, 103L, 3.0)),
+      () => in.addData((1L, 1700000030L, 104L, 4.0), (2L, 1700000070L, 105L, 5.0)))
       .select($"user_id", unix_timestamp($"m_ts").as("m_start"),
         $"last.event_id".as("event_id"), $"last.value".as("value"))
       .orderBy($"user_id", $"m_start")

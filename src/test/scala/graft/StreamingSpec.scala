@@ -1,10 +1,17 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import graft.streaming.StreamingOps
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
 /** Streaming ports of the reference's MiniCluster tests
   * (`TestFlinkStreams.java`): event-time window + maxBy through a
@@ -58,37 +65,25 @@ class StreamingSpec extends SparkTestBase {
     in.addData((15, base + 120), (17, base + 1501), (16, base + 1500))
     val events = in.toDF()
       .select(timestamp_seconds($"_2").as("ts"), $"_1".as("value"))
-    val q = StreamingOps.tumblingWindowMax(events)
-      .writeStream.format("memory").queryName("w1").outputMode("complete")
-      .start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("w1").orderBy("w_start").collect()
-      assert(rows.map(_.getInt(1)).toSeq == Seq(15, 17))
-    } finally q.stop()
+    val rows = StreamingOps.drain(StreamingOps.tumblingWindowMax(events), "complete")()
+      .orderBy("w_start").collect()
+    assert(rows.map(_.getInt(1)).toSeq == Seq(15, 17))
   }
 
   test("stateful concat emits every prefix in arrival order (K2)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[UnstableData]
-    val q = StreamingOps.concatPrefixes(in.toDS())
-      .toDF("group_id", "prefix")
-      .writeStream.format("memory").queryName("k2").outputMode("append")
-      .start()
-    try {
-      in.addData(UnstableData("a", 0, 0, "g1"), UnstableData("b", 0, 0, "g1"))
-      q.processAllAvailable()
+    val rows = StreamingOps.drain(
+        StreamingOps.concatPrefixes(in.toDS()).toDF("group_id", "prefix"), "append")(
+      () => in.addData(UnstableData("a", 0, 0, "g1"), UnstableData("b", 0, 0, "g1")),
       // state persists across micro-batches: next batch continues "ab"
-      in.addData(UnstableData("c", 0, 0, "g1"), UnstableData("x", 0, 0, "g2"))
-      q.processAllAvailable()
-      val rows = spark.table("k2").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(rows.contains(("g1", "abc")), s"expected cumulative abc in $rows")
-      assert(rows.contains(("g2", "x")))
-      val g1 = rows.filter(_._1 == "g1").map(_._2)
-      assert(g1 == Set("a", "ab", "abc"), s"prefix emission broken: $g1")
-    } finally q.stop()
+      () => in.addData(UnstableData("c", 0, 0, "g1"), UnstableData("x", 0, 0, "g2")))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(rows.contains(("g1", "abc")), s"expected cumulative abc in $rows")
+    assert(rows.contains(("g2", "x")))
+    val g1 = rows.filter(_._1 == "g1").map(_._2)
+    assert(g1 == Set("a", "ab", "abc"), s"prefix emission broken: $g1")
   }
 
   test("parquet file source streams the events table (windowed agg parity)") {
@@ -112,14 +107,9 @@ class StreamingSpec extends SparkTestBase {
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "1 hour"))
       .agg(count(lit(1)).as("n"))
-    val q = streamed.writeStream.format("memory").queryName("ev_stream")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamTotal = spark.table("ev_stream")
-        .agg(sum($"n")).collect()(0).getLong(0)
-      assert(streamTotal == batch.count())
-    } finally q.stop()
+    val streamTotal = StreamingOps.drain(streamed, "complete")()
+      .agg(sum($"n")).collect()(0).getLong(0)
+    assert(streamTotal == batch.count())
   }
 
   test("streaming_outer_join: unmatched impression emits a null click after watermark") {
@@ -183,23 +173,77 @@ class StreamingSpec extends SparkTestBase {
       .groupBy(window($"ts", "5 seconds").as("w"))
       .agg(sum($"v").as("total"))
       .select($"w.start".as("w"), $"total")
-    val q = agg.writeStream.format("memory").queryName("w2_late")
-      .outputMode("append").start()
-    try {
+    val firstWindow = StreamingOps.drain(agg, "append")(
       // batch 1: one event in the first window, plus an event far ahead
       // that advances the watermark past the first window's end
-      in.addData((1, base), (1, base + 100))
-      q.processAllAvailable()
+      () => in.addData((1, base), (1, base + 100)),
       // batch 2: a LATE event for the already-finalized first window —
       // must be dropped, not re-aggregated
-      in.addData((100, base + 1))
-      q.processAllAvailable()
-      val firstWindow = spark.table("w2_late")
-        .select(unix_timestamp($"w").as("ws"), $"total")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(firstWindow.get(base) == Some(1L),
-        s"late event leaked into the closed window: $firstWindow")
-    } finally q.stop()
+      () => in.addData((100, base + 1)))
+      .select(unix_timestamp($"w").as("ws"), $"total")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(firstWindow.get(base) == Some(1L),
+      s"late event leaked into the closed window: $firstWindow")
+  }
+
+  // the TempDirs root; the entries of `dir` whose names start with `prefix`;
+  // the checkpoints Spark makes itself when a query names none
+  private lazy val tempRoot = TempDirs.create("probe").getParent.toFile
+  private def entries(dir: File, prefix: String): Set[String] =
+    dir.list().filter(_.startsWith(prefix)).toSet
+  private def sparkTemporaries(): Set[String] =
+    entries(new File(System.getProperty("java.io.tmpdir")), "temporary-")
+
+  /** Records the name of every streaming query started on `s`. */
+  private final class StartedQueries(s: SparkSession) extends StreamingQueryListener {
+    val names = new ConcurrentLinkedQueue[String]()
+    s.streams.addListener(this)
+    override def onQueryStarted(e: QueryStartedEvent): Unit = names.add(e.name)
+    override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+  }
+
+  test("drain checkpoints under TempDirs, then stops its query and deletes the checkpoint") {
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
+    import s.implicits._
+    val started = new StartedQueries(s)
+    val temporaries = sparkTemporaries()
+    val in = MemoryStream[Long](s)
+    var running = Set.empty[String] // its checkpoint while the query runs
+    val out = StreamingOps.drain(in.toDF().toDF("v"), "append")(
+      () => in.addData(1L, 2L),
+      () => { running = entries(tempRoot, started.names.peek()); in.addData(3L) })
+    assert(out.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    assert(started.names.size == 1)
+    val name = started.names.peek()
+    assert(running.size == 1, s"no checkpoint of $name under $tempRoot while it ran")
+    assert(s.streams.active.isEmpty, "drain left its query running")
+    assert(entries(tempRoot, name).isEmpty, s"checkpoint of $name left under $tempRoot")
+    assert((sparkTemporaries() -- temporaries).isEmpty)
+  }
+
+  test("drain rethrows a failed batch with its query stopped and no checkpoint left") {
+    val s = GraftSession.derived(spark, StreamingOps.StreamPartitions)
+    import s.implicits._
+    val started = new StartedQueries(s)
+    val temporaries = sparkTemporaries()
+    val in = MemoryStream[Long](s)
+    val failing = in.toDS().map(v => if (v == 2L) throw new IllegalStateException("bad row") else v)
+    intercept[StreamingQueryException] {
+      StreamingOps.drain(failing.toDF(), "append")(() => in.addData(1L), () => in.addData(2L))
+    }
+    // a feed that throws before its batch runs leaves a live query behind
+    // unless drain stops it
+    val idle = MemoryStream[Long](s)
+    intercept[IllegalStateException] {
+      StreamingOps.drain(idle.toDF(), "append")(() => throw new IllegalStateException("feed failed"))
+    }
+    assert(started.names.size == 2)
+    assert(s.streams.active.isEmpty, "drain left a query running")
+    started.names.asScala.foreach { name =>
+      assert(entries(tempRoot, name).isEmpty, s"checkpoint of $name left under $tempRoot")
+    }
+    assert((sparkTemporaries() -- temporaries).isEmpty)
   }
 
   test("print sink (O1): console sink drains a micro-batch") {
@@ -218,37 +262,19 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("RocksDB state store: stateful concat state survives micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // swap the state backend for the production-grade RocksDB provider —
     // at 100 TB keyed state must spill off-heap/disk, which the default
     // HDFS-backed in-memory provider cannot
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[UnstableData](numPartitions = 1)
-      val name = "rocksdb_concat"
-      val q = StreamingOps.concatPrefixes(in.toDS())
-        .toDF("group_id", "prefix")
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .start()
-      try {
-        in.addData(UnstableData("a", 0, 0, "g"), UnstableData("b", 0, 0, "g"))
-        q.processAllAvailable()
-        in.addData(UnstableData("c", 0, 0, "g"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val prefixes = spark.table(name).collect().map(_.getString(1)).sorted
-      // state carried across batches through RocksDB: "ab" + "c" → "abc"
-      assert(prefixes.toSeq == Seq("a", "ab", "abc"))
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+    val s = GraftSession.derived(spark, StreamingOps.RocksDbStateStore)
+    import s.implicits._
+    val in = MemoryStream[UnstableData](s, numPartitions = 1)
+    val prefixes = StreamingOps.drain(
+        StreamingOps.concatPrefixes(in.toDS()).toDF("group_id", "prefix"), "append")(
+      () => in.addData(UnstableData("a", 0, 0, "g"), UnstableData("b", 0, 0, "g")),
+      () => in.addData(UnstableData("c", 0, 0, "g")))
+      .collect().map(_.getString(1)).sorted
+    // state carried across batches through RocksDB: "ab" + "c" → "abc"
+    assert(prefixes.toSeq == Seq("a", "ab", "abc"))
   }
 
   test("streaming text file roundtrip (S3+O2)") {
