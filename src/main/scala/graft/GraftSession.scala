@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.GraftOps
 import graft.streaming.CheckpointFiles
 import org.apache.spark.sql.SparkSession
 
@@ -7,10 +8,12 @@ import org.apache.spark.sql.SparkSession
   * test suite all build their session here, so a conf measured in one of
   * them holds for all of them. Master and shuffle partitions are the only
   * per-caller values; a query that needs its own confs takes a
-  * [[derived]] session. */
+  * [[derived]] session. Every session either method returns carries
+  * graft's SQL functions, planner strategy and optimizer rule
+  * ([[GraftOps.ensureInjected]]) from the start. */
 object GraftSession {
-  def local(master: String, shufflePartitions: Int): SparkSession =
-    SparkSession.builder()
+  def local(master: String, shufflePartitions: Int): SparkSession = {
+    val spark = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -43,12 +46,18 @@ object GraftSession {
       .config("spark.ui.retainedTasks", "1000")
       .config("spark.sql.streaming.numRecentProgressUpdates", "10")
       .getOrCreate()
+    GraftOps.ensureInjected(spark)
+    spark
+  }
 
   /** A clone of `parent` (shared SparkContext, own conf and temp views)
-    * with `confs` set on top of two fixed ones. Every query that needs its
-    * own confs — the streaming scenarios' small state-partition count, the
-    * RocksDB state store, a join rule switched off — derives its session
-    * here and nowhere else.
+    * with `confs` set on top of two fixed ones, and graft's extensions
+    * injected again: `newSession()` copies neither temporary functions
+    * nor `spark.experimental`, so this holds for a clone of a session
+    * graft did not build too. Every query that needs its own confs — the
+    * streaming scenarios' small state-partition count, the RocksDB state
+    * store, a join rule switched off — derives its session here and
+    * nowhere else.
     *
     *  - `spark.sql.artifact.isolation.enabled=false`: Spark gives every
     *    clone its own artifact UUID, and with isolation on the tasks of
@@ -86,6 +95,7 @@ object GraftSession {
     s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
       classOf[CheckpointFiles].getName)
     confs.foreach { case (k, v) => s.conf.set(k, v) }
+    GraftOps.ensureInjected(s)
     roots.put(s, root(parent))
     s
   }

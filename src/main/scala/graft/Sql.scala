@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL entry point: registers every testdata table as a temp view (plus
-  * the `graft_dot` function) so users can run plain Spark SQL against the
-  * same catalog the operator library uses:
+  * graft's SQL functions, [[graft.plans.GraftOps.ensureInjected]], for a
+  * session graft did not build) so users can run plain Spark SQL against
+  * the same catalog the operator library uses:
   *
   * {{{
   *   graft.Sql.register(spark, "/root/testdata/sf0.01")
@@ -24,8 +25,7 @@ object Sql {
     }
     // events goes through the nanos→micros conversion reader
     Tables.events(spark, dir).createOrReplaceTempView("events")
-    graft.functions.FixedPointDotProduct.register(spark)
-    graft.functions.TopKPairs.register(spark)
+    graft.plans.GraftOps.ensureInjected(spark)
   }
 
   def sql(spark: SparkSession, dir: String, query: String): DataFrame = {

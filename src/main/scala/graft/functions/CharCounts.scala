@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -93,13 +92,4 @@ object CharCounts {
       case _ => ((bytes(off) & 0x07) << 18) | ((bytes(off + 1) & 0x3f) << 12) |
         ((bytes(off + 2) & 0x3f) << 6) | (bytes(off + 3) & 0x3f)
     }
-
-  /** Register `graft_char_counts(text)` in the session's function
-    * registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_char_counts")))
-      reg.createOrReplaceTempFunction(
-        "graft_char_counts", exprs => CharCounts(exprs(0)), "scala_udf")
-  }
 }

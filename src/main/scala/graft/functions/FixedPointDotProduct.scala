@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -66,15 +65,4 @@ case class FixedPointDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FixedPointDotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-object FixedPointDotProduct {
-  /** Register `graft_dot(a, b)` in the session's function registry so it
-    * is usable from `expr(...)` strings. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")))
-      reg.createOrReplaceTempFunction(
-        "graft_dot", exprs => FixedPointDotProduct(exprs(0), exprs(1)), "scala_udf")
-  }
 }

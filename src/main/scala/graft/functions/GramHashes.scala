@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -171,30 +170,5 @@ object GramHashes {
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(out)
-  }
-
-  private def literalK(name: String, e: Expression): Int = e match {
-    case x if x.foldable => x.eval() match {
-      case n: Number => n.intValue()
-      // foldable-but-null (CAST(NULL AS INT)) gets the same usable
-      // error as a non-literal, not a raw NPE
-      case _ => throw new IllegalArgumentException(
-        s"$name: k must be a non-null integer literal")
-    }
-    case other => throw new IllegalArgumentException(
-      s"$name: k must be a literal, got $other")
-  }
-
-  /** Register `graft_gram_hashes(ws, k)` and `graft_gram_hashes60(ws, k)`
-    * (k a positive int literal) in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_gram_hashes")))
-      reg.createOrReplaceTempFunction("graft_gram_hashes", exprs =>
-        GramHashes(exprs(0), literalK("graft_gram_hashes", exprs(1))), "scala_udf")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_gram_hashes60")))
-      reg.createOrReplaceTempFunction("graft_gram_hashes60", exprs =>
-        GramHashes60(exprs(0), literalK("graft_gram_hashes60", exprs(1))), "scala_udf")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,15 +88,4 @@ case class L2SquaredDistance(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2SquaredDistance =
     copy(left = newLeft, right = newRight)
-}
-
-object L2SquaredDistance {
-  /** Register `graft_l2sq(a, b)` in the session's function registry so it
-    * is usable from `expr(...)` strings. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_l2sq")))
-      reg.createOrReplaceTempFunction(
-        "graft_l2sq", exprs => L2SquaredDistance(exprs(0), exprs(1)), "scala_udf")
-  }
 }

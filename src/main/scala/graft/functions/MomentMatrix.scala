@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -139,27 +138,4 @@ case class MomentMatrix(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MomentMatrix =
     copy(child = newChildren(0))
-}
-
-object MomentMatrix {
-  /** Register `graft_moments(q, d)` (d a positive int literal) in the
-    * session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_moments")))
-      reg.createOrReplaceTempFunction("graft_moments", exprs => {
-        val d = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case n: Number => n.intValue()
-            // a foldable-but-null d (CAST(NULL AS INT)) must get the same
-            // usable error as a non-literal, not a raw NPE
-            case _ => throw new IllegalArgumentException(
-              "graft_moments: d must be a non-null integer literal")
-          }
-          case other => throw new IllegalArgumentException(
-            s"graft_moments: d must be a literal, got $other")
-        }
-        MomentMatrix(exprs(0), d)
-      }, "scala_udf")
-  }
 }

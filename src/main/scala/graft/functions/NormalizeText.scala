@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,13 +77,5 @@ object NormalizeText {
       i += 1
     }
     UTF8String.fromBytes(java.util.Arrays.copyOf(out, m))
-  }
-
-  /** Register `graft_normalize_text(text)`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_normalize_text")))
-      reg.createOrReplaceTempFunction("graft_normalize_text",
-        exprs => NormalizeText(exprs(0)), "scala_udf")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -108,14 +107,5 @@ object Phash256 {
       i += 1
     }
     new GenericArrayData(qs)
-  }
-
-  /** Register `graft_phash256(payload)` in the session's function
-    * registry so it is usable from `expr(...)` strings. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_phash256")))
-      reg.createOrReplaceTempFunction(
-        "graft_phash256", exprs => Phash256(exprs(0)), "scala_udf")
   }
 }

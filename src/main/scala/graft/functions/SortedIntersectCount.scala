@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -90,16 +89,5 @@ object SortedIntersectCount {
       else j += 1
     }
     c
-  }
-
-  /** Register `graft_icount_sorted(a, b)` in the session's function
-    * registry so it is usable from `expr(...)` strings. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_icount_sorted")))
-      reg.createOrReplaceTempFunction(
-        "graft_icount_sorted",
-        exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
   }
 }

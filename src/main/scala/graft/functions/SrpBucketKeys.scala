@@ -2,8 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -114,24 +112,5 @@ object SrpBucketKeys {
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(keys)
-  }
-
-  /** Register `graft_srp_keys(q, tables, bits)` (both counts positive
-    * int literals) in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    def lit(e: Expression, name: String): Int = e match {
-      case x if x.foldable => x.eval() match {
-        case n: Number => n.intValue()
-        case _ => throw new IllegalArgumentException(
-          s"graft_srp_keys: $name must be a non-null integer literal")
-      }
-      case other => throw new IllegalArgumentException(
-        s"graft_srp_keys: $name must be a literal, got $other")
-    }
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_srp_keys")))
-      reg.createOrReplaceTempFunction("graft_srp_keys", exprs =>
-        SrpBucketKeys(exprs(0), lit(exprs(1), "tables"), lit(exprs(2), "bits")),
-        "scala_udf")
   }
 }

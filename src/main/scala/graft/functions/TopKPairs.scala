@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -137,29 +136,4 @@ case class TopKPairs(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TopKPairs =
     copy(sortExpr = newChildren(0), tieExpr = newChildren(1))
-}
-
-object TopKPairs {
-  /** Register `graft_topk(sort, tie, k)` (k a positive int literal) in the
-    * session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_topk")))
-      reg.createOrReplaceTempFunction("graft_topk", exprs => {
-        val k = exprs(2) match {
-          case e if e.foldable => e.eval() match {
-            case n: Number => n.intValue()
-            // foldable-but-null (CAST(NULL AS INT)) gets the same usable
-            // error as a non-literal, not a raw NPE
-            case _ => throw new IllegalArgumentException(
-              "graft_topk: k must be a non-null integer literal")
-          }
-          case other => throw new IllegalArgumentException(
-            s"graft_topk: k must be a literal, got $other")
-        }
-        // return the raw AggregateFunction: the analyzer's ResolveFunctions
-        // wraps it in an AggregateExpression (same path as builtin max/min)
-        TopKPairs(exprs(0), exprs(1), k)
-      }, "scala_udf")
-  }
 }

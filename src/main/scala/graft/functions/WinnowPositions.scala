@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,22 +90,5 @@ object WinnowPositions {
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(java.util.Arrays.copyOf(buf, m))
-  }
-
-  /** Register `graft_winnow_positions(hs, w)` (w a positive int literal)
-    * in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_winnow_positions")))
-      reg.createOrReplaceTempFunction("graft_winnow_positions", exprs =>
-        WinnowPositions(exprs(0), exprs(1) match {
-          case x if x.foldable => x.eval() match {
-            case n: Number => n.intValue()
-            case _ => throw new IllegalArgumentException(
-              "graft_winnow_positions: w must be a non-null integer literal")
-          }
-          case other => throw new IllegalArgumentException(
-            s"graft_winnow_positions: w must be a literal, got $other")
-        }), "scala_udf")
   }
 }

@@ -46,7 +46,6 @@ object DedupOps {
     * pair. */
   private[operators] def shingleSets(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GramHashes.register(spark)
     // r11: the gram construction + md5 collapse into one codegen'd
     // graft_gram_hashes pass per doc (kernel == the interpreted
     // transform/concat_ws tower + md5, pinned in FunctionsSpec); below
@@ -656,7 +655,6 @@ object DedupOps {
 
   def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.SortedIntersectCount.register(spark)
     val tok = containmentTok(spark, dir)
     // A-side prefix postings with their 1-based rank in the (df, h)
     // order; a doc with c_len < m provably cannot head a pair
@@ -771,7 +769,6 @@ object DedupOps {
 
   private def buildRepeatedSpans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GramHashes.register(spark)
     val K = SpanGram
     // graft_gram_hashes60 = the interpreted transform/slice/concat_ws/md5/
     // conv tower in one codegen'd pass (kernel == tower pinned in
@@ -1122,7 +1119,6 @@ object DedupOps {
       // rep pick via partial+final min aggregation, not a window — the
       // window sorted the whole corpus by content key; the groupBy
       // combines map-side
-      graft.functions.SortedIntersectCount.register(spark)
       val idx = shingleIndex(spark, dir)
       // persisted: sets feeds BOTH sides of the rep-pick join below, and
       // recomputing it is a full collect_list+sort+md5 aggregate over the

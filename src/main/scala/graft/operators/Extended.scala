@@ -917,7 +917,6 @@ object Extended {
     * shuffle to meet 10 rows in a sort-merge join. */
   def joinLimitBroadcast(spark: SparkSession, dir: String): DataFrame = {
     val s = GraftSession.derived(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    graft.plans.GraftOps.ensureInjected(s)
     import s.implicits._
     val topOrders = Tables.orders(s, dir)
       .select($"o_orderkey", $"o_totalprice")
@@ -1042,7 +1041,6 @@ object Extended {
     * window. Prices are exact integer cents. */
   def aggTopkCustom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.TopKPairs.register(spark)
     Tables.orders(spark, dir)
       .select($"o_orderstatus",
         ($"o_totalprice".cast(Dec) * 100).cast("long").as("price_cents"), $"o_orderkey")

@@ -343,7 +343,7 @@ object MultimodalOps {
             java.nio.file.Paths.get(out, s"$id.bin"), bytes)
         }
       }
-    spark.read.format("binaryFile").load(out + "/*.bin")
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(out)
       .select(
         regexp_extract($"path", "([0-9]+)\\.bin$", 1).cast("long").as("doc_id"),
         $"length".as("n_bytes"),
@@ -445,7 +445,6 @@ object MultimodalOps {
           concat(when(substring($"pred_text", 1, 1) === "a", "b").otherwise("a"),
             expr("substring(pred_text, 2)")))
           .otherwise($"text").as("payload"))
-    graft.functions.Phash256.register(spark)
     payloads
       // one codegen'd kernel call per row replaces the interpreted
       // 256-substring + fold tower ([[graft.functions.Phash256]]): the

@@ -216,7 +216,6 @@ object PipelineOps {
     * tower (parity-pinned) and allocates once per row. */
   def textNormalize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.NormalizeText.register(spark)
     Tables.documents(spark, dir)
       .select($"doc_id", expr("graft_normalize_text(text)").as("norm"))
       .select($"doc_id", md5($"norm").as("norm_hash"),
@@ -857,7 +856,6 @@ object PipelineOps {
     * billion distinct orderkeys. */
   def qualitySkewReport(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.TopKPairs.register(spark)
     val cnts = Tables.lineitem(spark, dir)
       .selectExpr(
         """stack(3,

@@ -38,7 +38,6 @@ object SimilarityOps {
     * corpus itself, so it persists MEMORY_AND_DISK (spills, never
     * recomputes) and is released by the app-end eviction backstop. */
   private[graft] def quantized(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.FixedPointDotProduct.register(spark)
     Stages.memo(spark, s"quantized:$dir") {
       import spark.implicits._
       Tables.embeddings(spark, dir)
@@ -217,7 +216,6 @@ object SimilarityOps {
   def similarityAnnLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     annTop3(spark, dir, "lsh") {
-      graft.functions.SrpBucketKeys.register(spark)
       val n = quantized(spark, dir)
       // the count is one cheap action against the memoized+persisted
       // quantized cache (bounded driver state: a single long), and it is
@@ -504,7 +502,6 @@ object SimilarityOps {
   private def kmeansCentScores(
       spark: SparkSession, dir: String, queriesOnly: Boolean): DataFrame = {
     import spark.implicits._
-    graft.functions.L2SquaredDistance.register(spark)
     val base0 = Tables.embeddings(spark, dir)
     val base = if (queriesOnly) base0.filter(isQuery($"vec_id")) else base0
     base
@@ -673,7 +670,6 @@ object SimilarityOps {
     * DECIMAL(38,0) and rounds to double exactly once. */
   def embeddingCovariance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.MomentMatrix.register(spark)
     quantized(spark, dir)
       .agg(expr("graft_moments(q, 64)").as("m"))
       .select(explode(expr(

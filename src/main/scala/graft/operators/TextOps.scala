@@ -497,8 +497,6 @@ object TextOps {
   private[graft] def winnowFps(spark: SparkSession, dir: String): DataFrame =
     Stages.memo(spark, s"winnow:$dir") {
       import spark.implicits._
-      graft.functions.GramHashes.register(spark)
-      graft.functions.WinnowPositions.register(spark)
       Tables.documents(spark, dir)
         .select($"doc_id", split(lower($"text"), " ").as("ts"))
         .filter(size($"ts") >= 8)
@@ -606,7 +604,6 @@ object TextOps {
 
   def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GramHashes.register(spark)
     // r11: 5-gram md5s from the codegen'd kernel; lower(hex(g)) restores
     // md5()'s lowercase-hex string so the lexicographic min is unchanged
     // (Spark's hex() is uppercase). Below 5 tokens the kernel emits no
@@ -1233,7 +1230,6 @@ object TextOps {
     * backstop as with every other cached stage. */
   private[graft] def dupWindows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GramHashes.register(spark)
     Stages.memo(spark, s"dupwins:$dir") {
       Tables.documents(spark, dir)
         .select($"doc_id", split(lower($"text"), " ").as("ts"))
@@ -1708,7 +1704,6 @@ object TextOps {
     * per-doc state stays bounded by the alphabet, never the corpus. */
   def textCharEntropy(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CharCounts.register(spark)
     Tables.documents(spark, dir)
       .select($"doc_id", expr("graft_char_counts(text)").as("xs"))
       // a zero-length text yields no (ch, c) rows on either engine

@@ -53,9 +53,9 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy for [[AsOfJoin]] — injected per-session by
-  * [[GraftOps.ensureInjected]] (runtime, works on any driver-provided
-  * session) and by [[GraftSparkExtensions]] (config-time).
+/** Planner strategy for [[AsOfJoin]] — injected into every session graft
+  * builds by [[GraftOps.ensureInjected]], which [[GraftOps.asofJoin]] also
+  * calls, so it works on any caller-provided session.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -23,8 +23,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * stays with JoinSelection — a hint it cannot honor is ignored, never
   * wrong.
   *
-  * Injected per-session via `experimental.extraOptimizations`
-  * ([[GraftOps.ensureInjected]]) or globally via [[GraftSparkExtensions]].
+  * Injected into every session graft builds, root or derived, through
+  * `experimental.extraOptimizations` ([[GraftOps.ensureInjected]]), so a
+  * query is planned with it whatever ran before.
   */
 object BroadcastBoundedLimit extends Rule[LogicalPlan] {
   /** 1000 rows of any realistic dimension payload is well under a megabyte

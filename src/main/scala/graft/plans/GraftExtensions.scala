@@ -1,49 +1,71 @@
 package graft.plans
 
-import graft.functions.FixedPointDotProduct
+import graft.functions._
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
-
-/** Config-time registration of every graft Catalyst extension, for users
-  * who own the session's `SparkSession.Builder`:
-  *
-  * {{{
-  * builder.withExtensions(new GraftSparkExtensions)   // or:
-  * builder.config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
-  * }}}
-  *
-  * Queries running inside a session someone ELSE built (the driver's
-  * Verify/Bench harness, a shared notebook session) get the same pieces
-  * injected at first use through [[GraftOps.ensureInjected]] — both paths
-  * register the identical strategy/rule objects, so double registration is
-  * harmless and order-independent.
-  */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => BroadcastBoundedLimit)
-  }
-}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Public entry points for the custom Catalyst pieces. */
 object GraftOps {
 
-  /** Idempotently wire the graft strategy + optimizer rule into an
-    * already-constructed session via `ExperimentalMethods` — the public,
-    * runtime-mutable extension point (`spark.experimental`). */
+  /** `fn`'s argument `arg` as an `Int`. It must be a literal: a kernel's
+    * shape (gram length, dimension, table count) is fixed at analysis. A
+    * foldable null (`CAST(NULL AS INT)`) gets the same usable error as a
+    * non-literal, not a raw NPE. */
+  private def intLiteral(fn: String, arg: String, e: Expression): Int = e match {
+    case x if x.foldable => x.eval() match {
+      case n: Number => n.intValue()
+      case _ => throw new IllegalArgumentException(
+        s"$fn: $arg must be a non-null integer literal")
+    }
+    case other => throw new IllegalArgumentException(
+      s"$fn: $arg must be a literal, got $other")
+  }
+
+  /** Every graft SQL function with a fixed definition, by name. A new
+    * kernel is one entry here; [[ensureInjected]] puts all of them into
+    * every session. (`graft_bloom_*` probes carry per-dataset filter bytes
+    * and are registered by [[BloomMightContain.buildAndRegister]].) The
+    * aggregates (`graft_moments`, `graft_topk`) build the raw
+    * `AggregateFunction`: the analyzer wraps it in an
+    * `AggregateExpression`, as for builtin `max`. */
+  val functions: Seq[(String, FunctionBuilder)] = Seq(
+    ("graft_char_counts", e => CharCounts(e(0))),
+    ("graft_dot", e => FixedPointDotProduct(e(0), e(1))),
+    ("graft_gram_hashes", e =>
+      GramHashes(e(0), intLiteral("graft_gram_hashes", "k", e(1)))),
+    ("graft_gram_hashes60", e =>
+      GramHashes60(e(0), intLiteral("graft_gram_hashes60", "k", e(1)))),
+    ("graft_icount_sorted", e => SortedIntersectCount(e(0), e(1))),
+    ("graft_l2sq", e => L2SquaredDistance(e(0), e(1))),
+    ("graft_moments", e => MomentMatrix(e(0), intLiteral("graft_moments", "d", e(1)))),
+    ("graft_normalize_text", e => NormalizeText(e(0))),
+    ("graft_phash256", e => Phash256(e(0))),
+    ("graft_srp_keys", e => SrpBucketKeys(e(0),
+      intLiteral("graft_srp_keys", "tables", e(1)), intLiteral("graft_srp_keys", "bits", e(2)))),
+    ("graft_topk", e => TopKPairs(e(0), e(1), intLiteral("graft_topk", "k", e(2)))),
+    ("graft_winnow_positions", e =>
+      WinnowPositions(e(0), intLiteral("graft_winnow_positions", "w", e(1)))))
+
+  /** Idempotently wire the graft strategy, optimizer rule and
+    * [[functions]] into an already-built session, through
+    * `spark.experimental` and the session's function registry. Neither is
+    * copied by `newSession()`, so `GraftSession.local` and
+    * `GraftSession.derived` call this on every session they return; call
+    * it yourself only on a session graft did not build. */
   def ensureInjected(spark: SparkSession): Unit = synchronized {
     val em = spark.experimental
     if (!em.extraStrategies.contains(AsOfJoinStrategy))
       em.extraStrategies = em.extraStrategies :+ AsOfJoinStrategy
     if (!em.extraOptimizations.contains(BroadcastBoundedLimit))
       em.extraOptimizations = em.extraOptimizations :+ BroadcastBoundedLimit
-    FixedPointDotProduct.register(spark)
-    graft.functions.L2SquaredDistance.register(spark)
-    graft.functions.TopKPairs.register(spark)
-    graft.functions.Phash256.register(spark)
-    graft.functions.MomentMatrix.register(spark)
-    graft.functions.CharCounts.register(spark)
-    graft.functions.GramHashes.register(spark)
+    val reg = spark.sessionState.functionRegistry
+    functions.foreach { case (name, builder) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 
   /** Left as-of join (see [[AsOfJoin]] for semantics and the scale

@@ -729,7 +729,11 @@ object StreamingOps {
       in.addData((1L, "a2", 3L), (3L, "c", 4L))
       q.processAllAvailable()
     } finally stop(q, ckpt) // `outDir` stays: the returned frame reads it lazily
-    s.read.schema("k BIGINT, v STRING, seq BIGINT").parquet(outDir + "/batch=*")
+    // the directory, not a `batch=*` glob: Spark's sink-log lookup stats a
+    // glob literally and logs the failure; recursive lookup reads the same
+    // files and, like the glob, infers no `batch` partition column
+    s.read.schema("k BIGINT, v STRING, seq BIGINT").option("recursiveFileLookup", "true")
+      .parquet(outDir)
       .groupBy($"k")
       .agg(max_by(struct($"v", $"seq"), $"seq").as("t"))
       .select($"k", $"t.v".as("v"), $"t.seq".as("seq"))

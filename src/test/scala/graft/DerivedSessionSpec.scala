@@ -6,11 +6,12 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import graft.plans.{AsOfJoinStrategy, BroadcastBoundedLimit, GraftOps}
 import graft.streaming.{CheckpointFiles, StreamingOps}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.Forks
-import org.apache.spark.sql.ForeachWriter
+import org.apache.spark.sql.{ForeachWriter, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -30,7 +31,8 @@ object LoaderProbe {
 
 /** The two fixed confs of [[GraftSession.derived]], each pinned by the
   * mechanism it exists for: one task class loader across clones, and
-  * checkpoint files written without a forked `chmod`. */
+  * checkpoint files written without a forked `chmod`; and the extensions
+  * every derived session carries from birth. */
 class DerivedSessionSpec extends SparkTestBase {
 
   test("successive streaming queries on derived sessions share one task class loader") {
@@ -82,6 +84,28 @@ class DerivedSessionSpec extends SparkTestBase {
     val graft = written(new CheckpointFiles(_, _))
     val stock = written(new FileSystemBasedCheckpointFileManager(_, _))
     assert(graft == stock, s"graft wrote $graft, the stock manager $stock")
+  }
+
+  test("every derived session carries graft's SQL functions, strategy and rule, once") {
+    // newSession() copies neither temporary functions nor
+    // spark.experimental, so a clone without its own ensureInjected would
+    // plan without the rule and fail to resolve graft_* in SQL text
+    def assertInjected(s: SparkSession, what: String): Unit = {
+      val missing = GraftOps.functions.map(_._1).filterNot(s.catalog.functionExists)
+      assert(missing.isEmpty, s"$what: unresolved functions $missing")
+      assert(s.experimental.extraStrategies.count(_ == AsOfJoinStrategy) == 1,
+        s"$what: strategies ${s.experimental.extraStrategies}")
+      assert(s.experimental.extraOptimizations.count(_ == BroadcastBoundedLimit) == 1,
+        s"$what: optimizer rules ${s.experimental.extraOptimizations}")
+    }
+    assertInjected(spark, "root")
+    val derived = GraftSession.derived(spark, StreamingOps.StreamPartitions)
+    assertInjected(derived, "derived")
+    assertInjected(GraftSession.derived(derived), "derived of derived")
+    // a root graft did not build (the benchmark's): one ensureInjected
+    val foreign = spark.newSession()
+    GraftOps.ensureInjected(foreign)
+    assertInjected(GraftSession.derived(foreign), "derived of a foreign session")
   }
 
   test("a streaming query on a derived session forks no chmod") {

@@ -10,15 +10,7 @@ import org.apache.spark.sql.functions._
   * are asserted here directly. */
 class FunctionsSpec extends SparkTestBase {
 
-  private def registerAll(): Unit = {
-    graft.functions.Phash256.register(spark)
-    graft.functions.CharCounts.register(spark)
-    graft.functions.TopKPairs.register(spark)
-    graft.functions.MomentMatrix.register(spark)
-  }
-
   test("graft_phash256 equals the built-in HOF tower, incl. multibyte and edge lengths") {
-    registerAll()
     import spark.implicits._
     val texts = Seq(
       "", "a", "ab", "the quick brown fox jumps over the lazy dog",
@@ -46,7 +38,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_char_counts equals the explode+sort_array tower, incl. multibyte") {
-    registerAll()
     import spark.implicits._
     val texts = Seq("a", "abca", "z y x z", "héllo ÿ héllo", "日本語の日本")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
@@ -70,7 +61,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_topk buffer: boundary insertions keep the total order") {
-    registerAll()
     import spark.implicits._
     // ties on sort_val resolve ascending on tie_val; k larger than the
     // group exercises the partial-buffer path, k=1 the full-eviction path
@@ -87,8 +77,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_gram_hashes equals the transform/slice/md5 tower, incl. short inputs") {
-    registerAll()
-    graft.functions.GramHashes.register(spark)
     import spark.implicits._
     val texts = Seq("a b c d e f g h i j", "one two three", "onlyone", "",
       "a  b c", // double space -> empty token, concat_ws keeps it
@@ -110,8 +98,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("randomized parity: kernels == towers on 150 generated strings") {
-    registerAll()
-    graft.functions.GramHashes.register(spark)
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
@@ -162,7 +148,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_normalize_text equals the lower+regex tower, incl. unicode and space edges") {
-    graft.functions.NormalizeText.register(spark)
     import spark.implicits._
     val texts = Seq(
       "", " ", "   ", "a", "A", "  Hello,   World!  ",
@@ -188,8 +173,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_srp_keys equals the per-bit graft_dot column tower it replaced") {
-    graft.functions.SrpBucketKeys.register(spark)
-    graft.functions.FixedPointDotProduct.register(spark)
     import spark.implicits._
     // deterministic fixed-point vectors spanning signs and magnitudes,
     // incl. a short (truncated-dims) vector and an all-zero vector
@@ -231,8 +214,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_winnow_positions equals the array_distinct tower on random hash arrays") {
-    registerAll()
-    graft.functions.WinnowPositions.register(spark)
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
@@ -261,7 +242,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_moments equals the explode+sum tower on a small matrix") {
-    registerAll()
     import spark.implicits._
     val vecs = Seq(
       Array(1L, 2L, 3L), Array(-4L, 5L, 6L), Array(7L, -8L, 9L))
@@ -278,7 +258,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_moments rejects irregular vectors instead of silently truncating") {
-    registerAll()
     import spark.implicits._
     // wrong-length row: the documented bit-parity with the explode+sum
     // tower only holds for fixed-width vectors, so a short row must fail
@@ -300,8 +279,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("literal-k registry builders reject a foldable null with a usable error") {
-    registerAll()
-    graft.functions.GramHashes.register(spark)
     import spark.implicits._
     val doc = Seq((1L, Array("a", "b", "c"))).toDF("id", "ws")
     val vec = Seq(Array(1L, 2L)).toDF("q")
@@ -309,7 +286,9 @@ class FunctionsSpec extends SparkTestBase {
     for ((name, frame) <- Seq(
       ("graft_moments(q, cast(null as int))", vec),
       ("graft_gram_hashes(ws, cast(null as int))", doc),
-      ("graft_topk(s, t, cast(null as int))", pair))) {
+      ("graft_topk(s, t, cast(null as int))", pair),
+      ("graft_winnow_positions(q, cast(null as int))", vec),
+      ("graft_srp_keys(q, 2, cast(null as int))", vec))) {
       val e = intercept[Exception] { frame.selectExpr(name).collect() }
       def chain(t: Throwable): Seq[String] =
         Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
@@ -320,7 +299,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_gram_hashes60 equals the conv(substr(hex...)) tower over graft_gram_hashes") {
-    graft.functions.GramHashes.register(spark)
     import spark.implicits._
     val docs = Seq(
       Array("a", "b", "c", "d", "e", "fgh", "ijkl"),
@@ -343,7 +321,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_icount_sorted equals size(array_intersect) on sorted sets") {
-    graft.functions.SortedIntersectCount.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     def sortedSet(n: Int, bound: Long): Array[Long] =
@@ -370,8 +347,6 @@ class FunctionsSpec extends SparkTestBase {
     // the kernels read slots with getLong, which would silently turn a
     // null element into 0 — a contract-violating producer must fail
     // with a named error, not corrupt counts/keys (r15 ADVICE)
-    graft.functions.SortedIntersectCount.register(spark)
-    graft.functions.SrpBucketKeys.register(spark)
     def mustFail(sql: String, fn: String): Unit = {
       val e = intercept[Exception] {
         spark.sql(s"SELECT $sql").collect()
@@ -392,7 +367,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("graft_l2sq equals the zip_with fold, incl. null-on-dimension-mismatch") {
-    graft.functions.L2SquaredDistance.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0, 2.0, 3.0), Array(4.0, 6.0, 3.5)),   // plain

@@ -292,7 +292,6 @@ class OperatorSpec extends SparkTestBase {
     // quantization error vs the TRUE cosine stays modest even on random
     // vectors (16 codewords × 8-dim subspaces, PQ's worst case): mean
     // |approx - exact| measured 0.13 at sf0.001/sf0.01 — pin < 0.25
-    graft.functions.FixedPointDotProduct.register(spark)
     val n = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"),
         expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1000000) as bigint))").as("q"))
@@ -310,7 +309,6 @@ class OperatorSpec extends SparkTestBase {
 
   test("similarity_ivfpq_trained: Lloyd codebooks do not regress ADC error or recall@3") {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.FixedPointDotProduct.register(spark)
     val n = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"),
         expr("transform(cast(embedding as array<double>), x -> cast(floor(x * 1000000) as bigint))").as("q"))

@@ -339,7 +339,9 @@ class StreamingSpec extends SparkTestBase {
     val q2 = start()
     in.addData((1L, "a2", 3L))
     try q2.processAllAvailable() finally q2.stop()
-    val merged = s.read.parquet(outDir + "/batch=*")
+    // every batch dir, read as the scenario reads it (no `batch=*` glob)
+    def batches() = s.read.option("recursiveFileLookup", "true").parquet(outDir)
+    val merged = batches()
       .groupBy($"k")
       .agg(org.apache.spark.sql.functions.max_by(
         org.apache.spark.sql.functions.struct($"v", $"seq"), $"seq").as("t"))
@@ -349,7 +351,7 @@ class StreamingSpec extends SparkTestBase {
     assert(merged == Seq((1L, "a2", 3L), (2L, "b", 2L)),
       s"restart duplicated or lost upserts: $merged")
     // and the raw row count proves batch 0 was not re-emitted
-    assert(s.read.parquet(outDir + "/batch=*").count() == 3)
+    assert(batches().count() == 3)
   }
 
   test("graftgen DSv2 micro-batch stream delivers all rows across multiple real batches") {
