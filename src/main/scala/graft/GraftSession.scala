@@ -4,9 +4,9 @@ import graft.plans.GraftOps
 import graft.streaming.CheckpointFiles
 import org.apache.spark.sql.SparkSession
 
-/** The one place engine confs live: `Bench`, `Verify`, `Plans` and the
-  * test suite all build their session here, so a conf measured in one of
-  * them holds for all of them. Master and shuffle partitions are the only
+/** The one place engine confs live: `Bench`, `Verify` and the test
+  * suite all build their session here, so a conf measured in one of them
+  * holds for all of them. Master and shuffle partitions are the only
   * per-caller values; a query that needs its own confs takes a
   * [[derived]] session. Every session either method returns carries
   * graft's SQL functions, planner strategy and optimizer rule

@@ -44,6 +44,9 @@ object SparkEntry {
   private def q(name: String, build: Build): QuerySpec = QuerySpec(name, build, None, None)
   private def q(name: String, build: Build, oracle: String): QuerySpec =
     QuerySpec(name, build, Some(oracle), None)
+  /** A query whose Spark build and DuckDB oracle are the same SQL text. */
+  private def sqlQ(name: String, text: String): QuerySpec =
+    QuerySpec(name, (s, d) => Sql.sql(s, d, text), Some(text), None)
 
   /** The entries as given, after checking that no name repeats: a map
     * derived by name would otherwise keep one entry per name silently.
@@ -120,27 +123,27 @@ object SparkEntry {
       GenSourceOps.streamingDsv2ChainedWindowsSql),
     // §2.9 relational extensions
     q("agg_pricing_summary", Relational.aggPricingSummary, Relational.aggPricingSummarySql),
-    q("sql_shipping_priority", Sql.sqlShippingPriority, Sql.shippingPrioritySql),
-    q("sql_customer_distribution", Sql.sqlCustomerDistribution, Sql.customerDistributionSql),
-    q("sql_min_cost_supplier", Sql.sqlMinCostSupplier, Sql.minCostSupplierSql),
-    q("sql_local_supplier_volume", Sql.sqlLocalSupplierVolume, Sql.localSupplierVolumeSql),
-    q("sql_order_priority_exists", Sql.sqlOrderPriorityExists, Sql.orderPriorityExistsSql),
-    q("sql_returned_item_revenue", Sql.sqlReturnedItemRevenue, Sql.returnedItemRevenueSql),
-    q("sql_promo_revenue", Sql.sqlPromoRevenue, Sql.promoRevenueSql),
-    q("sql_top_supplier", Sql.sqlTopSupplier, Sql.topSupplierSql),
-    q("sql_large_orders", Sql.sqlLargeOrders, Sql.largeOrdersSql),
-    q("sql_forecast_revenue", Sql.sqlForecastRevenue, Sql.forecastRevenueSql),
-    q("sql_nation_trade_volume", Sql.sqlNationTradeVolume, Sql.nationTradeVolumeSql),
-    q("sql_shipmode_priority", Sql.sqlShipmodePriority, Sql.shipmodePrioritySql),
-    q("sql_small_quantity_revenue", Sql.sqlSmallQuantityRevenue, Sql.smallQuantityRevenueSql),
-    q("sql_disjunctive_revenue", Sql.sqlDisjunctiveRevenue, Sql.disjunctiveRevenueSql),
+    sqlQ("sql_shipping_priority", Sql.shippingPrioritySql),
+    sqlQ("sql_customer_distribution", Sql.customerDistributionSql),
+    sqlQ("sql_min_cost_supplier", Sql.minCostSupplierSql),
+    sqlQ("sql_local_supplier_volume", Sql.localSupplierVolumeSql),
+    sqlQ("sql_order_priority_exists", Sql.orderPriorityExistsSql),
+    sqlQ("sql_returned_item_revenue", Sql.returnedItemRevenueSql),
+    sqlQ("sql_promo_revenue", Sql.promoRevenueSql),
+    sqlQ("sql_top_supplier", Sql.topSupplierSql),
+    sqlQ("sql_large_orders", Sql.largeOrdersSql),
+    sqlQ("sql_forecast_revenue", Sql.forecastRevenueSql),
+    sqlQ("sql_nation_trade_volume", Sql.nationTradeVolumeSql),
+    sqlQ("sql_shipmode_priority", Sql.shipmodePrioritySql),
+    sqlQ("sql_small_quantity_revenue", Sql.smallQuantityRevenueSql),
+    sqlQ("sql_disjunctive_revenue", Sql.disjunctiveRevenueSql),
     q("sql_waiting_suppliers", Sql.sqlWaitingSuppliers, Sql.waitingSuppliersSql),
-    q("sql_dormant_accounts", Sql.sqlDormantAccounts, Sql.dormantAccountsSql),
-    q("sql_market_share", Sql.sqlMarketShare, Sql.marketShareSql),
-    q("sql_product_profit", Sql.sqlProductProfit, Sql.productProfitSql),
-    q("sql_important_stock", Sql.sqlImportantStock, Sql.importantStockSql),
-    q("sql_supplier_count", Sql.sqlSupplierCount, Sql.supplierCountSql),
-    q("sql_excess_suppliers", Sql.sqlExcessSuppliers, Sql.excessSuppliersSql),
+    sqlQ("sql_dormant_accounts", Sql.dormantAccountsSql),
+    sqlQ("sql_market_share", Sql.marketShareSql),
+    sqlQ("sql_product_profit", Sql.productProfitSql),
+    sqlQ("sql_important_stock", Sql.importantStockSql),
+    sqlQ("sql_supplier_count", Sql.supplierCountSql),
+    sqlQ("sql_excess_suppliers", Sql.excessSuppliersSql),
     q("join_orders_customers", Relational.joinOrdersCustomers, Relational.joinOrdersCustomersSql),
     q("topn_revenue", Relational.topnRevenue, Relational.topnRevenueSql),
     q("window_rank_orders", Relational.windowRankOrders, Relational.windowRankOrdersSql),

@@ -53,9 +53,6 @@ object Sql {
       |ORDER BY revenue DESC, l_orderkey
       |LIMIT 10""".stripMargin
 
-  def sqlShippingPriority(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, shippingPrioritySql)
-
   /** TPC-H Q13-style customer order-count distribution: how many
     * customers placed exactly k orders, INCLUDING the zero-order
     * customers the left outer join preserves. ONE shared ANSI text on
@@ -70,9 +67,6 @@ object Sql {
       |  GROUP BY c.c_custkey) t
       |GROUP BY c_count
       |ORDER BY custdist DESC, c_count DESC""".stripMargin
-
-  def sqlCustomerDistribution(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, customerDistributionSql)
 
   /** TPC-H Q2-style correlated scalar subquery (adapted to this schema:
     * lineitem doubles as the part-supplier price list): for every large
@@ -95,9 +89,6 @@ object Sql {
       |    SELECT min(l2.l_extendedprice) FROM lineitem l2
       |    WHERE l2.l_partkey = p.p_partkey)
       |ORDER BY p_partkey, s_name""".stripMargin
-
-  def sqlMinCostSupplier(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, minCostSupplierSql)
 
   /** TPC-H Q5-style local-supplier volume: revenue per nation for one
     * region and one order year, where the lineitem's supplier and the
@@ -125,9 +116,6 @@ object Sql {
       |GROUP BY n_name
       |ORDER BY revenue DESC, n_name""".stripMargin
 
-  def sqlLocalSupplierVolume(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, localSupplierVolumeSql)
-
   /** TPC-H Q4-style correlated EXISTS (adapted: this lineitem has no
     * commit/receipt dates, so "late" orders become orders with a returned
     * line). ONE shared ANSI text on both engines. Catalyst rewrites the
@@ -145,9 +133,6 @@ object Sql {
       |                AND l.l_returnflag = 'R')
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
-
-  def sqlOrderPriorityExists(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, orderPriorityExistsSql)
 
   /** TPC-H Q10-style returned-item revenue: top-20 customers by revenue
     * lost to returns in a six-month window. ONE shared ANSI text on both
@@ -171,9 +156,6 @@ object Sql {
       |ORDER BY revenue DESC, c_custkey
       |LIMIT 20""".stripMargin
 
-  def sqlReturnedItemRevenue(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, returnedItemRevenueSql)
-
   /** TPC-H Q14-style promotion share: one month of lineitem joined to
     * part, split into promo vs total revenue by conditional aggregation.
     * ONE shared ANSI text on both engines. Numerator and denominator are
@@ -195,9 +177,6 @@ object Sql {
       |WHERE l_partkey = p_partkey
       |  AND l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
       |  AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'""".stripMargin
-
-  def sqlPromoRevenue(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, promoRevenueSql)
 
   /** TPC-H Q15-style top supplier: a revenue CTE reused twice — once as
     * the join side, once inside a scalar `max` subquery. ONE shared ANSI
@@ -221,9 +200,6 @@ object Sql {
       |  AND total_revenue = (SELECT max(total_revenue) FROM revenue)
       |ORDER BY s_suppkey""".stripMargin
 
-  def sqlTopSupplier(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, topSupplierSql)
-
   /** TPC-H Q18-style large-volume orders: a HAVING-filtered aggregate
     * subquery (orders whose line quantities sum past a threshold) feeds
     * an IN predicate — Catalyst rewrites it to a LEFT SEMI join against
@@ -244,9 +220,6 @@ object Sql {
       |ORDER BY total_qty DESC, o_orderkey
       |LIMIT 20""".stripMargin
 
-  def sqlLargeOrders(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, largeOrdersSql)
-
   /** TPC-H Q6-style revenue forecast: the canonical PURE-PUSHDOWN query
     * — single table, three conjunctive range predicates, one aggregate,
     * no join, no group. All three predicates reach the parquet scan as
@@ -264,9 +237,6 @@ object Sql {
       |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
       |  AND l_discount BETWEEN 0.05 AND 0.07
       |  AND l_quantity < 24""".stripMargin
-
-  def sqlForecastRevenue(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, forecastRevenueSql)
 
   /** TPC-H Q7-style bilateral trade volume: revenue shipped between two
     * specific nations, per direction per year. The interesting plan
@@ -299,9 +269,6 @@ object Sql {
       |GROUP BY supp_nation, cust_nation, l_year
       |ORDER BY supp_nation, cust_nation, l_year""".stripMargin
 
-  def sqlNationTradeVolume(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, nationTradeVolumeSql)
-
   /** TPC-H Q12-style priority-by-class counts (adapted: this schema has
     * no l_shipmode, so l_returnflag plays the class column): one pass
     * over a date-windowed lineitem⋈orders join producing two
@@ -321,9 +288,6 @@ object Sql {
       |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
-
-  def sqlShipmodePriority(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, shipmodePrioritySql)
 
   /** TPC-H Q17-style small-quantity revenue: a correlated scalar AVG
     * subquery (lines below 20% of their part's average quantity).
@@ -345,9 +309,6 @@ object Sql {
       |    SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
       |    WHERE l2.l_partkey = p_partkey)""".stripMargin
 
-  def sqlSmallQuantityRevenue(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, smallQuantityRevenueSql)
-
   /** TPC-H Q19-style disjunctive-predicate revenue (adapted: p_size
     * ranges replace the container lists): three OR'd conjunctions
     * spanning both join sides. The optimizer-shape point: Catalyst
@@ -368,9 +329,6 @@ object Sql {
       |        AND l_quantity >= 10 AND l_quantity <= 20)
       |    OR (p_brand = 'Brand#34' AND p_size BETWEEN 20 AND 35
       |        AND l_quantity >= 20 AND l_quantity <= 30))""".stripMargin
-
-  def sqlDisjunctiveRevenue(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, disjunctiveRevenueSql)
 
   /** TPC-H Q21-style waiting-suppliers (adapted: "late" = shipped more
     * than 60 days after the order date, since this schema has no
@@ -482,9 +440,6 @@ object Sql {
       |GROUP BY cntrycode
       |ORDER BY cntrycode""".stripMargin
 
-  def sqlDormantAccounts(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, dormantAccountsSql)
-
   /** TPC-H Q8-style market share: one nation's slice of regional PROMO
     * revenue per order year — an 8-relation join where everything but
     * the lineitem⋈orders spine is a bounded broadcast dim, then a
@@ -511,9 +466,6 @@ object Sql {
       |GROUP BY o_year
       |ORDER BY o_year""".stripMargin
 
-  def sqlMarketShare(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, marketShareSql)
-
   /** TPC-H Q9-style product-line profit (adapted: cost =
     * 0.1 × p_retailprice × quantity stands in for the missing
     * partsupp.ps_supplycost): profit per supplier nation per year over
@@ -537,9 +489,6 @@ object Sql {
       |GROUP BY nation, o_year
       |ORDER BY nation, o_year DESC""".stripMargin
 
-  def sqlProductProfit(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, productProfitSql)
-
   /** TPC-H Q11-style important stock (adapted: per-part lineitem value
     * stands in for partsupp value): parts whose value exceeds a fixed
     * fraction of the GLOBAL total — the aggregate CTE is used both as
@@ -557,9 +506,6 @@ object Sql {
       |WHERE v > (SELECT sum(v) * 0.0008 FROM val)
       |ORDER BY part_value DESC, l_partkey""".stripMargin
 
-  def sqlImportantStock(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, importantStockSql)
-
   /** TPC-H Q16-style supplier count (adapted: suppliers with negative
     * balances play the complaints blacklist): distinct suppliers per
     * (brand, type, size) over an IN-list size filter, minus a NOT IN
@@ -576,9 +522,6 @@ object Sql {
       |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
       |GROUP BY p_brand, p_type, p_size
       |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin
-
-  def sqlSupplierCount(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, supplierCountSql)
 
   /** TPC-H Q20-style high-volume part suppliers (adapted: "shipped more
     * than 50 units of one PROMO part in 1997" stands in for the
@@ -598,7 +541,4 @@ object Sql {
       |    HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 50)
       |  AND s_nationkey = n_nationkey
       |ORDER BY s_suppkey""".stripMargin
-
-  def sqlExcessSuppliers(spark: SparkSession, dir: String): DataFrame =
-    sql(spark, dir, excessSuppliersSql)
 }

@@ -106,16 +106,11 @@ object SimilarityOps {
     math.min(MaxBits, math.max(BaseBits, log2n - 6))
   }
 
-  /** ±1 projection vectors — the md5-parity scheme lives in the codegen
-    * signature kernel ([[graft.functions.SrpBucketKeys.projection]]);
-    * this alias keeps the operators-side call sites/tests readable. */
-  private[operators] def projection(i: Int): Array[Long] =
-    graft.functions.SrpBucketKeys.projection(i)
-
   /** Oracle-side buckets: k from the same occupancy law (single-row `kk`
     * CTE), ±1 signs recomputed from DuckDB's md5 (identical strings and
-    * parity rule as [[projection]]), sign of the exact integer sum per
-    * projection, bits grouped into per-table keys. */
+    * parity rule as [[graft.functions.SrpBucketKeys.projection]]), sign
+    * of the exact integer sum per projection, bits grouped into
+    * per-table keys. */
   private def bucketCte: String =
     s"""kk AS (
        |  SELECT greatest($BaseBits,

@@ -45,7 +45,8 @@ class DerivedSessionSpec extends SparkTestBase {
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val in = MemoryStream[Long](numPartitions = 2)
-      val q = in.toDS().writeStream.foreach(new LoaderProbe).start()
+      val q = in.toDS().writeStream.foreach(new LoaderProbe)
+        .option("checkpointLocation", TempDirs.create("graft_loader_ckpt").toString).start()
       try {
         in.addData(1L, 2L, 3L)
         q.processAllAvailable()

@@ -254,7 +254,8 @@ class StreamingSpec extends SparkTestBase {
     // (console output itself is not capturable by design)
     val in = MemoryStream[Person]
     in.addData(Person("Fred", 35), Person("Wilma", 30))
-    val q = in.toDS().writeStream.format("console").start()
+    val q = in.toDS().writeStream.format("console")
+      .option("checkpointLocation", TempDirs.create("graft_console_ckpt").toString).start()
     try {
       q.processAllAvailable()
       assert(q.lastProgress.sources.nonEmpty)
@@ -302,6 +303,7 @@ class StreamingSpec extends SparkTestBase {
     val in = MemoryStream[(Long, Long)](numPartitions = 1)
     val q = in.toDF().toDF("k", "v").groupBy($"k").agg(count(lit(1)).as("n"))
       .writeStream.format("memory").queryName("rocks_probe").outputMode("complete")
+      .option("checkpointLocation", TempDirs.create("graft_rocks_ckpt").toString)
       .start()
     try {
       in.addData((1L, 1L), (1L, 2L), (2L, 1L))
@@ -363,6 +365,7 @@ class StreamingSpec extends SparkTestBase {
       .groupBy($"bucket").agg(count(lit(1)).as("n"))
       .writeStream.format("memory").queryName("dsv2_stream_probe")
       .outputMode("complete")
+      .option("checkpointLocation", TempDirs.create("graft_dsv2_ckpt").toString)
       .start()
     try {
       q.processAllAvailable()
@@ -478,6 +481,7 @@ class StreamingSpec extends SparkTestBase {
         "click_ts <= imp_ts + interval 60 seconds"))
     val q = joined.select($"ad_id")
       .writeStream.format("memory").queryName("ssj_purge").outputMode("append")
+      .option("checkpointLocation", TempDirs.create("graft_ssj_ckpt").toString)
       .start()
     try {
       imps.addData((1, base + 10), (2, base + 20))
@@ -520,6 +524,7 @@ class StreamingSpec extends SparkTestBase {
       .agg(sum($"n").as("n"), sum($"sum_id").as("sum_id"))
       .select(unix_timestamp($"w2.start").as("w_start"), $"n", $"sum_id")
       .writeStream.format("memory").queryName(name).outputMode("append")
+      .option("checkpointLocation", TempDirs.create("graft_chained_ckpt").toString)
       .start()
     try {
       q.processAllAvailable()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.functions.SrpBucketKeys
 
 /** Unit pins for the occupancy-targeted LSH sizing law (the round-13 fix
   * for the fixed-3-bit scale trap: bucket size grew with the corpus, so
@@ -52,12 +53,12 @@ class LshScalingSpec extends SparkTestBase {
   }
 
   test("sign projections are deterministic, ±1, and stable across calls") {
-    val p0 = SimilarityOps.projection(0)
+    val p0 = SrpBucketKeys.projection(0)
     assert(p0.length == SimilarityOps.Dims)
     assert(p0.forall(s => s == 1L || s == -1L))
     // repeatable (cache or not) and distinct across projection indices
-    assert(SimilarityOps.projection(0).sameElements(p0))
-    val distinctRows = (0 until 16).map(SimilarityOps.projection(_).toSeq).distinct
+    assert(SrpBucketKeys.projection(0).sameElements(p0))
+    val distinctRows = (0 until 16).map(SrpBucketKeys.projection(_).toSeq).distinct
     assert(distinctRows.size == 16, "projection rows must differ")
     // pin the first row's prefix (parity of md5("0_j")'s first byte,
     // j = 0..7) so an accidental hash-rule change — the input string,
