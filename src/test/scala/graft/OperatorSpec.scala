@@ -896,6 +896,18 @@ class OperatorSpec extends SparkTestBase {
       s"union-of-sketches estimate $merged != direct sketch estimate $direct")
   }
 
+  test("plan: curation_corpus_report reads documents ONCE for the four fused metrics") {
+    // warm the session-shared MinHash cache so the near-dup branch is an
+    // in-memory lookup, isolating the report's own scans
+    SparkEntry.queries("dedup_minhash_lsh")(spark, sfDir).collect()
+    val own = ownPlan("curation_corpus_report")
+    assert(own.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      s"near-dup metric should ride the cached MinHash estimates:\n${fmtPlan("curation_corpus_report")}")
+    val docScans = own.count(_.isInstanceOf[FileSourceScanExec])
+    assert(docScans == 1, s"expected ONE fused documents scan in the report's own tree, " +
+      s"found $docScans:\n${fmtPlan("curation_corpus_report")}")
+  }
+
   test("plan: dedup_chunks is one hash-aggregate shuffle, never a corpus window sort") {
     val p = fmtPlan("dedup_chunks")
     assert(!p.contains("Window"),
@@ -1197,6 +1209,19 @@ class OperatorSpec extends SparkTestBase {
     val byTok = rows.sortBy(_.getLong(2))
     assert(byTok.head.getDouble(6) >= byTok.last.getDouble(6),
       "low-resource language should be repeated at least as often as the largest")
+  }
+
+  test("plan: curation_training_extract scans documents exactly once") {
+    // the gate's token stats come from the memoized token_stats stage (an
+    // InMemoryTableScan), so the only parquet scan left is the corpus
+    // spine; the keeper window must still NOT duplicate the gate subtree
+    // the way a groupBy + semi join back would
+    val own = ownPlan("curation_training_extract")
+    val scans = own.count(_.isInstanceOf[FileSourceScanExec])
+    assert(scans == 1,
+      s"expected 1 documents scan, found $scans:\n${fmtPlan("curation_training_extract")}")
+    assert(own.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      s"expected the cached token_stats stage in the plan:\n${fmtPlan("curation_training_extract")}")
   }
 
   test("curation_training_extract conserves the gated-deduped-train token mass") {
@@ -1717,6 +1742,20 @@ class OperatorSpec extends SparkTestBase {
     // the well-posed group is untouched by the guard: y = 10x exactly
     assert(math.abs(rows("B").getDouble(2) - 10.0) < 1e-9)
     assert(math.abs(rows("B").getDouble(3)) < 1e-9)
+  }
+
+  test("plan: similarity_ivfpq reads the corpus once, everything else off the shared cache") {
+    // warm the shared quantized/candidate stages, then assert the query's
+    // own plan re-scans embeddings parquet at most once (the query-side
+    // scan) and rides InMemoryTableScan for the rest — before the shared
+    // stage this plan re-scanned the corpus 11x
+    SparkEntry.queries("similarity_ivf")(spark, sfDir).collect()
+    val own = ownPlan("similarity_ivfpq")
+    assert(own.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      s"ivfpq must ride the cached quantized stage:\n${fmtPlan("similarity_ivfpq")}")
+    val scans = own.count(_.isInstanceOf[FileSourceScanExec])
+    assert(scans <= 1, s"expected at most 1 embeddings parquet scan, found $scans:\n" +
+      fmtPlan("similarity_ivfpq"))
   }
 
   test("curation_decontaminate: exact-integer cutoff, non-trivial split, report-consistent") {
