@@ -8,11 +8,13 @@ import graft.stages.Stages
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
 import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_COL,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -484,6 +486,16 @@ class OperatorSpec extends SparkTestBase {
     Aqe.collectWithSubqueries(
       SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan) { case p => p }
 
+  /** `ns` plus the build of every cached stage they scan, recursively and
+    * each build once: everything a run on cold caches computes. */
+  private def withBuilds(ns: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val seen = scala.collection.mutable.Set.empty[SparkPlan]
+    def walk(ns: Seq[SparkPlan]): Seq[SparkPlan] = ns ++ ns.collect {
+      case s: InMemoryTableScanExec if seen.add(s.relation.cachedPlan) => s.relation.cachedPlan
+    }.flatMap(b => walk(Aqe.collectWithSubqueries(b) { case p => p }))
+    walk(ns)
+  }
+
   /** (query, shuffle exchanges, broadcast exchanges, parquet scans,
     * cached-stage scans) of [[ownPlan]] at sf0.001 for the queries whose
     * shape was audited for cluster scale: each exchange and broadcast is
@@ -580,13 +592,13 @@ class OperatorSpec extends SparkTestBase {
   test("plan: multimodal_phash_dedup hashes through graft_phash256, with no lambda tower") {
     val own = ownPlan("multimodal_phash_dedup")
     // the phash_members stage it reads is built by the kernel
-    val builds = own.collect { case s: InMemoryTableScanExec => s.relation.cachedPlan }
-      .flatMap(Aqe.collectWithSubqueries(_) { case p => p })
+    val lineage = withBuilds(own)
+    val builds = lineage.drop(own.size)
     def projecting(ns: Seq[SparkPlan], hit: Expression => Boolean) =
       ns.collect { case p: ProjectExec if p.projectList.exists(_.exists(hit)) => p }
     assert(projecting(builds, _.isInstanceOf[Phash256]).nonEmpty,
       s"no graft_phash256 Project in the cached build:\n${fmtPlan("multimodal_phash_dedup")}")
-    assert(projecting(own ++ builds, _.isInstanceOf[LambdaFunction]).isEmpty,
+    assert(projecting(lineage, _.isInstanceOf[LambdaFunction]).isEmpty,
       s"a Project evaluates a lambda tower:\n${fmtPlan("multimodal_phash_dedup")}")
   }
 
@@ -671,24 +683,25 @@ class OperatorSpec extends SparkTestBase {
   }
 
   test("plan: text_pii_scrub is one scan plus the barriered output sort") {
-    // and so are the per-document projections of text_quality_logreg and
-    // text_char_entropy
+    val own = ownPlan("text_pii_scrub")
+    val scans = own.count(_.isInstanceOf[FileSourceScanExec])
+    assert(scans == 1,
+      s"expected a single documents scan, found $scans:\n${fmtPlan("text_pii_scrub")}")
+    // exactly two exchanges: the hash sampling-barrier in front of the
+    // presentation sort (Presentation.ordered — without it the range
+    // sort's boundary-sampling job re-ran the whole regex tower, a
+    // hidden second scan pass) and the range partitioning itself; the
+    // scrub projection must add no shuffle of its own. The per-document
+    // projections of text_quality_logreg and text_char_entropy end the
+    // same way (the audited-shape table pins their counts).
+    val exchanges = own.count(_.isInstanceOf[ShuffleExchangeExec])
+    assert(exchanges == 2, s"expected barrier + range sort exchanges, found $exchanges:\n" +
+      fmtPlan("text_pii_scrub"))
     Seq("text_pii_scrub", "text_quality_logreg", "text_char_entropy").foreach { q =>
-      val p = fmtPlan(q)
-      val scans = "\\(\\d+\\) Scan parquet".r.findAllIn(p).length
-      assert(scans == 1, s"$q: expected a single documents scan, found $scans:\n$p")
-      // exactly two exchanges: the hash sampling-barrier in front of the
-      // presentation sort (Presentation.ordered — without it the range
-      // sort's boundary-sampling job re-ran the whole projection tower,
-      // a hidden second scan pass) and the range partitioning itself;
-      // the projection must add no shuffle of its own
-      val exchanges = "\\(\\d+\\) Exchange".r.findAllIn(p).length
-      assert(exchanges == 2,
-        s"$q: expected barrier + range sort exchanges, found $exchanges:\n$p")
-      assert("rangepartitioning".r.findAllIn(p).length == 1,
-        s"$q: expected exactly one range (presentation) exchange:\n$p")
-      assert("REPARTITION_BY_COL".r.findAllIn(p).length == 1,
-        s"$q: expected exactly one hash barrier:\n$p")
+      val ex = ownPlan(q).collect { case e: ShuffleExchangeExec => e }
+      assert(ex.count(_.shuffleOrigin == REPARTITION_BY_COL) == 1 &&
+        ex.count(_.outputPartitioning.isInstanceOf[RangePartitioning]) == 1,
+        s"$q: expected one hash barrier and one range (presentation) exchange:\n${fmtPlan(q)}")
     }
   }
 
@@ -1753,7 +1766,8 @@ class OperatorSpec extends SparkTestBase {
     val own = ownPlan("similarity_ivfpq")
     assert(own.exists(_.isInstanceOf[InMemoryTableScanExec]),
       s"ivfpq must ride the cached quantized stage:\n${fmtPlan("similarity_ivfpq")}")
-    val scans = own.count(_.isInstanceOf[FileSourceScanExec])
+    // counted over the stage builds too, where a rescan would hide
+    val scans = withBuilds(own).count(_.isInstanceOf[FileSourceScanExec])
     assert(scans <= 1, s"expected at most 1 embeddings parquet scan, found $scans:\n" +
       fmtPlan("similarity_ivfpq"))
   }
