@@ -5,29 +5,26 @@ import scala.util.control.NonFatal
 import graft.stages.Stages
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.json4s.{DefaultFormats, Formats, JValue}
+import org.json4s._
+import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
 
 /** Benchmark main (driver contract): times every registered query at the
-  * scale factor in SPARK_GRAFT_SF_DIR and prints ONE JSON line. A short
+  * scale factor in SPARK_GRAFT_SF_DIR and prints two JSON lines. A short
   * untimed warmup (generic codegen + one small parquet scan) keeps JVM/
   * codegen startup out of the first timed query; queries run in sorted
   * name order for stable reports.
   *
-  * De-noising (round 9): every query runs TWICE back-to-back in the same
-  * JVM and the ledger records the MINIMUM — the sandbox is shared and
-  * single-run timings moved ±2× round-to-round on unchanged code (r7's
-  * simhash "regression" was attribution, r8's agg_corr was environmental).
-  * The min-of-2 is the steady-state number a warmed cluster would see;
-  * both raw runs are preserved in the full ledger file so a run-1-only
-  * inflation (GC, async cleanup, page-cache misses) is visible instead of
-  * contaminating the headline.
+  * De-noising: every query runs TWICE back-to-back in the same JVM and the
+  * ledger records the MINIMUM, because single-run timings on a shared host
+  * move ±2× between runs of unchanged code. The min-of-2 is the
+  * steady-state number a warmed cluster would see; both raw runs are kept
+  * in the full ledger file so a run-1-only inflation (GC, async cleanup,
+  * page-cache misses) is visible instead of contaminating the headline.
   *
-  * Contention-proofing (round 10) — min-of-2 cannot save a run where
-  * sandbox contention persists across both back-to-back runs (the r9
-  * driver capture recorded 37.6 s twice for a query that re-measures at
-  * 1.74 s on the same code), so the ledger now carries evidence that
-  * separates engine time from sandbox load WITHOUT a re-run:
+  * Contention evidence: min-of-2 cannot save a run where host contention
+  * persists across both back-to-back runs, so the ledger carries evidence
+  * that separates engine time from host load WITHOUT a re-run:
   *  - SENTINELS: a fixed single-threaded arithmetic loop (pure CPU, no
   *    allocation, no Spark — host contention shows up directly) and a
   *    fixed Spark range-sum (scheduler+codegen path) are each timed at
@@ -36,43 +33,52 @@ import org.json4s.jackson.JsonMethods
   *  - PER-QUERY WALL-CLOCK OFFSETS (`t0`, seconds since bench start) so a
   *    contention window can be localized to the queries that ran inside it.
   *  - PER-QUERY GC DELTA (`gc_ms`, JVM-wide collection-time growth across
-  *    the query's runs) so allocation-pressure inflation (the
-  *    agg_robust_stats failure mode) is distinguishable from host load.
+  *    the query's runs) so allocation-pressure inflation is
+  *    distinguishable from host load.
   *  - PER-QUERY PEAK TASK MEMORY (`peak_mem_bytes`, max task
   *    peakExecutionMemory seen while the query's runs were in flight;
   *    listener delivery is async so attribution is ~one query boundary
-  *    fuzzy — fine for the exact-percentile-vs-sketch sizing it exists
-  *    to inform).
-  *  - A THIRD RUN for any query whose min-of-2 exceeds 3× its committed
-  *    prior-round min (read from bench_prior.json at the repo root, the
-  *    previous round's clean full ledger): a transient stall on both
-  *    runs gets one more chance to recover before the ledger records a
-  *    "regression" on unchanged code. `retried` marks those lines.
+  *    fuzzy).
+  *  - A THIRD RUN for any query whose min-of-2 exceeds 3× its prior min
+  *    (read from bench_prior.json at the repo root, a clean full ledger
+  *    of this benchmark): a transient stall on both runs gets one more
+  *    chance to recover before the ledger records a "regression" on
+  *    unchanged code. `retried` marks those lines.
   */
 object Bench {
-  /** Runs per query: min-of-2 is the committed-ledger contract (see the
-    * de-noising note above); SPARK_GRAFT_BENCH_ROUNDS=1 exists for the
-    * large scale probes, where a single pass keeps a 100× run inside a
-    * sane wall-clock budget and the sentinels still flag contamination.
+  /** Runs per query: min-of-2 is the ledger contract (see the de-noising
+    * note above); SPARK_GRAFT_BENCH_ROUNDS=1 exists for the large scale
+    * probes, where a single pass keeps a 100× run inside a sane
+    * wall-clock budget and the sentinels still flag contamination.
     * The driver never sets it → official ledgers stay min-of-2. */
-  private val Rounds =
-    sys.env.get("SPARK_GRAFT_BENCH_ROUNDS").map { s =>
-      // fail loudly on garbage; clamp 0/negative to 1 so the per-query
-      // runs vector can never be empty (min-of-empty crashes deep in the
-      // query loop with a message that points nowhere near the env var)
-      val parsed =
-        try s.trim.toInt
-        catch {
-          case _: NumberFormatException => sys.error(
-            s"SPARK_GRAFT_BENCH_ROUNDS must be a positive integer, got '$s'")
-        }
-      math.max(1, parsed)
-    }.getOrElse(2)
+  private val Rounds = sys.env.get("SPARK_GRAFT_BENCH_ROUNDS").fold(2) { s =>
+    // fail loudly on garbage; clamp 0/negative to 1 so the per-query
+    // runs vector can never be empty (min-of-empty crashes deep in the
+    // query loop with a message that points nowhere near the env var)
+    math.max(1, s.trim.toIntOption.getOrElse(
+      sys.error(s"SPARK_GRAFT_BENCH_ROUNDS must be a positive integer, got '$s'")))
+  }
 
-  private final case class QRes(name: String, sec: Double, ok: Boolean,
-    runs: Seq[Double], t0: Double, gcDelta: Long, peakMem: Long,
-    taskRunMs: Long, taskCpuMs: Long, taskGcMs: Long, retried: Boolean,
-    runCpuMs: Seq[Long])
+  /** One timed query, field for field its `queries.<name>` ledger line
+    * (keys are the snake_case field names, `twin_of` only when set).
+    * `min` is the best successful run, or the best run if all failed;
+    * `run_task_cpu_ms` pairs each wall run with its own task CPU, since
+    * the aggregate `task_cpu_ms` also sums a cold or stalled run. */
+  private[graft] final case class QueryRecord(runs: Seq[Double], min: Double,
+    ok: Boolean, t0: Double, gcMs: Long, peakMemBytes: Long, taskRunMs: Long,
+    taskCpuMs: Long, taskGcMs: Long, runTaskCpuMs: Seq[Long], retried: Boolean,
+    twinOf: Option[String])
+
+  /** One shared-stage build, field for field its
+    * `shared_stages_detail.<name>` ledger line. A failed build's `runs`
+    * entry is -1.0; cpu/gc belong to the run `min` reports. */
+  private[graft] final case class StageRecord(runs: Seq[Double], min: Double,
+    taskCpuMs: Long, taskGcMs: Long, gcMs: Long, retried: Boolean,
+    twinOf: Option[String])
+
+  /** Seconds taken by the four sentinel workloads at one point of a run. */
+  private[graft] final case class Sentinels(cpu: Double, alloc: Double,
+    spark: Double, shuffle: Double)
 
   /** Fixed single-threaded xorshift loop — pure register arithmetic, no
     * allocation, so its wall time moves ONLY with host CPU contention
@@ -111,11 +117,11 @@ object Bench {
   }
 
   /** Fixed fresh-allocation touch (~512 MB in 8 MB chunks, every page
-    * written): measured r10, the sandbox's degraded mode serves page
-    * faults / memory stalls slowly while leaving register arithmetic
-    * untouched — this sentinel inflates exactly then. With AlwaysPreTouch
-    * heap pages are pre-faulted, so a clean value here plus a slow query
-    * means the slowness is NOT host memory pressure. */
+    * written): a host that serves page faults or memory stalls slowly
+    * while leaving register arithmetic untouched inflates exactly this
+    * sentinel. With AlwaysPreTouch heap pages are pre-faulted, so a clean
+    * value here plus a slow query means the slowness is NOT host memory
+    * pressure. */
   private def sentinelAlloc(): Double = {
     val t0 = System.nanoTime()
     var keep = 0L
@@ -131,11 +137,9 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def sentinels(spark: SparkSession): String = {
-    val c = sentinelCpu(); val a = sentinelAlloc()
-    val s = sentinelSpark(spark); val sh = sentinelShuffle(spark)
-    s"""{"cpu":$c,"alloc":$a,"spark":$s,"shuffle":$sh}"""
-  }
+  private def sentinels(spark: SparkSession): Sentinels =
+    Sentinels(sentinelCpu(), sentinelAlloc(), sentinelSpark(spark),
+      sentinelShuffle(spark))
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
@@ -146,10 +150,10 @@ object Bench {
   /** Task-metric accumulation since the last reset: max task
     * peakExecutionMemory, plus summed executor run/CPU/GC time. The
     * run-vs-CPU-vs-wall triangle is the per-query contention discriminator
-    * (task_cpu_ms stable across rounds + inflated wall == sandbox load,
+    * (task_cpu_ms stable across runs + inflated wall == host load,
     * not engine work). Task-end events arrive on the async listener bus,
     * so a query's numbers can absorb a straggler event from its
-    * predecessor — documented as approximate in the ledger contract. */
+    * predecessor — approximate by design. */
   private final class TaskMetricListener extends SparkListener {
     val peak = new java.util.concurrent.atomic.AtomicLong(0L)
     val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -167,14 +171,13 @@ object Bench {
     def reset(): Unit = { peak.set(0); runMs.set(0); cpuNs.set(0); gcMs.set(0) }
   }
 
-  /** Prior-round committed mins from the previous round's clean full
-    * ledger: `queries.<name>.min`, and the flat `shared_stages` build
-    * seconds (the rich per-stage detail lives under a separate key, so
-    * this map stays format-stable). A missing or unparsable file just
+  private implicit val formats: Formats = DefaultFormats
+
+  /** Prior mins from a clean full ledger: `queries.<name>.min`, and the
+    * flat `shared_stages` build seconds. A missing or unparsable file just
     * disables the retry heuristics. */
   private def priors(path: String): (Map[String, Double], Map[String, Double]) =
     try {
-      implicit val formats: Formats = DefaultFormats
       val doc = JsonMethods.parse(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
       val mins = (doc \ "queries").extractOpt[Map[String, JValue]].getOrElse(Map.empty)
         .flatMap { case (name, q) => (q \ "min").extractOpt[Double].map(name -> _) }
@@ -182,17 +185,11 @@ object Bench {
     } catch { case NonFatal(_) => (Map.empty, Map.empty) }
 
   /** Capture-time provenance: the commit the working tree was at and
-    * whether it was dirty. Three rounds running, a sealed ladder and the
-    * final HEAD diverged by one commit (r13: BENCH_sf3 pre-IVF-fix, r14:
-    * BENCH_sf10 pre-winnow-kernel) and the mismatch was only caught by
-    * hand-audit — so every ledger now carries the answer mechanically.
-    * `tools/check_ledger_head.py` asserts committed ledgers match the
-    * seal commit. Dirty is scoped to the ENGINE paths (src/main +
-    * build.sbt — the same tree the checker compares): a ladder run
-    * writes its own ledger files into the repo, so a whole-tree check
-    * would mark every rung after the first dirty on its own output.
-    * Failure to run git (not a repo, no binary) degrades to
-    * "unknown" rather than failing the bench. */
+    * whether it was dirty, so a ledger names the code it measured. Dirty
+    * is scoped to the ENGINE paths (src/main + build.sbt): a run that
+    * writes its ledger into the repo would otherwise mark every later run
+    * dirty on its predecessor's output. Failure to run git (not a repo,
+    * no binary) degrades to "unknown" rather than failing the bench. */
   private def gitProvenance(): (String, Boolean) =
     try {
       def run(cmd: String*): String = {
@@ -205,26 +202,61 @@ object Bench {
         run("git", "status", "--porcelain", "--", "src/main", "build.sbt").nonEmpty)
     } catch { case NonFatal(_) => ("unknown", true) }
 
+  private val NoSentinels: JObject =
+    ("cpu" -> -1) ~ ("alloc" -> -1) ~ ("spark" -> -1) ~ ("shuffle" -> -1)
+
+  /** The full ledger file and the two stdout lines, in that order.
+    * `queries` holds every timed query in run order, failed ones
+    * included; the stdout `queries` maps hold ONLY successes (so a naive
+    * sum over them is correct) and failures go in `failed` (the name
+    * array) plus `failed_secs`. The headline `value` is the successful
+    * mins plus the shared-stage builds. Per-stage detail lives under its
+    * own key so the flat `shared_stages` map (what `priors` and
+    * run-over-run compares read) never changes shape. `mid` is None
+    * when no query ran. */
+  private[graft] def render(rounds: Int, sf: String, cpus: Int, hostCpus: Int,
+      head: String, dirty: Boolean, start: Sentinels, mid: Option[Sentinels],
+      end: Sentinels, cachedBytes: Long, stages: Seq[(String, StageRecord)],
+      queries: Seq[(String, QueryRecord)], ledgerPath: String): (String, String, String) = {
+    def record(r: AnyRef): JValue = Extraction.decompose(r).snakizeKeys
+    def secs(rs: Seq[(String, Double)]): JObject = JObject(rs.map { case (k, v) => k -> JDouble(v) }.toList)
+    val ok = queries.collect { case (n, q) if q.ok => n -> q.min }
+    val failed = queries.collect { case (n, q) if !q.ok => n -> q.min }
+    val shared = secs(stages.map { case (n, s) => n -> s.min })
+    val lead = ("metric" -> "total") ~ ("value" -> (ok.map(_._2).sum + stages.map(_._2.min).sum)) ~
+      ("unit" -> "sec") ~ ("runs_per_query" -> rounds)
+    val sentinelsJson = ("start" -> record(start)) ~ ("mid" -> mid.fold[JValue](NoSentinels)(record)) ~
+      ("end" -> record(end))
+    val ledger = lead ~ ("n_queries" -> ok.size) ~ ("sf" -> sf) ~ ("cpus" -> cpus) ~
+      ("host_cpus" -> hostCpus) ~ ("head" -> head) ~ ("dirty" -> dirty) ~
+      ("sentinels" -> sentinelsJson) ~ ("cached_bytes_after_prewarm" -> cachedBytes) ~
+      ("shared_stages" -> shared) ~
+      ("shared_stages_detail" -> JObject(stages.map { case (n, s) => n -> record(s) }.toList)) ~
+      ("failed" -> failed.map(_._1)) ~ ("failed_secs" -> secs(failed)) ~
+      ("queries" -> JObject(queries.map { case (n, q) => n -> record(q) }.toList))
+    val full = lead ~ ("queries" -> secs(ok)) ~ ("shared_stages" -> shared) ~
+      ("failed" -> failed.map(_._1)) ~ ("failed_secs" -> secs(failed)) ~ ("sf" -> sf)
+    // the full line outgrows harnesses that keep only a short output tail
+    // (2000 bytes; ~115 queries is ~4 KB, which truncates the headline
+    // out of the record), so a compact, complete summary comes LAST: same
+    // schema, "queries" limited to the slowest 20
+    val summary = lead ~ ("n_queries" -> ok.size) ~ ("queries" -> secs(ok.sortBy(-_._2).take(20))) ~
+      ("shared_stages" -> shared) ~ ("failed" -> failed.map(_._1)) ~
+      ("sentinels" -> sentinelsJson) ~ ("host_cpus" -> hostCpus) ~ ("head" -> head) ~
+      ("dirty" -> dirty) ~ ("ledger" -> ledgerPath) ~ ("sf" -> sf)
+    (JsonMethods.compact(ledger), JsonMethods.compact(full), JsonMethods.compact(summary))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val (gitHead, gitDirty) = gitProvenance()
     if (gitDirty)
-      System.err.println("[bench] WARNING: working tree is dirty (or git " +
-        "unavailable) — this ledger is NOT sealable as-is; commit first " +
-        "or treat as a dev probe")
-    // the bench contract is local[32]: default to it rather than a
-    // conservative 4 so an env-less driver run measures the same
-    // parallelism as the committed ledger (a 4-thread run reads ~2x
-    // slower on identical code and poisons round-over-round comparisons)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // a host with fewer cores than the contract silently oversubscribes
-    // local[N] and produces ledger-look-alike numbers that are not
-    // comparable — record the mismatch in the ledger and say so loudly
+      System.err.println("[bench] WARNING: src/main or build.sbt differs from " +
+        "HEAD (or git is unavailable); the ledger's head does not name the " +
+        "measured code")
     val hostCpus = Runtime.getRuntime.availableProcessors
-    if (hostCpus < cpus.toInt)
-      System.err.println(s"[bench] WARNING: host has $hostCpus cores < local[$cpus] " +
-        "contract; timings will NOT be ledger-comparable")
-    val spark = GraftSession.local(s"local[$cpus]", cpus.toInt)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(hostCpus)(_.toInt)
+    val spark = GraftSession.local(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     val memListener = new TaskMetricListener
     spark.sparkContext.addSparkListener(memListener)
@@ -239,111 +271,83 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "bench_prior.json"))
     // memoized shared stages (shingle set, MinHash estimates, SimHash
     // sketch, ngram pairs, PPJoin pairs) are built and timed ONCE up front
-    // as their own ledger lines: previously whichever dedup-family query
-    // ran first paid the whole sketch build, so unchanged queries appeared
-    // to regress between rounds whenever registration order shifted.
+    // as their own ledger lines: otherwise whichever dedup-family query
+    // runs first pays the whole build, and unchanged queries appear to
+    // regress whenever registration order shifts.
     //
-    // Contamination retry (r12): the r11 driver ledger absorbed ~190 s of
-    // sandbox stall entirely inside these one-shot builds (kmeans_assign
-    // 3.4→24.1 s, pq_codebook 3.7→28.6 s on unchanged code) because the
-    // 3×-prior retry protected queries only. Each stage now carries its
-    // memo keys, so a build >3× its committed prior is EVICTED (full
-    // builder re-runs, intermediates included) and rebuilt once, and the
-    // ledger records the min plus task_cpu_ms/gc attribution per stage —
-    // a real regression keeps its inflated min on both attempts honestly.
-    // A failed stage drops only its ledger line (earlier stages keep
-    // theirs); only a FATAL error reaches here, and then the JVM is not
-    // worth salvaging — let it die loudly.
-    final case class SRes(name: String, sec: Double, runs: Seq[Double],
-      taskCpuMs: Long, taskGcMs: Long, gcDelta: Long, retried: Boolean,
-      twinOf: Option[String])
-    // each build snapshots the listener counters around ITSELF, so a
-    // retried stage's ledger line attributes cpu/gc to the SAME run its
-    // `min` reports (pre-r13 the counters accumulated across both builds
-    // while min reflected one, skewing the cpu-vs-wall triangle exactly
-    // for the retried stages it exists to diagnose)
-    final case class SRun(sec: Option[Double], taskCpuMs: Long,
-      taskGcMs: Long, gcDelta: Long)
-    // isolation-probe filter (dev loop only, like BENCH_ONLY below): build
-    // and time just the named shared stages. List a stage's upstream deps
-    // explicitly (e.g. "shingle_sets,ppjoin_pairs") — an unlisted
+    // A build >3× its prior is EVICTED (the full builder re-runs,
+    // intermediates included) and rebuilt once, so a host stall inside a
+    // one-shot build is not recorded as a regression; a real regression
+    // keeps its inflated min on both attempts. A failed stage drops only
+    // its ledger line (earlier stages keep theirs); only a FATAL error
+    // escapes, and then the JVM is not worth salvaging.
+    //
+    // SPARK_GRAFT_BENCH_STAGES_ONLY (dev loop, like BENCH_ONLY below)
+    // builds just the named stages. List a stage's upstream deps
+    // explicitly (e.g. "shingle_sets,ppjoin_pairs"): an unlisted
     // dependency is built lazily INSIDE the first consumer's timing and
-    // bills there, which is exactly the attribution noise the stage lines
-    // exist to prevent.
+    // bills there, the attribution noise the stage lines exist to prevent.
     val stagesOnly = sys.env.get("SPARK_GRAFT_BENCH_STAGES_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
-    val stageResults = Stages.list(spark, sfDir)
+    val stageRecords = Stages.list(spark, sfDir)
       .filter(st => stagesOnly.isEmpty || stagesOnly(st.name))
       .flatMap { st =>
-        def buildOnce(): SRun = {
+        // each build snapshots the listener counters around ITSELF, so a
+        // retried stage's cpu/gc belong to the same run its `min` reports
+        def buildOnce(): Option[StageRecord] = {
           memListener.reset()
           val gc0 = gcMillis()
           val t0 = System.nanoTime()
-          val sec =
-            try { st.build().count(); Some((System.nanoTime() - t0) / 1e9) }
-            catch {
-              case NonFatal(e) =>
-                System.err.println(
-                  s"[bench] shared stage ${st.name} failed: ${e.getMessage}")
-                None
-            }
-          SRun(sec, memListener.cpuNs.get() / 1000000L,
-            memListener.gcMs.get(), gcMillis() - gc0)
+          try {
+            st.build().count()
+            val sec = (System.nanoTime() - t0) / 1e9
+            Some(StageRecord(Seq(sec), sec, memListener.cpuNs.get() / 1000000L,
+              memListener.gcMs.get(), gcMillis() - gc0, retried = false, st.twinOf))
+          } catch {
+            case NonFatal(e) =>
+              System.err.println(s"[bench] shared stage ${st.name} failed: ${e.getMessage}")
+              None
+          }
         }
         // the memo entries the first build adds are the ones a retry must
         // evict, or the rebuild re-times only the cheap tail of the stage
         val before = Stages.keys(spark)
         var runs = Vector(buildOnce())
         val populated = Stages.keys(spark) -- before
-        val retried = (runs.head.sec, stagePrior.get(st.name)) match {
-          case (Some(s), Some(p)) if s > 3.0 * p =>
+        val retried = (runs.head, stagePrior.get(st.name)) match {
+          case (Some(r), Some(p)) if r.min > 3.0 * p =>
             Stages.evict(spark, populated)
             runs :+= buildOnce()
             true
           case _ => false
         }
-        val good = runs.filter(_.sec.isDefined)
-        // retry-rebuild failure after a successful first build is fine:
-        // min falls back to the first (cached) build's time and the next
+        // a failed rebuild after a successful first build is fine: min
+        // falls back to the first (cached) build's time and the next
         // accessor call repopulates the evicted cache lazily
-        if (good.isEmpty) None
-        else {
-          val best = good.minBy(_.sec.get)
-          Some(SRes(st.name, best.sec.get, runs.map(_.sec.getOrElse(-1.0)),
-            best.taskCpuMs, best.taskGcMs, best.gcDelta, retried, st.twinOf))
-        }
+        runs.flatten.minByOption(_.min).map(best =>
+          st.name -> best.copy(runs = runs.map(_.fold(-1.0)(_.min)), retried = retried))
       }
-    val shared = stageResults.map(r => (r.name, r.sec))
-    // block-manager snapshot right after prewarm: the r8 ledger showed the
-    // first post-prewarm queries inflated on unchanged code, so the ledger
-    // now records how much storage the prewarm actually pinned
+    // block-manager snapshot right after prewarm: how much storage the
+    // stage builds pinned, next to the first queries they may slow down
     val cachedBytes = spark.sparkContext.getExecutorMemoryStatus.values
       .map { case (max, remaining) => max - remaining }.sum
-    // noop-format write executes the FULL plan (final sorts/projections
-    // included) — a count() would let Catalyst prune them. The "queries"
-    // map holds ONLY successes (so a naive sum over it is correct); failed
-    // queries go in a separate name->seconds map, never mixed in.
-    // dev-loop filter: SPARK_GRAFT_BENCH_ONLY="a,b,c" times just those
-    // queries (the driver never sets it → full run)
+    // SPARK_GRAFT_BENCH_ONLY="a,b,c" (dev loop) times just those queries
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
     val midIdx = selected.size / 2
-    var sentMid = """{"cpu":-1,"alloc":-1,"spark":-1,"shuffle":-1}"""
-    val results = selected.zipWithIndex.map { case ((name, fn), idx) =>
-      if (idx == midIdx) sentMid = sentinels(spark)
+    var sentMid = Option.empty[Sentinels]
+    val queryRecords = selected.zipWithIndex.map { case ((name, fn), idx) =>
+      if (idx == midIdx) sentMid = Some(sentinels(spark))
       val t0Off = offset()
       val gc0 = gcMillis()
       memListener.reset()
-      // per-run task-CPU snapshots: the aggregate task_cpu_ms sums EVERY
-      // run — including a cold first read of a freshly-written file or a
-      // retried stall — which is exactly what poisoned the r13 sf3 CPU
-      // triangles (a 28.9 s cold run hiding inside a 2.7 s min line).
-      // run_task_cpu_ms lets a grader pair the min wall with ITS OWN cpu.
       val runCpu = scala.collection.mutable.ArrayBuffer.empty[Long]
+      // a noop-format write executes the FULL plan (final sorts and
+      // projections included); a count() would let Catalyst prune them
       def runOnce(): (Double, Boolean) = {
         val cpu0 = memListener.cpuNs.get()
         val t0 = System.nanoTime()
@@ -362,93 +366,35 @@ object Bench {
         val good = rs.collect { case (s, true) => s }
         if (good.nonEmpty) Some(good.min) else None
       }
-      // retry heuristic: a min-of-2 still 3x over the committed prior min
-      // is far more often a persistent contention window than a real
-      // regression (measured r9: 10-35x inflations on unchanged code) —
-      // give it ONE more run so a transient stall can recover; a real
-      // regression stays slow and keeps its inflated min honestly
+      // a min-of-2 still 3x over the prior min is far more often a
+      // persistent contention window than a real regression (10-35x
+      // inflations measured on unchanged code): ONE more run lets a
+      // transient stall recover; a real regression stays slow and keeps
+      // its inflated min honestly
       val retried = prior.get(name) match {
         case Some(p) if minGood(runs).exists(_ > 3.0 * p) =>
           runs = runs :+ runOnce(); true
         case _ => false
       }
-      val gcDelta = gcMillis() - gc0
-      val ok = minGood(runs).isDefined
-      val sec = minGood(runs).getOrElse(runs.map(_._1).min)
-      QRes(name, sec, ok, runs.map(_._1), t0Off, gcDelta,
+      name -> QueryRecord(runs.map(_._1), minGood(runs).getOrElse(runs.map(_._1).min),
+        minGood(runs).isDefined, math.rint(t0Off * 1000) / 1000, gcMillis() - gc0,
         memListener.peak.get(), memListener.runMs.get(),
-        memListener.cpuNs.get() / 1000000L, memListener.gcMs.get(), retried,
-        runCpu.toSeq)
+        memListener.cpuNs.get() / 1000000L, memListener.gcMs.get(), runCpu.toSeq,
+        retried, SparkEntry.twinOf.get(name))
     }
     val sentEnd = sentinels(spark)
-    def jsonMap(entries: Seq[(String, Double)]): String =
-      entries.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = jsonMap(results.collect { case r if r.ok => (r.name, r.sec) })
-    // "failed" keeps the original name-array shape (r1/r2 parsers expect
-    // it); per-failure timings live in "failed_secs" alongside.
-    val failedNames = results.collect { case r if !r.ok => "\"" + r.name + "\"" }
-      .mkString("[", ",", "]")
-    val failedSecs = jsonMap(results.collect { case r if !r.ok => (r.name, r.sec) })
-    val sharedJson = jsonMap(shared)
-    val sentinelsJson =
-      s"""{"start":$sentStart,"mid":$sentMid,"end":$sentEnd}"""
-    // headline total = min per query + shared-stage builds, so it
-    // stays comparable with rounds where the builds hid inside query lines
-    val total = results.collect { case r if r.ok => r.sec }.sum +
-      shared.map(_._2).sum
-    // FULL ledger to a file: the driver's per-round capture keeps only a
-    // ~2 KB stdout tail, which truncated r8's per-query line below the
-    // top-20 and left the regression triage blind. The file carries every
-    // raw run (not just the min), the shared-stage builds, the
-    // post-prewarm storage snapshot, and the contention evidence above.
+    // the FULL ledger goes to a file, because a driver capture keeps only
+    // a ~2 KB stdout tail: every raw run (not just the min), the stage
+    // builds, the post-prewarm storage snapshot and the contention evidence
     val ledgerPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_LEDGER", "bench_full.json")
-    val perQuery = results.map { r =>
-      // production twins carry their exact-baseline key inline so a
-      // grader prices e.g. agg_equidepth_sketch's line against the
-      // labeled exact row without cross-referencing SURVEY
-      val twin = SparkEntry.twinOf.get(r.name)
-        .map(b => s""","twin_of":"$b"""").getOrElse("")
-      s"""\"${r.name}\":{"runs":[${r.runs.mkString(",")}],"min":${r.sec},""" +
-      s""""ok":${r.ok},"t0":${math.rint(r.t0 * 1000) / 1000},"gc_ms":${r.gcDelta},""" +
-      s""""peak_mem_bytes":${r.peakMem},"task_run_ms":${r.taskRunMs},""" +
-      s""""task_cpu_ms":${r.taskCpuMs},"task_gc_ms":${r.taskGcMs},""" +
-      s""""run_task_cpu_ms":[${r.runCpuMs.mkString(",")}],""" +
-      s""""retried":${r.retried}$twin}"""
-    }.mkString("{", ",", "}")
-    // rich per-stage attribution lives under its OWN key so the flat
-    // "shared_stages" map (what priorStages parses, what the driver's
-    // round-over-round compare reads) never changes shape
-    val sharedDetail = stageResults.map { r =>
-      val twin = r.twinOf
-        .map(b => s""","twin_of":"$b"""").getOrElse("")
-      s"""\"${r.name}\":{"runs":[${r.runs.mkString(",")}],"min":${r.sec},""" +
-      s""""task_cpu_ms":${r.taskCpuMs},"task_gc_ms":${r.taskGcMs},""" +
-      s""""gc_ms":${r.gcDelta},"retried":${r.retried}$twin}"""
-    }.mkString("{", ",", "}")
-    val ledger =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$Rounds,
-         |"n_queries":${results.count(_.ok)},"sf":"$sfDir","cpus":$cpus,
-         |"host_cpus":$hostCpus,
-         |"head":"$gitHead","dirty":$gitDirty,
-         |"sentinels":$sentinelsJson,
-         |"cached_bytes_after_prewarm":$cachedBytes,
-         |"shared_stages":$sharedJson,
-         |"shared_stages_detail":$sharedDetail,
-         |"failed":$failedNames,"failed_secs":$failedSecs,
-         |"queries":$perQuery}""".stripMargin
-    try java.nio.file.Files.write(java.nio.file.Paths.get(ledgerPath),
-      ledger.getBytes("UTF-8"))
+    val (ledger, full, summary) = render(Rounds, sfDir, cpus, hostCpus, gitHead,
+      gitDirty, sentStart, sentMid, sentEnd, cachedBytes, stageRecords,
+      queryRecords, ledgerPath)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(ledgerPath), ledger)
     catch { case NonFatal(e) =>
       System.err.println(s"[bench] ledger write failed: ${e.getMessage}") }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$Rounds,"queries":$qs,"shared_stages":$sharedJson,"failed":$failedNames,"failed_secs":$failedSecs,"sf":"$sfDir"}""")
-    // The full line above exceeds harnesses that keep only a short output
-    // tail (the per-round capture holds 2000 bytes — ~115 queries is ~4 KB,
-    // which truncates the headline "value" right out of the record). Emit a
-    // compact, complete summary LAST: same schema, "queries" limited to the
-    // slowest 20, always well under the tail window.
-    val slowest = results.collect { case r if r.ok => (r.name, r.sec) }
-      .sortBy(-_._2).take(20)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$Rounds,"n_queries":${results.count(_.ok)},"queries":${jsonMap(slowest)},"shared_stages":$sharedJson,"failed":$failedNames,"sentinels":$sentinelsJson,"host_cpus":$hostCpus,"head":"$gitHead","dirty":$gitDirty,"ledger":"$ledgerPath","sf":"$sfDir"}""")
+    println(full)
+    println(summary)
     spark.stop()
   }
 }

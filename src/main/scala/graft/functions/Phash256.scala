@@ -22,12 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * WHY 256 BITS (r16, was 128): the banded candidate join slices the
   * hash into 8 bands — the Hamming ≤ 7 pigeonhole needs ≥ 8 of them —
   * so every extra band bit must come from hash WIDTH. The r15 isolated
-  * triangle (`BENCH_r15_iso_phash.json`) measured the 8×16-bit form's
-  * CPU at 2.5 → 11.6 → 131.5 s on 10×/30×/100× (×11.3 on the ×3.33 top
-  * step): 65k buckets per band saturate once distinct hashes pass ~65k
-  * and candidates degenerate toward n²·8/2¹⁶. 8×32-bit bands push the
-  * same multi-index-hashing crossover past ~10⁹ distinct payloads —
-  * PDQ ships 256-bit for exactly this reason.
+  * triangle (`git show 8074e4b:BENCH_r15_iso_phash.json`) measured the
+  * 8×16-bit form's CPU at 2.5 → 11.6 → 131.5 s on 10×/30×/100× (×11.3
+  * on the ×3.33 top step): 65k buckets per band saturate once distinct
+  * hashes pass ~65k and candidates degenerate toward n²·8/2¹⁶. 8×32-bit
+  * bands push the same multi-index-hashing crossover past ~10⁹ distinct
+  * payloads — PDQ ships 256-bit for exactly this reason.
   *
   * Why a custom Catalyst expression (SURVEY.md §4.2 escape hatch, the
   * same jump [[FixedPointDotProduct]] made for the cosine path): the

@@ -883,9 +883,9 @@ object EventOps {
     * `PARTITION BY event_type` runs the per-type sort on
     * TYPE-CARDINALITY tasks — with 5 event types that is 5 tasks
     * however many cores or executors exist, and the r15 isolation probe
-    * (`BENCH_r15_iso_rolling.json`) measured exactly that: task CPU
-    * LINEAR (7.3/22.2/84.5 s on 10×/30×/100×) while the sf10 wall
-    * flooded to 36.9 s as the #1 headline line — the classic
+    * (`git show 8074e4b:BENCH_r15_iso_rolling.json`) measured exactly
+    * that: task CPU LINEAR (7.3/22.2/84.5 s on 10×/30×/100×) while the
+    * sf10 wall flooded to 36.9 s as the #1 headline line — the classic
     * single-task-per-key window sort a bounded type alphabet produces
     * at cluster scale. The frame is BOUNDED (trailing 50 rows), so the
     * window shards exactly: rows split into (type, time-bucket) ranges

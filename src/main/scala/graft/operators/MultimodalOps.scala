@@ -384,9 +384,9 @@ object MultimodalOps {
     * r10 8×8-bit form measured QUADRATIC at the 10× probe (4.7 →
     * 237 s, ≈ n²·8/2⁸ candidates); the r11 8×16-bit form hit the same
     * wall at its predicted ~65k-distinct-hash crossover — the r15
-    * isolated triangle (`BENCH_r15_iso_phash.json`) read 2.5 → 11.6 →
-    * 131.5 CPU-s on 10×/30×/100× (×11.3 on ×3.33 data, ~500k distinct
-    * hashes at the top rung). 8×32-bit bands move the crossover past
+    * isolated triangle (`git show 8074e4b:BENCH_r15_iso_phash.json`)
+    * read 2.5 → 11.6 → 131.5 CPU-s on 10×/30×/100× (×11.3 on ×3.33
+    * data, ~500k distinct hashes at the top rung). 8×32-bit bands move the crossover past
     * ~10⁹ distinct payloads (PDQ ships 256-bit for exactly this
     * reason) at the price of one extra kernel pass width — the hash is
     * still one codegen call per row.

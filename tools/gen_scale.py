@@ -33,8 +33,8 @@ duplicate-dense regime the r13 fixture fix removed, as a STRESS corpus
 (copies i and i+26 are bit-identical; every rotated copy keeps its
 source's word shape, so shingle/minhash/phash cluster mass scales with
 K² per original doc while distinct content stays ~flat). The r13
-BENCH_sf3_dupdense stress ledger came from this regime by accident;
-the flag makes it reproducible on purpose. Marked in GEN_SCALE_FORMAT
+stress ledger `git show 8074e4b:BENCH_sf3_dupdense.json` came from this
+regime by accident; the flag makes it reproducible on purpose. Marked in GEN_SCALE_FORMAT
 as "2-dupdense" so a stress dir can never be mistaken for (or mixed
 with) a scaled-ladder dir.
 

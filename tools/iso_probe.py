@@ -21,14 +21,13 @@ Each probe = one fresh JVM running graft.Bench with:
 
 Per-sf output carries the full Bench ledger fields for the probed lines
 (wall runs, per-run task CPU, gc, sentinels) plus the capture-time git
-head/dirty so "ladder == HEAD" is checkable mechanically
-(tools/check_ledger_head.py).
+head/dirty, so the output names the code it measured.
 
 Usage:
   python3 tools/iso_probe.py --out /tmp/iso.json \
       --sfs /tmp/testdata_sf1,/tmp/testdata_sf3,/tmp/testdata_sf10 \
       --query dedup_containment --stages shingle_sets,shingle_index \
-      [--rounds 2] [--jvm-runs 1] [--cpus 32]
+      [--rounds 2] [--jvm-runs 1] [--cpus N] [--driver-mem 4g]
 
   --query   query name for SPARK_GRAFT_BENCH_ONLY (omit for stage-only)
   --stages  comma list for SPARK_GRAFT_BENCH_STAGES_ONLY, dependency
@@ -46,6 +45,10 @@ Usage:
             ~2,900 at 32 on identical data). Compare task_cpu at equal
             sf across the sweep; wall obviously drops with N -- CPU is
             the evidence. Usually paired with a single mid-size --sfs.
+  --cpus    local[N] size (default: this host's core count)
+  --driver-mem  -Xmx/-Xms of the probe JVM, pre-touched at start
+            (default: half of MemTotal, clamped to 2-8g, the rule the
+            test suite's SPARK_DRIVER_MEM uses)
 """
 import argparse
 import glob
@@ -94,6 +97,18 @@ def check_freshness():
 def git(args):
     return subprocess.run(["git"] + args, cwd=REPO, capture_output=True,
                           text=True).stdout.strip()
+
+
+def default_driver_mem():
+    """Half of MemTotal in whole GiB, clamped to 2-8g: the heap is
+    committed and touched up front, so it must fit the host."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "2g"
+    return f"{min(8, max(2, kb // 2097152))}g"
 
 
 def run_probe(sf_dir, query, stages, rounds, cpus, driver_mem):
@@ -155,11 +170,11 @@ def main():
     ap.add_argument("--stages", default=None)
     ap.add_argument("--rounds", type=int, default=2)
     ap.add_argument("--jvm-runs", type=int, default=1)
-    ap.add_argument("--cpus", default="32")
+    ap.add_argument("--cpus", default=str(os.cpu_count()))
     ap.add_argument("--cpus-sweep", default=None,
                     help="comma list of local[N] sizes; overrides --cpus "
                          "and nests per_sf results per level")
-    ap.add_argument("--driver-mem", default="24g")
+    ap.add_argument("--driver-mem", default=default_driver_mem())
     ap.add_argument("--note", default="",
                     help="free text; NAME THE CORPUS VARIANT (scaled vs "
                          "dup-dense) -- r15's phash packed-vs-isolated "
@@ -170,15 +185,14 @@ def main():
         sys.exit("iso_probe: need --query and/or --stages")
     check_freshness()
     head = git(["rev-parse", "HEAD"])
-    # dirty is scoped to the ENGINE paths, matching graft.Bench and
-    # tools/check_ledger_head.py: a probe writes its own artifact into
-    # the repo, so a whole-tree check marks every probe after the first
-    # in a session dirty on its predecessor's output (hit r16)
+    # dirty is scoped to the ENGINE paths, matching graft.Bench: a probe
+    # may write its own artifact into the repo, and a whole-tree check
+    # would mark every later probe dirty on its predecessor's output
     dirty = bool(git(["status", "--porcelain", "--",
                       "src/main", "build.sbt"]))
     if dirty:
         sys.stderr.write("iso_probe: WARNING working tree dirty -- "
-                         "output marked dirty, not sealable\n")
+                         "output marked dirty\n")
     sweep = ([c.strip() for c in args.cpus_sweep.split(",") if c.strip()]
              if args.cpus_sweep else None)
     result = {
