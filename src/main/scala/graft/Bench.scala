@@ -202,6 +202,10 @@ object Bench {
         run("git", "status", "--porcelain", "--", "src/main", "build.sbt").nonEmpty)
     } catch { case NonFatal(_) => ("unknown", true) }
 
+  /** The names in a comma-separated env filter; empty (no filter) if unset. */
+  private def nameFilter(env: String): Set[String] =
+    sys.env.get(env).fold(Set.empty[String])(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
   private val NoSentinels: JObject =
     ("cpu" -> -1) ~ ("alloc" -> -1) ~ ("spark" -> -1) ~ ("shuffle" -> -1)
 
@@ -222,6 +226,7 @@ object Bench {
     def secs(rs: Seq[(String, Double)]): JObject = JObject(rs.map { case (k, v) => k -> JDouble(v) }.toList)
     val ok = queries.collect { case (n, q) if q.ok => n -> q.min }
     val failed = queries.collect { case (n, q) if !q.ok => n -> q.min }
+    val failedNames = failed.map(_._1)
     val shared = secs(stages.map { case (n, s) => n -> s.min })
     val lead = ("metric" -> "total") ~ ("value" -> (ok.map(_._2).sum + stages.map(_._2.min).sum)) ~
       ("unit" -> "sec") ~ ("runs_per_query" -> rounds)
@@ -232,16 +237,16 @@ object Bench {
       ("sentinels" -> sentinelsJson) ~ ("cached_bytes_after_prewarm" -> cachedBytes) ~
       ("shared_stages" -> shared) ~
       ("shared_stages_detail" -> JObject(stages.map { case (n, s) => n -> record(s) }.toList)) ~
-      ("failed" -> failed.map(_._1)) ~ ("failed_secs" -> secs(failed)) ~
+      ("failed" -> failedNames) ~ ("failed_secs" -> secs(failed)) ~
       ("queries" -> JObject(queries.map { case (n, q) => n -> record(q) }.toList))
     val full = lead ~ ("queries" -> secs(ok)) ~ ("shared_stages" -> shared) ~
-      ("failed" -> failed.map(_._1)) ~ ("failed_secs" -> secs(failed)) ~ ("sf" -> sf)
+      ("failed" -> failedNames) ~ ("failed_secs" -> secs(failed)) ~ ("sf" -> sf)
     // the full line outgrows harnesses that keep only a short output tail
     // (2000 bytes; ~115 queries is ~4 KB, which truncates the headline
     // out of the record), so a compact, complete summary comes LAST: same
     // schema, "queries" limited to the slowest 20
     val summary = lead ~ ("n_queries" -> ok.size) ~ ("queries" -> secs(ok.sortBy(-_._2).take(20))) ~
-      ("shared_stages" -> shared) ~ ("failed" -> failed.map(_._1)) ~
+      ("shared_stages" -> shared) ~ ("failed" -> failedNames) ~
       ("sentinels" -> sentinelsJson) ~ ("host_cpus" -> hostCpus) ~ ("head" -> head) ~
       ("dirty" -> dirty) ~ ("ledger" -> ledgerPath) ~ ("sf" -> sf)
     (JsonMethods.compact(ledger), JsonMethods.compact(full), JsonMethods.compact(summary))
@@ -287,9 +292,7 @@ object Bench {
     // explicitly (e.g. "shingle_sets,ppjoin_pairs"): an unlisted
     // dependency is built lazily INSIDE the first consumer's timing and
     // bills there, the attribution noise the stage lines exist to prevent.
-    val stagesOnly = sys.env.get("SPARK_GRAFT_BENCH_STAGES_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
+    val stagesOnly = nameFilter("SPARK_GRAFT_BENCH_STAGES_ONLY")
     val stageRecords = Stages.list(spark, sfDir)
       .filter(st => stagesOnly.isEmpty || stagesOnly(st.name))
       .flatMap { st =>
@@ -333,9 +336,7 @@ object Bench {
     val cachedBytes = spark.sparkContext.getExecutorMemoryStatus.values
       .map { case (max, remaining) => max - remaining }.sum
     // SPARK_GRAFT_BENCH_ONLY="a,b,c" (dev loop) times just those queries
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
+    val only = nameFilter("SPARK_GRAFT_BENCH_ONLY")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
     val midIdx = selected.size / 2
