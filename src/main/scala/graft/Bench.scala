@@ -3,6 +3,7 @@ package graft
 import scala.util.control.NonFatal
 
 import graft.stages.Stages
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
@@ -63,18 +64,21 @@ object Bench {
     * (keys are the snake_case field names, `twin_of` only when set).
     * `min` is the best successful run, or the best run if all failed;
     * `run_task_cpu_ms` pairs each wall run with its own task CPU, since
-    * the aggregate `task_cpu_ms` also sums a cold or stalled run. */
+    * the aggregate `task_cpu_ms` also sums a cold or stalled run, and
+    * `run_codegen_compiles` with the classes Spark compiled during it. */
   private[graft] final case class QueryRecord(runs: Seq[Double], min: Double,
     ok: Boolean, t0: Double, gcMs: Long, peakMemBytes: Long, taskRunMs: Long,
-    taskCpuMs: Long, taskGcMs: Long, runTaskCpuMs: Seq[Long], retried: Boolean,
-    twinOf: Option[String])
+    taskCpuMs: Long, taskGcMs: Long, runTaskCpuMs: Seq[Long],
+    runCodegenCompiles: Seq[Long], retried: Boolean, twinOf: Option[String])
 
   /** One shared-stage build, field for field its
     * `shared_stages_detail.<name>` ledger line. A failed build's `runs`
-    * entry is -1.0; cpu/gc belong to the run `min` reports. */
+    * entry is -1.0; cpu/gc belong to the run `min` reports.
+    * `run_codegen_compiles` pairs each build with the classes Spark
+    * compiled during it (-1 for a failed build). */
   private[graft] final case class StageRecord(runs: Seq[Double], min: Double,
-    taskCpuMs: Long, taskGcMs: Long, gcMs: Long, retried: Boolean,
-    twinOf: Option[String])
+    taskCpuMs: Long, taskGcMs: Long, gcMs: Long, runCodegenCompiles: Seq[Long],
+    retried: Boolean, twinOf: Option[String])
 
   /** Seconds taken by the four sentinel workloads at one point of a run. */
   private[graft] final case class Sentinels(cpu: Double, alloc: Double,
@@ -140,6 +144,9 @@ object Bench {
   private def sentinels(spark: SparkSession): Sentinels =
     Sentinels(sentinelCpu(), sentinelAlloc(), sentinelSpark(spark),
       sentinelShuffle(spark))
+
+  /** Classes Spark's code generator has compiled in this JVM so far. */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
@@ -301,12 +308,14 @@ object Bench {
         def buildOnce(): Option[StageRecord] = {
           memListener.reset()
           val gc0 = gcMillis()
+          val compiles0 = compiles()
           val t0 = System.nanoTime()
           try {
             st.build().count()
             val sec = (System.nanoTime() - t0) / 1e9
             Some(StageRecord(Seq(sec), sec, memListener.cpuNs.get() / 1000000L,
-              memListener.gcMs.get(), gcMillis() - gc0, retried = false, st.twinOf))
+              memListener.gcMs.get(), gcMillis() - gc0, Seq(compiles() - compiles0),
+              retried = false, st.twinOf))
           } catch {
             case NonFatal(e) =>
               System.err.println(s"[bench] shared stage ${st.name} failed: ${e.getMessage}")
@@ -329,7 +338,9 @@ object Bench {
         // falls back to the first (cached) build's time and the next
         // accessor call repopulates the evicted cache lazily
         runs.flatten.minByOption(_.min).map(best =>
-          st.name -> best.copy(runs = runs.map(_.fold(-1.0)(_.min)), retried = retried))
+          st.name -> best.copy(runs = runs.map(_.fold(-1.0)(_.min)),
+            runCodegenCompiles = runs.map(_.fold(-1L)(_.runCodegenCompiles.head)),
+            retried = retried))
       }
     // block-manager snapshot right after prewarm: how much storage the
     // stage builds pinned, next to the first queries they may slow down
@@ -347,10 +358,12 @@ object Bench {
       val gc0 = gcMillis()
       memListener.reset()
       val runCpu = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val runCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
       // a noop-format write executes the FULL plan (final sorts and
       // projections included); a count() would let Catalyst prune them
       def runOnce(): (Double, Boolean) = {
         val cpu0 = memListener.cpuNs.get()
+        val compiles0 = compiles()
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -360,6 +373,7 @@ object Bench {
         // per-run split stays attributable (same caveat as peak_mem)
         Thread.sleep(30)
         runCpu += (memListener.cpuNs.get() - cpu0) / 1000000L
+        runCompiles += compiles() - compiles0
         (sec, ok)
       }
       var runs = (1 to Rounds).map(_ => runOnce())
@@ -381,7 +395,7 @@ object Bench {
         minGood(runs).isDefined, math.rint(t0Off * 1000) / 1000, gcMillis() - gc0,
         memListener.peak.get(), memListener.runMs.get(),
         memListener.cpuNs.get() / 1000000L, memListener.gcMs.get(), runCpu.toSeq,
-        retried, SparkEntry.twinOf.get(name))
+        runCompiles.toSeq, retried, SparkEntry.twinOf.get(name))
     }
     val sentEnd = sentinels(spark)
     // the FULL ledger goes to a file, because a driver capture keeps only

@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * per-caller values; a query that needs its own confs takes a
   * [[derived]] session. Every session either method returns carries
   * graft's SQL functions, planner strategy and optimizer rule
-  * ([[GraftOps.ensureInjected]]) from the start. */
+  * ([[GraftOps.ensureInjected]]) from the start, and the first of them in
+  * a JVM sizes Spark's generated-class cache, which every later session
+  * shares ([[GraftOps.CodegenCacheEntries]]); no conf here sets it. */
 object GraftSession {
   def local(master: String, shufflePartitions: Int): SparkSession = {
     val spark = SparkSession.builder()

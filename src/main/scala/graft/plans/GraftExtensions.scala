@@ -4,7 +4,9 @@ import graft.functions._
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Public entry points for the custom Catalyst pieces. */
@@ -49,13 +51,47 @@ object GraftOps {
     ("graft_winnow_positions", e =>
       WinnowPositions(e(0), intLiteral("graft_winnow_positions", "w", e(1)))))
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, 100 by default) that
+    * [[ensureInjected]] sizes once per JVM: the next power of two above
+    * the 3,230 classes a full `graft.Bench` run over sf0.01 at `local[4]`
+    * compiles under a cache that evicts nothing (warmup 8, stage builds
+    * 494, the first runs of the 250 queries 2,728). Under the default 100
+    * a query's classes were evicted before its next run, and every later
+    * run compiled them again. A later run may still compile a class that
+    * differs from a cached one only in its name: adaptive execution
+    * numbers whole-stage codegen stages in the order their query stages
+    * are planned, which can change from run to run, and the stage id is
+    * part of the generated class name (17–19 queries, 112–138 classes in
+    * the second runs of a full `graft.Bench` run at sf0.01). */
+  val CodegenCacheEntries = 4096
+
+  private var codegenSized = false
+
   /** Idempotently wire the graft strategy, optimizer rule and
     * [[functions]] into an already-built session, through
     * `spark.experimental` and the session's function registry. Neither is
     * copied by `newSession()`, so `GraftSession.local` and
     * `GraftSession.derived` call this on every session they return; call
-    * it yourself only on a session graft did not build. */
+    * it yourself only on a session graft did not build.
+    *
+    * The first call in a JVM also sizes Spark's generated-class cache to
+    * [[CodegenCacheEntries]], or to the session's own
+    * `spark.sql.codegen.cache.maxEntries` when it sets one. That conf is
+    * static: `CodeGenerator` reads it once, through `SQLConf.get`, when it
+    * is first used, so this call initializes `CodeGenerator` under a conf
+    * carrying the size. If the JVM generated code before graft's first
+    * session (a query on a session graft did not build and never passed
+    * here), the cache already has its size and the call changes nothing. */
   def ensureInjected(spark: SparkSession): Unit = synchronized {
+    if (!codegenSized) {
+      codegenSized = true
+      val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+      val conf = new SQLConf
+      conf.setConfString(key,
+        spark.sessionState.conf.getConfString(key, CodegenCacheEntries.toString))
+      SQLConf.withExistingConf(conf)(CodeGenerator.compileTime)
+    }
     val em = spark.experimental
     if (!em.extraStrategies.contains(AsOfJoinStrategy))
       em.extraStrategies = em.extraStrategies :+ AsOfJoinStrategy

@@ -14,7 +14,8 @@ class BenchSpec extends AnyFunSuite {
   private def query(min: Double, ok: Boolean = true, twinOf: Option[String] = None) =
     QueryRecord(Seq(min + 0.5, min), min, ok, t0 = 1.25, gcMs = 3,
       peakMemBytes = 4096, taskRunMs = 20, taskCpuMs = 15, taskGcMs = 1,
-      runTaskCpuMs = Seq(8, 7), retried = false, twinOf = twinOf)
+      runTaskCpuMs = Seq(8, 7), runCodegenCompiles = Seq(12, 0), retried = false,
+      twinOf = twinOf)
 
   // 22 successes q01..q22 (min 0.25·i), one failure between them, q05 a
   // twin of q04; the second stage was retried and is a twin of the first
@@ -24,9 +25,10 @@ class BenchSpec extends AnyFunSuite {
       (11 to 22).map(i => f"q$i%02d" -> query(0.25 * i))
   private val stages = Seq(
     "s_base" -> StageRecord(Seq(1.5), 1.5, taskCpuMs = 100, taskGcMs = 5,
-      gcMs = 7, retried = false, twinOf = None),
+      gcMs = 7, runCodegenCompiles = Seq(40), retried = false, twinOf = None),
     "s_twin" -> StageRecord(Seq(9.0, 2.0), 2.0, taskCpuMs = 300, taskGcMs = 10,
-      gcMs = 12, retried = true, twinOf = Some("s_base")))
+      gcMs = 12, runCodegenCompiles = Seq(40, 3), retried = true,
+      twinOf = Some("s_base")))
 
   private val (ledger, full, summary) = Bench.render(rounds = 2,
     sf = "/data/sf0.1", cpus = 4, hostCpus = 8, head = "abc123", dirty = false,
@@ -73,9 +75,10 @@ class BenchSpec extends AnyFunSuite {
       "failed", "failed_secs", "queries"))
     assert(keys(doc \ "queries" \ "q05") == List("runs", "min", "ok", "t0",
       "gc_ms", "peak_mem_bytes", "task_run_ms", "task_cpu_ms", "task_gc_ms",
-      "run_task_cpu_ms", "retried", "twin_of"))
+      "run_task_cpu_ms", "run_codegen_compiles", "retried", "twin_of"))
     assert(keys(doc \ "shared_stages_detail" \ "s_twin") == List("runs", "min",
-      "task_cpu_ms", "task_gc_ms", "gc_ms", "retried", "twin_of"))
+      "task_cpu_ms", "task_gc_ms", "gc_ms", "run_codegen_compiles", "retried",
+      "twin_of"))
     // the ledger's queries hold every timed query, the failure included
     assert(keys(doc \ "queries").size == 23)
     assert(doc \ "queries" \ "q_fail" \ "ok" == JBool(false))

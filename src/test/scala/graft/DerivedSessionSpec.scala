@@ -11,6 +11,7 @@ import graft.streaming.{CheckpointFiles, StreamingOps}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.Forks
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{ForeachWriter, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -31,8 +32,9 @@ object LoaderProbe {
 
 /** The two fixed confs of [[GraftSession.derived]], each pinned by the
   * mechanism it exists for: one task class loader across clones, and
-  * checkpoint files written without a forked `chmod`; and the extensions
-  * every derived session carries from birth. */
+  * checkpoint files written without a forked `chmod`; the extensions
+  * every derived session carries from birth; and the generated-class
+  * cache every session graft builds shares. */
 class DerivedSessionSpec extends SparkTestBase {
 
   test("successive streaming queries on derived sessions share one task class loader") {
@@ -107,6 +109,31 @@ class DerivedSessionSpec extends SparkTestBase {
     val foreign = spark.newSession()
     GraftOps.ensureInjected(foreign)
     assertInjected(GraftSession.derived(foreign), "derived of a foreign session")
+  }
+
+  test("a second round of queries that outgrow Spark's default codegen cache compiles nothing") {
+    // the timed `curation` sample, with `curation_pareto_front` in place
+    // of `curation_funnel_report` (a later run of that one may compile a
+    // class again under a new codegen stage id, see
+    // GraftOps.CodegenCacheEntries): about 130 classes a round, more than
+    // Spark's default 100-entry cache holds, so every round recompiled
+    // all of them
+    val names = Seq("curation_epoch_plan", "curation_pareto_front", "dedup_simhash",
+      "embedding_pca_project", "quality_benford_totalprice", "quality_referential_check",
+      "similarity_ann_lsh", "text_winnowing_fingerprint")
+    // classes compiled by each query, the ones that compiled any
+    def compiled(s: SparkSession, queries: Seq[String]): Map[String, Long] = queries.map { n =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SparkEntry.queries(n)(s, sfDir).write.format("noop").mode("overwrite").save()
+      n -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }.filter(_._2 > 0).toMap
+    compiled(spark, names)
+    assert(compiled(spark, names).isEmpty, "the second round on the root recompiled")
+    // the root's tasks run under its own artifact class loader, every
+    // clone's under the one they share (the first test), so the first
+    // clone compiles its task-side classes once and the next reuses them
+    compiled(GraftSession.derived(spark), names)
+    assert(compiled(GraftSession.derived(spark), names).isEmpty, "a second derived session recompiled")
   }
 
   test("a streaming query on a derived session forks no chmod") {
